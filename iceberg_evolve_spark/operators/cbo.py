@@ -200,16 +200,7 @@ def table_bytes(table, version: int | None = None) -> int:
     ``os.path.getsize`` per file — the number the broadcast guard needs,
     exact rather than estimated)."""
     entry = table._resolve(version, None)
-    ddir = os.path.join(table.path, entry["data_dir"])
-    if entry.get("manifests"):
-        files = table._entry_abs_files(entry)
-    else:
-        from iceberg_evolve_spark.sources.snapshots import _walk_rel_parquet
-
-        files = [
-            os.path.join(ddir, rel) for rel in _walk_rel_parquet(ddir)
-        ]
-    return sum(os.path.getsize(f) for f in files)
+    return sum(os.path.getsize(f) for f in table._entry_abs_files(entry))
 
 
 def planned_table_join(

@@ -52,6 +52,11 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 
+from iceberg_evolve_spark.sources.snapshots import (
+    SnapshotTable,
+    delete_stack_keys,
+)
+
 #: Arrow → Spark DDL for scalar leaf types; nested types (list / struct /
 #: map) recurse through :func:`_arrow_ddl`, so the tail source covers every
 #: table the batch reader does.
@@ -102,10 +107,11 @@ def _table_ddl(table_path: str) -> str:
     parquet footer (KB-scale driver read)."""
     import pyarrow.parquet as pq
 
-    entries = _log(table_path)
+    table = SnapshotTable(table_path)
+    entries = table.versions()
     if not entries:
         raise FileNotFoundError(f"no snapshots at {table_path}")
-    files = _entry_files(table_path, entries[-1])
+    files = table._entry_abs_files(entries[-1])
     if not files:
         raise FileNotFoundError(f"snapshot has no data files: {table_path}")
     schema = pq.ParquetFile(files[0]).schema_arrow
@@ -117,37 +123,6 @@ def _table_ddl(table_path: str) -> str:
             raise ValueError(f"column {field.name!r}: {exc}") from None
         cols.append(f"{field.name} {ddl}")
     return ", ".join(cols)
-
-
-def _log(table_path: str) -> list[dict]:
-    """The table's snapshot log: checkpoint + atomically-linked commit-file
-    tail — the same assembly as ``SnapshotTable.versions()`` (round 12's
-    lock-free commit plane), inlined here so the streaming source stays a
-    self-contained driver-side reader."""
-    try:
-        with open(os.path.join(table_path, "_snapshots.json")) as fh:
-            entries = json.load(fh)
-    except FileNotFoundError:
-        entries = []
-    v = (int(entries[-1]["version"]) if entries else 0) + 1
-    while True:
-        try:
-            with open(
-                os.path.join(table_path, f"c{v:05d}.commit.json")
-            ) as fh:
-                entries.append(json.load(fh))
-        except FileNotFoundError:
-            return entries
-        v += 1
-
-
-def _entry_files(table_path: str, entry: dict) -> list[str]:
-    dd = os.path.join(table_path, entry["data_dir"])
-    out = []
-    for mname in entry.get("manifests", []):
-        with open(os.path.join(table_path, mname)) as fh:
-            out.extend(os.path.join(dd, rel) for rel in json.load(fh)["files"])
-    return out
 
 
 def _manifest_files(table_path: str, entry: dict, mnames) -> list[tuple]:
@@ -164,15 +139,6 @@ def _manifest_files(table_path: str, entry: dict, mnames) -> list[tuple]:
                 for rel in json.load(fh)["files"]
             )
     return out
-
-
-def _delete_keys(entry: dict) -> set:
-    """Structural identity of an entry's delete stack — the shared
-    canonicalization from :mod:`.snapshots` (see ``delete_stack_keys``
-    there for why counting is not enough)."""
-    from iceberg_evolve_spark.sources.snapshots import delete_stack_keys
-
-    return delete_stack_keys(entry)
 
 
 def _added_files(
@@ -201,7 +167,7 @@ def _added_files(
     for a from-zero consumer (``start_v == 0``) at the oldest retained
     snapshot; a checkpointed offset that is no longer in the log raises
     instead of silently re-delivering rows the consumer already has."""
-    entries = _log(table_path)
+    entries = SnapshotTable(table_path).versions()
     by_v = {e["version"]: e for e in entries}
     if not by_v:
         return []
@@ -218,7 +184,7 @@ def _added_files(
         if v <= start_v or v > end_v:
             continue
         e = by_v[v]
-        cur = set(e.get("manifests", []))
+        cur = set(e["manifests"])
         if prev is None:
             if v != first_v or start_v != 0:
                 # a gap below v with a non-zero checkpoint would re-emit
@@ -245,13 +211,13 @@ def _added_files(
             out.extend(_manifest_files(table_path, e, cur))
             prev = e
             continue
-        prev_m = set(prev.get("manifests", []))
+        prev_m = set(prev["manifests"])
         is_append = (
             prev_m <= cur
             and e.get("rollback_of") is None
             and not e.get("rewrite")
             and not e.get("delete_rewrite")
-            and _delete_keys(e) == _delete_keys(prev)
+            and delete_stack_keys(e) == delete_stack_keys(prev)
         )
         if is_append:
             out.extend(_manifest_files(table_path, e, cur - prev_m))
@@ -334,7 +300,7 @@ class SnapshotStreamReader(DataSourceStreamReader):
         self.on_schema_change = options.get("on_schema_change", "fail")
         self.start_version = int(options.get("start_version", 0))
         self._schema = schema
-        entries = _log(self.table_path)
+        entries = SnapshotTable(self.table_path).versions()
         head = entries[-1] if entries else {}
         # pinned at construction; partitions stamped with a different id
         # are drifted generations (self is pickled to executors, so the
@@ -346,7 +312,7 @@ class SnapshotStreamReader(DataSourceStreamReader):
         return {"version": self.start_version}
 
     def latestOffset(self) -> dict:
-        entries = _log(self.table_path)
+        entries = SnapshotTable(self.table_path).versions()
         return {"version": entries[-1]["version"] if entries else 0}
 
     def partitions(self, start: dict, end: dict) -> list[InputPartition]:
@@ -370,7 +336,7 @@ class SnapshotStreamReader(DataSourceStreamReader):
                 gen_json = self._schemas.get(str(sid))
                 if gen_json is None:
                     if live is None:
-                        entries = _log(self.table_path)
+                        entries = SnapshotTable(self.table_path).versions()
                         live = (
                             entries[-1].get("schemas", {}) if entries else {}
                         )
@@ -459,7 +425,7 @@ class SnapshotStreamDataSource(DataSource):
         # so a footer sample would be wrong); untracked tables keep the
         # one-footer derivation. All fields nullable: old generations
         # fill added columns with defaults/NULL.
-        entries = _log(self.options["path"])
+        entries = SnapshotTable(self.options["path"]).versions()
         if entries and "schema_id" in entries[-1]:
             from pyspark.sql import types as T
 

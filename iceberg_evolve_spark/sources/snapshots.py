@@ -4,7 +4,7 @@ time travel, logical rollback) implemented on a directory, so the concepts the
 schema-evolution engine targets (reference: iceberg-evolve operates on Iceberg
 tables' snapshot metadata) are runnable here without a table-format jar.
 
-Layout (manifest format 2 — round 10; commit-file log plane — round 12)::
+Layout (manifest lists — round 10; commit-file log plane — round 12)::
 
     table_dir/
       v00001/           # lineage data dir: base files + appended s{seq}-*
@@ -38,17 +38,17 @@ Disciplines (the same ones real table formats automate):
   never O(table files). Readers assemble a snapshot's file list from its
   manifests and scan exactly those files, so uncommitted files in the dir
   (crash orphans) are invisible — Iceberg's shared ``data/`` prefix model.
-  (Format 1 — one hard-link forest per append — paid O(table files) links
-  per commit; VERDICT r9 "What's wrong" 1. Legacy entries without a
-  ``manifests`` key still read via directory walk.)
-* **The snapshot log is the commit point.** Data files land first (stage
-  write + per-file atomic rename), then the manifest file (atomic replace),
-  and only then does ``_snapshots.json`` gain the entry — installed
-  atomically via write-temp + ``os.replace``. A crash at any step leaves
-  either the old log (new files are unreferenced orphans, reclaimed by
-  retention's sweep) or the new one (commit complete). No torn state is
-  observable. Single-writer protocol: concurrent committers need an external
-  lock, as with table formats lacking a catalog's compare-and-swap.
+* **The commit file is the commit point.** Data files land first (stage
+  write + per-file atomic rename), then the manifest file (atomic link),
+  and only then is the entry published as ``c{version}.commit.json`` by
+  the ``os.link`` compare-and-swap above. A crash at any step leaves either
+  no commit file (new files are unreferenced orphans, reclaimed by
+  retention's sweep) or a complete one (commit done); a writer that loses
+  the link race rebuilds against the fresh log, so concurrent committers
+  need no lock. Retention folds the tail into the ``_snapshots.json``
+  checkpoint (write-temp + ``os.replace``) and only then sweeps the commit
+  files it covers — a crash in between leaves inert duplicates the tail
+  read ignores. No torn state is observable.
 * **Rollback is logical.** Rolling back appends a new entry pointing at the
   old version's manifest list (stamped ``rollback_of`` so changelog scans
   can refuse ambiguous ranges) — history is preserved and the rollback is
@@ -91,9 +91,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 MANIFEST = "_snapshots.json"
 
-#: sentinel: `_commit(entries)` without a CAS check (legacy full replace)
-_UNCHECKED = object()
-
 
 class CommitConflict(RuntimeError):
     """Another writer advanced the snapshot log under this commit and the
@@ -115,11 +112,6 @@ def delete_stack_keys(entry: dict) -> "set[str]":
     REPLACES the prior dv entry ([dv] -> [dv'], same length, manifests
     unchanged), which a length compare misclassifies as a plain append."""
     return {json.dumps(d, sort_keys=True) for d in entry.get("deletes", [])}
-
-#: Manifest format stamped on new snapshot entries. Format 2 = manifest file
-#: lists (this module's current write path); entries without the stamp (and
-#: without a ``manifests`` key) are format 1 and read via directory walk.
-SNAPSHOT_FORMAT = 2
 
 #: Delete files at/below this on-disk size are force-broadcast in the
 #: merge-on-read anti-joins (KB-scale CDC deletes: keeps the scan a single
@@ -295,8 +287,7 @@ class SnapshotTable:
 
     def versions(self) -> list[dict]:
         """Ordered snapshot entries: ``{version, data_dir, manifests, ts,
-        note, ...}`` (format-1 entries lack ``manifests``). Assembled from
-        the checkpoint plus the contiguous commit-file tail above its head
+        note, ...}``. Assembled from the checkpoint plus the contiguous commit-file tail above its head
         (see module docstring) — O(tail) KB-scale JSON reads; retention
         folds the tail back into the checkpoint."""
         entries = self._checkpoint_entries()
@@ -339,27 +330,13 @@ class SnapshotTable:
                 pass
             raise _LinkRaced(f"checkpoint advanced past v{v}")
 
-    def _commit(self, entries: list[dict], expected_head=_UNCHECKED) -> None:
-        """Install ``entries`` as the snapshot log. With ``expected_head``
-        (the head version the caller read before building its change; 0 =
-        empty log) this is a COMPARE-AND-SWAP append: every entry past the
-        expected head is published as an atomically-linked commit file, so
-        a concurrent writer makes the first link fail and
-        :class:`CommitConflict` is raised — nothing committed is ever
-        replaced. Unchecked callers (deliberate history REWRITES: tests
-        forcing a log shape, crash simulations) force-replace the
-        checkpoint and clear this scope's commit tail — explicitly
-        single-writer, as before."""
-        if expected_head is _UNCHECKED:
-            cre = self._commit_file_re()
-            for name in os.listdir(self.path):
-                if cre.fullmatch(name):
-                    os.unlink(os.path.join(self.path, name))
-            tmp = self._manifest_path() + ".tmp"
-            with open(tmp, "w") as fh:
-                json.dump(entries, fh, indent=1)
-            os.replace(tmp, self._manifest_path())  # atomic on POSIX
-            return
+    def _commit(self, entries: list[dict], expected_head: int) -> None:
+        """COMPARE-AND-SWAP append of ``entries`` to the snapshot log.
+        ``expected_head`` is the head version the caller read before
+        building its change (0 = empty log); every entry past it is
+        published as an atomically-linked commit file, so a concurrent
+        writer makes the first link fail and :class:`CommitConflict` is
+        raised — nothing committed is ever replaced."""
         cur = self.versions()
         head = cur[-1]["version"] if cur else 0
         if head != expected_head:
@@ -446,8 +423,8 @@ class SnapshotTable:
         head = fresh[-1]
         if head["version"] == cur["version"]:
             return head  # fast path: nothing moved
-        cm = set(cur.get("manifests") or [])
-        hm = set(head.get("manifests") or [])
+        cm = set(cur["manifests"])
+        hm = set(head["manifests"])
         conflicting = any(
             e.get("rollback_of") is not None
             or e.get("rewrite")
@@ -504,7 +481,7 @@ class SnapshotTable:
         return name
 
     def _entry_files(self, entry: dict) -> list[str]:
-        """Data files of a format-2 snapshot (relative to its lineage dir),
+        """Data files of a snapshot (relative to its lineage dir),
         assembled from its manifest list — O(#manifests + #files) metadata
         reads, never a directory walk of shared storage."""
         out: list[str] = []
@@ -516,20 +493,6 @@ class SnapshotTable:
     def _entry_abs_files(self, entry: dict) -> list[str]:
         dd = os.path.join(self.path, entry["data_dir"])
         return [os.path.join(dd, rel) for rel in self._entry_files(entry)]
-
-    def _synth_base_manifest(self, entry: dict) -> str:
-        """One-time upgrade of a format-1 snapshot the next commit builds on:
-        list its data dir into a manifest file (``-base`` suffix). The legacy
-        entry itself is untouched; only the NEW entry references the synth."""
-        dd = os.path.join(self.path, entry["data_dir"])
-        return self._write_manifest_file(
-            entry["version"], _walk_rel_parquet(dd), suffix="-base"
-        )
-
-    def _manifests_of(self, entry: dict) -> list[str]:
-        """Manifest list of ``entry``, synthesizing one for format-1."""
-        got = entry.get("manifests")
-        return list(got) if got else [self._synth_base_manifest(entry)]
 
     # -- per-snapshot schema tracking (round 12) ------------------------------
     #
@@ -562,7 +525,7 @@ class SnapshotTable:
         entry["schema_id"] = sid
         entry["schemas"] = dict(src["schemas"])
         entry["manifest_schemas"] = {
-            m: known.get(m, sid) for m in entry.get("manifests", [])
+            m: known.get(m, sid) for m in entry["manifests"]
         }
         return entry
 
@@ -859,7 +822,6 @@ class SnapshotTable:
             entry = {
                 "version": head["version"] + 1,
                 "data_dir": head["data_dir"],
-                "fmt": SNAPSHOT_FORMAT,
                 "manifests": list(head["manifests"]),
                 "base_seq": head.get("base_seq", head["version"]),
                 "ts": time.time() if ts is None else ts,
@@ -975,7 +937,6 @@ class SnapshotTable:
         new_entry = {
                 "version": version,
                 "data_dir": data_dir,
-                "fmt": SNAPSHOT_FORMAT,
                 "manifests": [mname],
                 # data files written here carry no per-file sequence marker;
                 # they are the lineage BASE and inherit this sequence number
@@ -1009,9 +970,8 @@ class SnapshotTable:
             new_entry["schema_id"] = 0
             new_entry["schemas"] = {"0": schema_to_json(schema.struct, 0)}
             new_entry["manifest_schemas"] = {mname: 0}
-        # CAS publish: a concurrent writer advancing the log raises instead
-        # of the legacy last-write-wins replace (write() replaces the table
-        # CONTENT, but never someone else's commit)
+        # CAS publish: a concurrent writer advancing the log raises (write()
+        # replaces the table CONTENT, but never someone else's commit)
         self._commit(
             entries + [new_entry],
             expected_head=entries[-1]["version"] if entries else 0,
@@ -1053,7 +1013,7 @@ class SnapshotTable:
         """Move a staged parquet write's part files into the lineage dir,
         name-stamped with ``prefix`` (the data-sequence marker), preserving
         key=value subdirs. Per-file ``os.rename`` is atomic; the files stay
-        invisible until the snapshot-log commit because format-2 reads are
+        invisible until the snapshot-log commit because reads are
         manifest-list-based. Returns the files' lineage-relative paths."""
         import shutil
 
@@ -1096,8 +1056,7 @@ class SnapshotTable:
         The new files land inside the lineage's existing data dir (same
         key=value layout) and ONE new manifest file lists them; the new
         snapshot entry's manifest list is the previous entry's plus that one
-        — the Iceberg manifest-list discipline, replacing round 9's
-        hard-link forest which paid O(table files) links per commit.
+        — the Iceberg manifest-list discipline, O(new files) per commit.
         Carried delete files stay attached and still apply to the files they
         were committed against (positions are stable: pre-existing files are
         not touched at all)."""
@@ -1151,14 +1110,11 @@ class SnapshotTable:
                     dest, stamped["rels"], stamped["v"], new_version
                 )
                 stamped["v"] = new_version
-            rels = stamped["rels"]
-            manifests = self._manifests_of(head)
-            mname = self._write_manifest_file(new_version, rels)
+            mname = self._write_manifest_file(new_version, stamped["rels"])
             new_entry = {
                 "version": new_version,
                 "data_dir": head["data_dir"],
-                "fmt": SNAPSHOT_FORMAT,
-                "manifests": manifests + [mname],
+                "manifests": head["manifests"] + [mname],
                 "base_seq": head.get("base_seq", head["version"]),
                 # marks the lineage as multi-sequence: readers must compare
                 # per-file sequence numbers against delete sequences
@@ -1192,14 +1148,12 @@ class SnapshotTable:
         new_entry = {
             "version": new_version,
             "data_dir": target["data_dir"],
+            "manifests": list(target["manifests"]),
             "base_seq": target.get("base_seq", target["version"]),
             "rollback_of": int(version),
             "ts": time.time() if ts is None else ts,
             "note": note or f"rollback to v{version}",
         }
-        if target.get("manifests"):
-            new_entry["fmt"] = SNAPSHOT_FORMAT
-            new_entry["manifests"] = list(target["manifests"])
         if target.get("has_appends"):
             new_entry["has_appends"] = True
         if target.get("partition_by"):
@@ -1335,6 +1289,7 @@ class SnapshotTable:
             new_entry = {
                 "version": new_version,
                 "data_dir": head["data_dir"],
+                "manifests": list(head["manifests"]),
                 "base_seq": head.get("base_seq", head["version"]),
                 **({"has_appends": True} if head.get("has_appends") else {}),
                 **({"partition_by": list(head["partition_by"])} if head.get("partition_by") else {}),
@@ -1343,9 +1298,6 @@ class SnapshotTable:
                 "ts": time.time() if ts is None else ts,
                 "note": note,
             }
-            if head.get("manifests"):
-                new_entry["fmt"] = SNAPSHOT_FORMAT
-                new_entry["manifests"] = list(head["manifests"])
             return self._carry_schema(new_entry, head)
 
         return self._commit_build(_build)
@@ -1657,6 +1609,7 @@ class SnapshotTable:
         new_entry = {
             "version": version,
             "data_dir": cur["data_dir"],
+            "manifests": list(cur["manifests"]),
             "base_seq": cur.get("base_seq", cur["version"]),
             **({"has_appends": True} if cur.get("has_appends") else {}),
             **(
@@ -1671,9 +1624,6 @@ class SnapshotTable:
             "note": note
             or f"rewrite_delete_files: {len(deletes)} delete files -> 1 vector",
         }
-        if cur.get("manifests"):
-            new_entry["fmt"] = SNAPSHOT_FORMAT
-            new_entry["manifests"] = list(cur["manifests"])
         self._carry_schema(new_entry, cur)
         # folds replace the delete stack: never compose — CAS raises if a
         # writer advanced the log since the stack was read
@@ -1719,13 +1669,13 @@ class SnapshotTable:
         files are broadcast (size-guarded by ``BROADCAST_DELETE_MAX_BYTES``);
         past the guard the strategy is left to AQE so a mass delete cannot
         force an oversized broadcast. ``files`` narrows the scan to a pruned
-        file subset (scan planning); without it, format-2 snapshots scan
-        exactly their manifest-listed files (crash orphans in the shared
-        lineage dir are invisible) and format-1 snapshots scan the dir."""
+        file subset (scan planning); without it the scan reads exactly the
+        manifest-listed files (crash orphans in the shared lineage dir are
+        invisible)."""
         from pyspark.sql import functions as F
 
         data_dir = os.path.join(self.path, entry["data_dir"])
-        if files is None and entry.get("manifests"):
+        if files is None:
             files = self._entry_abs_files(entry)
 
         def _with_meta(sdf: DataFrame) -> DataFrame:
@@ -1752,9 +1702,7 @@ class SnapshotTable:
                 F.col("_metadata.row_index").alias("_pos"),
             )
 
-        rel_sids = (
-            self._rel_schema_map(entry) if files is not None else None
-        )
+        rel_sids = self._rel_schema_map(entry)
         if rel_sids is not None:
             # schema-tracked multi-generation lineage: scan and project
             # each generation to the entry's current schema by field id —
@@ -1762,14 +1710,12 @@ class SnapshotTable:
             df = self._union_generations(
                 spark, entry, files, data_dir, rel_sids, _with_meta
             )
-        elif files is not None:
+        else:
             # basePath keeps key=value partition columns discoverable when
             # scanning an explicit FILE LIST instead of the whole dir
             df = _with_meta(
                 spark.read.option("basePath", data_dir).parquet(*files)
             )
-        else:
-            df = _with_meta(spark.read.parquet(data_dir))
         # data sequence number per file: appended files carry it in their
         # s{seq}- name prefix; base files inherit the lineage base sequence.
         # Append-free lineages (the common case) skip the per-row regexp —
@@ -2001,8 +1947,7 @@ class SnapshotTable:
             )
         if scope != "deletes":
             raise ValueError(f"unknown scope {scope!r} (deletes|all)")
-        manifests = self._manifests_of(cur)
-        rel_files = self._entry_files({**cur, "manifests": manifests})
+        rel_files = self._entry_files(cur)
         data_dir = os.path.join(self.path, cur["data_dir"])
         base_seq = int(cur.get("base_seq", cur["version"]))
         affected: set[str] = set()
@@ -2081,7 +2026,6 @@ class SnapshotTable:
         new_entry = {
             "version": version,
             "data_dir": cur["data_dir"],
-            "fmt": SNAPSHOT_FORMAT,
             "manifests": new_manifests,
             "base_seq": base_seq,
             "rewrite": True,
@@ -2141,10 +2085,7 @@ class SnapshotTable:
             return None
         cur = entries[-1]
         n_deletes = len(cur.get("deletes", ()))
-        if cur.get("manifests"):
-            n_commits = len(cur["manifests"])
-        else:
-            n_commits = cur["version"] - cur.get("base_seq", cur["version"])
+        n_commits = len(cur["manifests"])
         if n_deletes < max_delete_files and n_commits < max_commits:
             return None
         if delete_mode == "vector" and n_commits < max_commits:
@@ -2263,9 +2204,8 @@ class SnapshotTable:
         the fork point; both logs reference the SAME immutable data files,
         so the branch costs one JSON file, not a data copy. Divergent
         version numbers cannot collide on storage — data files are
-        UUID-named and every format-2 read is manifest-scoped (branching
-        therefore requires a format-2 head). ``write()`` (new lineage) is
-        not allowed on a branch."""
+        UUID-named and every read is manifest-scoped. ``write()`` (new
+        lineage) is not allowed on a branch."""
         if self.branch:
             raise ValueError("create branches from the main handle")
         if name == "main" or not self._BRANCH_RE.fullmatch(name):
@@ -2280,11 +2220,6 @@ class SnapshotTable:
         fork = [e for e in entries if e["version"] <= upto]
         if not fork:
             raise KeyError(f"no snapshot at or below v{upto}")
-        if not fork[-1].get("manifests"):
-            raise ValueError(
-                "branching requires a format-2 (manifest-list) head — "
-                "commit once on this layout first"
-            )
         # defensive: a crashed drop_branch can never leave commit files
         # without their checkpoint (it removes the tail first), but clear
         # any stale scope files regardless — they would splice a dead
@@ -2446,8 +2381,8 @@ class SnapshotTable:
         prev = base
         eq_delete_picked = False
         for e in picks:
-            pm = set(prev.get("manifests") or [])
-            own_m = [m for m in e.get("manifests", []) if m not in pm]
+            pm = set(prev["manifests"])
+            own_m = [m for m in e["manifests"] if m not in pm]
             sp = delete_stack_keys(prev)
             own_d = [d for d in e.get("deletes", []) if _key(d) not in sp]
             removed = sp - delete_stack_keys(e)
@@ -2504,7 +2439,7 @@ class SnapshotTable:
                 # deletes main already carries (shared history retention
                 # trimmed, or a re-run after a mid-sequence conflict)
                 # contributes nothing and must not double-list files
-                hm = set(head.get("manifests") or [])
+                hm = set(head["manifests"])
                 hk = delete_stack_keys(head)
                 own_m = [m for m in own_m if m not in hm]
                 own_d = [d for d in own_d if _key(d) not in hk]
@@ -2538,8 +2473,7 @@ class SnapshotTable:
                 entry = {
                     "version": nv,
                     "data_dir": head["data_dir"],
-                    "fmt": SNAPSHOT_FORMAT,
-                    "manifests": self._manifests_of(head) + own_m,
+                    "manifests": head["manifests"] + own_m,
                     "base_seq": head.get("base_seq", head["version"]),
                     "ts": time.time() if ts is None else ts,
                     "note": f"cherry-pick {name}@v{e['version']}: "
@@ -2741,13 +2675,11 @@ class SnapshotTable:
             version = cur["version"] + 1
             dest = os.path.join(self.path, cur["data_dir"])
             new_rels = self._ingest_stage(staged, dest, f"s{version:05d}-")
-            manifests = self._manifests_of(cur)
             mname = self._write_manifest_file(version, new_rels)
             new_entry = {
                 "version": version,
                 "data_dir": cur["data_dir"],
-                "fmt": SNAPSHOT_FORMAT,
-                "manifests": manifests + [mname],
+                "manifests": cur["manifests"] + [mname],
                 "base_seq": cur.get("base_seq", cur["version"]),
                 "has_appends": True,
                 "ts": time.time() if ts is None else ts,
@@ -2787,7 +2719,6 @@ class SnapshotTable:
         new_entry = {
             "version": version,
             "data_dir": data_dir,
-            "fmt": SNAPSHOT_FORMAT,
             "manifests": [mname],
             "base_seq": version,
             "ts": time.time() if ts is None else ts,
@@ -2823,30 +2754,22 @@ class SnapshotTable:
         deletes; here the manifest's stats are the parquet footers
         (`footer_stats.prune_files_multi` — conservative: a file without
         provable non-overlap is kept). The candidate set is the snapshot's
-        manifest-listed files (format 2) or its data dir (format 1).
-        ``where`` maps column → (lo, hi) range bounds, either bound None
-        for open-ended. ``eq`` maps column → exact value and prunes by the
-        PER-FILE BLOOM FILTERS (:meth:`analyze_bloom`) — the point-lookup
+        manifest-listed files. ``where`` maps column → (lo, hi) range
+        bounds, either bound None for open-ended. ``eq`` maps column →
+        exact value and prunes by the PER-FILE BLOOM FILTERS (:meth:`analyze_bloom`) — the point-lookup
         path where range bounds prune nothing; files a blob never saw
         (later appends, never-analyzed tables) are kept, so the plan is
         always conservative."""
         from iceberg_evolve_spark.sources.footer_stats import (
-            _files,
             prune_files_multi,
         )
 
         entry = self._resolve(version, as_of)
         data_path = os.path.join(self.path, entry["data_dir"])
-        files = (
-            self._entry_abs_files(entry) if entry.get("manifests") else None
-        )
-        rel_sids = (
-            self._rel_schema_map(entry)
-            if where and files is not None
-            else None
-        )
+        files = self._entry_abs_files(entry)
+        rel_sids = self._rel_schema_map(entry) if where else None
         if not where:
-            kept = list(files) if files is not None else _files(data_path)
+            kept = files
             total = len(kept)
         elif rel_sids is None:
             kept, total = prune_files_multi(data_path, where, files=files)
@@ -2982,8 +2905,6 @@ class SnapshotTable:
         from pyspark.sql import functions as F
 
         entry = self._resolve(version, as_of)
-        data_dir = os.path.join(self.path, entry["data_dir"])
-        files: list[str] | None = None
         if where or eq:
             files, _total = self.plan_scan(
                 version=entry["version"], where=where, eq=eq
@@ -2991,19 +2912,16 @@ class SnapshotTable:
             if not files:
                 # schema-stable empty relation: scan plan proves no file can
                 # contain in-range rows
-                all_files, _n = self.plan_scan(version=entry["version"])
-                return self._base_scan(spark, entry, all_files).filter(
-                    F.lit(False)
-                )
-        elif entry.get("manifests"):
+                return self._base_scan(
+                    spark, entry, self._entry_abs_files(entry)
+                ).filter(F.lit(False))
+        else:
             files = self._entry_abs_files(entry)
         if entry.get("deletes"):
             df = self._read_with_pos(spark, entry, files=files)
             df = df.drop("_file", "_pos", "_seq")
-        elif files is not None:
-            df = self._base_scan(spark, entry, files)
         else:
-            df = spark.read.parquet(data_dir)
+            df = self._base_scan(spark, entry, files)
         if where:
             for c, (lo, hi) in where.items():
                 if lo is not None:
@@ -3079,7 +2997,7 @@ class SnapshotTable:
         Cost: one JSON read per manifest — never touches data."""
         refcount: dict[str, int] = {}
         for e in self.versions():
-            for mname in e.get("manifests", []):
+            for mname in e["manifests"]:
                 refcount[mname] = refcount.get(mname, 0) + 1
         rows = []
         for name in sorted(os.listdir(self.path)):
@@ -3094,7 +3012,7 @@ class SnapshotTable:
             # reference shares the dir)
             total = 0
             for e in self.versions():
-                if name in e.get("manifests", []):
+                if name in e["manifests"]:
                     dd = os.path.join(self.path, e["data_dir"])
                     total = sum(
                         os.path.getsize(os.path.join(dd, rel))
@@ -3133,10 +3051,10 @@ class SnapshotTable:
         discipline as ``footer_stats.prune_files``).
 
         Cost: one footer read per file, driver-side — the planning-layer
-        price, never a data scan. Format-2 snapshots enumerate their
+        price, never a data scan. Data files are the snapshot's
         manifest-listed files (so crash orphans in the shared lineage dir
-        never appear); format-1 walks the dir. This is the relation a scan
-        planner joins against (file skipping = a filter on these bounds)."""
+        never appear). This is the relation a scan planner joins against
+        (file skipping = a filter on these bounds)."""
         import pyarrow.parquet as pq
 
         entry = self._resolve(version, as_of)
@@ -3190,13 +3108,7 @@ class SnapshotTable:
                 )
             return out
 
-        if entry.get("manifests"):
-            data_rels = self._entry_files(entry)
-        else:
-            data_rels = _walk_rel_parquet(
-                os.path.join(self.path, entry["data_dir"])
-            )
-        rows = _rows_for(data_rels, entry["data_dir"], "data")
+        rows = _rows_for(self._entry_files(entry), entry["data_dir"], "data")
         for d in entry.get("deletes", []):
             drels = _walk_rel_parquet(os.path.join(self.path, d["dir"]))
             rows.extend(
@@ -3426,17 +3338,11 @@ class SnapshotTable:
             }
             if self.branch:
                 blob["branch"] = self.branch
-            if entry.get("manifests"):
-                # coverage = the analyzed entry's manifest-listed files,
-                # RECOMPUTED at probe time from the (immutable, retained-
-                # while-referenced) manifest files — never a driver-held
-                # list of every file
-                blob["manifests"] = sorted(entry["manifests"])
-            else:
-                # format-1 lineage (no manifests): walk once and persist
-                blob["covered"] = _walk_rel_parquet(
-                    os.path.join(self.path, entry["data_dir"])
-                )
+            # coverage = the analyzed entry's manifest-listed files,
+            # RECOMPUTED at probe time from the (immutable, retained-while-
+            # referenced) manifest files — never a driver-held list of
+            # every file
+            blob["manifests"] = sorted(entry["manifests"])
             # words parquet lands BEFORE the json that references it: a
             # crash in between leaves an orphan .words dir (swept by
             # expire_snapshots), never a blob pointing at nothing
@@ -3471,13 +3377,8 @@ class SnapshotTable:
         the analyzed entry's manifest names — or None when coverage can no
         longer be reconstructed (manifests expired), in which case the
         caller must keep every candidate (conservative, never wrong)."""
-        if "covered" in blob:
-            return set(blob["covered"])
-        mnames = blob.get("manifests")
-        if mnames is None:
-            return None
         covered: set[str] = set()
-        for mname in mnames:
+        for mname in blob["manifests"]:
             try:
                 with open(os.path.join(self.path, mname)) as fh:
                     covered.update(json.load(fh)["files"])
@@ -3568,10 +3469,7 @@ class SnapshotTable:
 
         entry = self._resolve(version, as_of)
         ddir = os.path.join(self.path, entry["data_dir"])
-        if entry.get("manifests"):
-            rels = self._entry_files(entry)
-        else:
-            rels = _walk_rel_parquet(ddir)
+        rels = self._entry_files(entry)
         n_files: dict[str, int] = defaultdict(int)
         n_rows: dict[str, int] = defaultdict(int)
         n_bytes: dict[str, int] = defaultdict(int)
@@ -3718,11 +3616,8 @@ class SnapshotTable:
                     "deletion vector replaced outside its supersede chain "
                     "(rollback)"
                 )
-        if (
-            boundary is None
-            and efrom.get("manifests")
-            and eto.get("manifests")
-            and not set(efrom["manifests"]) <= set(eto["manifests"])
+        if boundary is None and not set(efrom["manifests"]) <= set(
+            eto["manifests"]
         ):
             boundary = "manifest set shrank in range (rollback/rewrite)"
         if boundary is None and efrom.get("schema_id") != eto.get(
@@ -3839,7 +3734,7 @@ class SnapshotTable:
         * whole ``v``/``d`` dirs referenced by NO surviving entry;
         * individual parquet files inside a LIVE lineage dir that no
           surviving entry's manifests list (expired appends, crashed-append
-          orphans) — format-2 dirs are shared across snapshots, so files,
+          orphans) — lineage dirs are shared across snapshots, so files,
           not dirs, are the reclamation unit, exactly like Iceberg data
           files under a shared prefix;
         * manifest files (``m*.json``) no surviving entry references.
@@ -3898,19 +3793,14 @@ class SnapshotTable:
         ]
         live_dirs = {e["data_dir"] for e in keep}
         live_manifests: set[str] = set()
-        # per lineage dir: the union of surviving entries' file lists, or
-        # None when ANY surviving entry reads it by walk (format 1) — then
-        # the whole dir is live and per-file sweeping is off for it
-        live_rel: dict[str, set[str] | None] = {}
+        # per lineage dir: the union of surviving entries' file lists
+        live_rel: dict[str, set[str]] = {}
         for e in keep + branch_entries:
             live_dirs.update(d["dir"] for d in e.get("deletes", []))
-            if e.get("manifests"):
-                live_manifests.update(e["manifests"])
-                slot = live_rel.setdefault(e["data_dir"], set())
-                if slot is not None:
-                    slot.update(self._entry_files(e))
-            else:
-                live_rel[e["data_dir"]] = None
+            live_manifests.update(e["manifests"])
+            live_rel.setdefault(e["data_dir"], set()).update(
+                self._entry_files(e)
+            )
         removed = []
         # Sweep EVERY unreferenced dir/file, not just what this call
         # expired — a crash between a previous retention's log commit and
@@ -3950,7 +3840,7 @@ class SnapshotTable:
                     shutil.rmtree(full)
                     removed.append(name)
                 elif name == stem and live_rel.get(name):
-                    # live format-2 lineage dir: per-file sweep
+                    # live lineage dir: per-file sweep
                     live = live_rel[name]
                     for rel in _walk_rel_parquet(full):
                         fp = os.path.join(full, rel)

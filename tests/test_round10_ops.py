@@ -21,6 +21,13 @@ def tdir():
     shutil.rmtree(d, ignore_errors=True)
 
 
+def _rewrite_head_commit(t: SnapshotTable, head: dict) -> None:
+    """Forge persisted state: overwrite the head's commit file in place
+    (the log's on-disk form) with ``head``."""
+    with open(t._commit_file(head["version"]), "w") as fh:
+        json.dump(head, fh, indent=1)
+
+
 class TestChangelogBoundaries:
     def test_rollback_in_range_is_detected(self, spark, tdir):
         """ADVICE r9: write v1, append v2, rollback-to-v1 v3, append v4 —
@@ -166,7 +173,7 @@ class TestPosDeletePathGuard:
         shutil.rmtree(ddir)
         os.rename(tmp, ddir)
         del d["paths"]
-        t._commit(entries)
+        _rewrite_head_commit(t, entries[-1])
         with pytest.raises(ValueError, match="ABSOLUTE"):
             t.read(spark).count()
 
@@ -179,7 +186,7 @@ class TestPosDeletePathGuard:
         t.delete_where(spark, F.col("id") < 3)
         entries = t.versions()
         del entries[-1]["deletes"][0]["paths"]
-        t._commit(entries)
+        _rewrite_head_commit(t, entries[-1])
         assert t.read(spark).count() == 7
 
 
@@ -207,7 +214,8 @@ class TestCdcRetireStamp:
         t = SnapshotTable(tbl)
         entries = t.versions()
         assert "append" in (entries[-1].get("note") or "")
-        t._commit(entries[:-1])  # crash: append commit lost
+        # crash: the append's commit file was never linked
+        os.unlink(t._commit_file(entries[-1]["version"]))
         n_delete_files = len(t.versions()[-1].get("deletes", []))
         writer(b1, 1)  # at-least-once replay
         t2 = SnapshotTable(tbl)

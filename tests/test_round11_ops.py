@@ -342,8 +342,7 @@ class TestCommitCAS:
             return {
                 "version": head["version"] + 1,
                 "data_dir": head["data_dir"],
-                "fmt": 2,
-                "manifests": t._manifests_of(head) + [mname],
+                "manifests": head["manifests"] + [mname],
                 "base_seq": head.get("base_seq", head["version"]),
                 "has_appends": True,
                 "deletes": list(head.get("deletes", [])),

@@ -37,8 +37,7 @@ def _meta_entry(t: SnapshotTable, head: dict, note: str) -> dict:
     return {
         "version": head["version"] + 1,
         "data_dir": head["data_dir"],
-        "fmt": 2,
-        "manifests": t._manifests_of(head) + [mname],
+        "manifests": head["manifests"] + [mname],
         "base_seq": head.get("base_seq", head["version"]),
         "ts": 1.0,
         "note": note,

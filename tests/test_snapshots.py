@@ -51,20 +51,82 @@ def test_orphan_data_dir_is_ignored(spark, table):
     assert table.read(spark).count() == 25
 
 
-def test_log_is_valid_json_after_every_commit(spark, table):
-    # round 12: the log is the checkpoint plus atomically-linked commit
-    # files; each commit file is complete JSON (never torn — the tmp is
-    # fully written before the link) and no tmp remnants survive a commit
-    entries = table.versions()
-    assert all({"version", "data_dir", "ts"} <= set(e) for e in entries)
-    for name in os.listdir(table.path):
+def _assert_log_sound(t: SnapshotTable) -> None:
+    """The log is the checkpoint plus atomically-linked commit files; each
+    commit file is complete JSON (never torn — the tmp is fully written
+    before the link), no tmp remnants survive a commit, and every entry of
+    main and of each branch carries a non-empty manifest list whose files
+    all exist (the only snapshot shape the storage plane reads)."""
+    logs = [t.versions()] + [
+        t.branch_table(b).versions() for b in t.branches()
+    ]
+    for entries in logs:
+        assert entries
+        for e in entries:
+            assert {"version", "data_dir", "ts"} <= set(e)
+            assert e["manifests"], f"v{e['version']} has no manifests"
+            for mname in e["manifests"]:
+                assert os.path.isfile(os.path.join(t.path, mname)), mname
+    for name in os.listdir(t.path):
         if name.endswith(".commit.json"):
-            with open(os.path.join(table.path, name)) as fh:
+            with open(os.path.join(t.path, name)) as fh:
                 e = json.load(fh)
             assert {"version", "data_dir", "ts"} <= set(e)
         assert ".tmp" not in name or name.endswith(
             (".stage",)
         ), f"torn tmp remnant {name}"
+
+
+def test_log_is_valid_json_after_every_commit(spark, table):
+    import copy
+
+    from iceberg_evolve_spark.schema import Schema
+
+    t = table
+    _assert_log_sound(t)
+
+    def rows(lo, hi):
+        return spark.range(lo, hi).withColumn("k", F.col("id") % 5)
+
+    # one of each committing operation, the log re-checked after each
+    t.write(rows(0, 30), ts=300.0, track_schema=True)
+    _assert_log_sound(t)
+    t.append(rows(30, 40))
+    _assert_log_sound(t)
+    t.delete_where(spark, F.col("id") == 1)
+    _assert_log_sound(t)
+    t.delete_where(spark, F.col("id") == 2, vector=True)
+    _assert_log_sound(t)
+    t.delete_by_key(spark.createDataFrame([(3,)], "id long"), ["id"])
+    _assert_log_sound(t)
+    folded = t.rewrite_delete_files(spark)
+    _assert_log_sound(t)
+    t.rewrite_data_files(spark)
+    _assert_log_sound(t)
+    t.rollback(folded)
+    _assert_log_sound(t)
+    t.create_branch("audit").append(rows(40, 45))
+    _assert_log_sound(t)
+    t.fast_forward("audit")
+    _assert_log_sound(t)
+    t.create_branch("pick").append(rows(45, 50))
+    t.append(rows(50, 55))  # main diverges from the branch
+    _assert_log_sound(t)
+    t.cherry_pick("pick")
+    _assert_log_sound(t)
+    t.stage(rows(55, 60), "wap")
+    t.publish("wap", mode="append")
+    _assert_log_sound(t)
+    j = copy.deepcopy(t.table_schema().to_json())
+    j["fields"].append(
+        {"id": 99, "name": "note", "type": "string", "required": False}
+    )
+    t.evolve_schema(Schema.from_json(j))
+    _assert_log_sound(t)
+    t.expire_snapshots(keep_last=2)
+    _assert_log_sound(t)
+    live = set(range(60)) - {1, 2, 3}
+    assert {r["id"] for r in t.read(spark).collect()} == live
 
 
 def test_snapshots_are_immutable_under_append(spark, table):
@@ -118,9 +180,10 @@ class TestExpireSnapshots:
         t = SnapshotTable(str(tmp_path_factory.mktemp("expc") / "t"))
         for i in range(3):
             t.write(spark.range(0, i + 1).toDF("id"), ts=float(100 + i))
-        # simulate the crash window: manifest shrunk, dirs not yet removed
+        # simulate the crash window: the retention fold landed (log shrunk
+        # to its head), dirs not yet removed
         entries = t.versions()
-        t._commit(entries[-1:])
+        t._install_checkpoint(entries[-1:])
         assert _os.path.isdir(_os.path.join(t.path, "v00001"))  # orphan
         # the next retention call reclaims the crash orphans even though
         # their manifest entries are already gone
@@ -350,15 +413,7 @@ def test_files_df_walks_partitioned_layout(spark, tmp_path_factory):
     """files_df must see files nested under key=value partition dirs."""
     t = SnapshotTable(str(tmp_path_factory.mktemp("metap") / "t"))
     df = spark.range(40).withColumn("g", F.col("id") % 2)
-    entries = t.versions()
-    # write a partitioned layout through the same commit protocol
-    data_dir = "v00001"
-    final = os.path.join(t.path, data_dir)
-    df.repartition("g").write.partitionBy("g").parquet(final + ".tmp")
-    os.rename(final + ".tmp", final)
-    t._commit(
-        [{"version": 1, "data_dir": data_dir, "ts": 1.0, "note": None}]
-    )
+    t.write(df.repartition("g"), ts=1.0, partition_by=["g"])
     files = t.files_df(spark).collect()
     assert sum(r["n_rows"] for r in files) == 40
     assert all("g=" in r["file"] for r in files)
@@ -475,3 +530,26 @@ class TestPrunedMorRead:
         got = clustered.read(spark, where={"id": (0, 999)})
         assert got.filter(F.col("grp").isin(3, 7)).count() == 0
         assert got.count() == 800
+
+
+def test_log_layout_is_private_to_snapshots_module():
+    """Only ``sources/snapshots.py`` knows the snapshot-log file layout
+    (``_snapshots.json`` checkpoints, ``_snapshots_{branch}.json`` branch
+    logs, ``c{v}.commit.json`` commit files); every other module reads the
+    log through ``SnapshotTable.versions()``."""
+    import pathlib
+    import re
+
+    import iceberg_evolve_spark
+
+    root = pathlib.Path(iceberg_evolve_spark.__file__).parent
+    owner = root / "sources" / "snapshots.py"
+    layout = re.compile(r"(?<!\w)_snapshots(?:\.json|_)|\.commit\.json")
+    leaks = [
+        f"{path.relative_to(root)}:{i}"
+        for path in sorted(root.rglob("*.py"))
+        if path != owner
+        for i, line in enumerate(path.read_text().splitlines(), 1)
+        if layout.search(line)
+    ]
+    assert not leaks, f"snapshot-log layout named outside snapshots.py: {leaks}"
