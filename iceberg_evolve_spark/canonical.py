@@ -4,7 +4,10 @@ Reference surface: ``canonicalize_type`` / ``types_equivalent``
 (``iceberg_evolve/utils.py:318-364``) and ``is_narrower_than`` (``utils.py:112-129``).
 
 Canonicalization sorts struct fields by ID and strips docs so equality is
-order-insensitive and doc-insensitive. The widening lattice reproduces the
+order-insensitive and doc-insensitive. :func:`types_equivalent` answers the same
+question without building anything: it walks both trees in place and returns
+exactly ``canonicalize_type(a) == canonicalize_type(b)``, which stays the public
+reference definition. The widening lattice reproduces the
 *reference's* promotion table for diff classification:
 
     int    → long, float, double, decimal
@@ -20,6 +23,7 @@ which the executor checks at apply time (``SURVEY.md §7.4`` risk #2).
 from __future__ import annotations
 
 from dataclasses import replace
+from operator import attrgetter
 
 from iceberg_evolve_spark.model import (
     DecimalType,
@@ -105,9 +109,55 @@ def canonicalize_type(t: IcebergType) -> IcebergType:
     return t
 
 
+_field_id = attrgetter("field_id")
+
+
+def _same(x: object, y: object) -> bool:
+    # Tuple-element equality, as dataclass ``__eq__`` compares fields.
+    return x is y or x == y
+
+
 def types_equivalent(a: IcebergType, b: IcebergType) -> bool:
-    """Structural equality after canonicalization (reference ``utils.py:357-364``)."""
-    return canonicalize_type(a) == canonicalize_type(b)
+    """Structural equality after canonicalization (reference ``utils.py:357-364``).
+
+    Copy-free: returns exactly ``canonicalize_type(a) == canonicalize_type(b)``
+    (the reference definition) without rebuilding either tree. Struct fields
+    pair up in field-ID order and compare on everything but ``doc``."""
+    if a is b:
+        return True
+    cls = a.__class__
+    if cls is not b.__class__:
+        return False
+    if cls is StructType:
+        if len(a.fields) != len(b.fields):
+            return False
+        # Same field order as Field.__eq__ on the canonical copies.
+        for fa, fb in zip(sorted(a.fields, key=_field_id), sorted(b.fields, key=_field_id)):
+            if not (
+                _same(fa.field_id, fb.field_id)
+                and _same(fa.name, fb.name)
+                and types_equivalent(fa.type, fb.type)
+                and _same(fa.required, fb.required)
+                and _same(fa.initial_default, fb.initial_default)
+                and _same(fa.write_default, fb.write_default)
+            ):
+                return False
+        return True
+    if cls is ListType:
+        return (
+            _same(a.element_id, b.element_id)
+            and types_equivalent(a.element, b.element)
+            and _same(a.element_required, b.element_required)
+        )
+    if cls is MapType:
+        return (
+            _same(a.key_id, b.key_id)
+            and types_equivalent(a.key, b.key)
+            and _same(a.value_id, b.value_id)
+            and types_equivalent(a.value, b.value)
+            and _same(a.value_required, b.value_required)
+        )
+    return a == b
 
 
 def clean_type_str(t: IcebergType) -> str:

@@ -188,10 +188,12 @@ class SchemaDiff:
             new_order = [f.field_id for f in new.fields if f.field_id in common]
             moved_ids = minimal_moves(orig_order, new_order)
             # Describe each move by its predecessor in the full new-schema order.
-            new_ids_all = [f.field_id for f in new.fields]
+            new_pos: dict[int, int] = {}
+            for i, f in enumerate(new.fields):
+                new_pos.setdefault(f.field_id, i)  # first occurrence, as list.index
             for fid in moved_ids:
                 new_f = new_by_id[fid]
-                idx = new_ids_all.index(fid)
+                idx = new_pos[fid]
                 if idx == 0:
                     target, position = None, "first"
                 else:

@@ -27,6 +27,7 @@ from iceberg_evolve_spark.model import (
     IDAllocator,
     ListType,
     MapType,
+    PRIMITIVE_TYPES,
     PrimitiveType,
     StructType,
 )
@@ -66,7 +67,7 @@ def convert_json_schema_type(spec: dict[str, Any], allocator: IDAllocator) -> Ic
             vid = allocator.allocate()
             return MapType(
                 key_id=kid,
-                key=PrimitiveType("string"),
+                key=PRIMITIVE_TYPES["string"],
                 value_id=vid,
                 value=convert_json_schema_type(spec["additionalProperties"], allocator),
             )
@@ -91,11 +92,9 @@ def convert_json_schema_type(spec: dict[str, Any], allocator: IDAllocator) -> Ic
         )
     if isinstance(jtype, str):
         fmt = spec.get("format")
-        override = _FORMAT_OVERRIDES.get((jtype, fmt)) if fmt else None
-        if override:
-            return PrimitiveType(override)
-        if jtype in _JSON_PRIMITIVES:
-            return PrimitiveType(_JSON_PRIMITIVES[jtype])
+        name = (_FORMAT_OVERRIDES.get((jtype, fmt)) if fmt else None) or _JSON_PRIMITIVES.get(jtype)
+        if name:
+            return PRIMITIVE_TYPES[name]
     raise SchemaParseError(_SOURCE, f"unsupported JSON-schema type {jtype!r}")
 
 

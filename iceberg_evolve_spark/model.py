@@ -191,6 +191,13 @@ class MapType:
 
 IcebergType = Union[PrimitiveType, DecimalType, StructType, ListType, MapType]
 
+#: Every canonical primitive name and alias → one shared, frozen instance.
+#: Parsers look type strings up here so a schema of N leaves holds a handful
+#: of primitive objects, not N. Built once at import and never mutated;
+#: decimals are not in it (they are parameterized and built on demand).
+PRIMITIVE_TYPES: dict[str, PrimitiveType] = {n: PrimitiveType(n) for n in sorted(PRIMITIVE_NAMES)}
+PRIMITIVE_TYPES.update({a: PRIMITIVE_TYPES[c] for a, c in PRIMITIVE_ALIASES.items()})
+
 
 # ---------------------------------------------------------------------------
 # ID allocation
@@ -246,8 +253,9 @@ def max_field_id(t: IcebergType) -> int:
 
 
 def primitive(name: str) -> PrimitiveType:
-    """Shorthand constructor accepting aliases."""
-    return PrimitiveType(name)
+    """The shared instance for a primitive name or alias; unknown names raise
+    ``ValueError`` like :class:`PrimitiveType` does."""
+    return PRIMITIVE_TYPES.get(name) or PrimitiveType(name)
 
 
 def parse_decimal(s: str) -> DecimalType | None:

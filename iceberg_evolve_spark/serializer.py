@@ -18,6 +18,10 @@ The canonical wire format (documented in the reference serializer docstring,
 Decimals serialize as the string ``"decimal(p, s)"`` (reference
 ``json_serializer.py:113-114``). Unknown types raise :class:`SchemaParseError`
 (parse path: reference ``json_serializer.py:124-175``; write path ``:72-122``).
+
+Primitive type strings parse to the shared, immutable instances of
+:data:`~.model.PRIMITIVE_TYPES` (one dict lookup per leaf, no construction);
+only a miss there is tried as ``decimal(p, s)``.
 """
 
 from __future__ import annotations
@@ -31,25 +35,25 @@ from iceberg_evolve_spark.model import (
     IcebergType,
     ListType,
     MapType,
-    PRIMITIVE_ALIASES,
-    PRIMITIVE_NAMES,
+    PRIMITIVE_TYPES,
     PrimitiveType,
     StructType,
     parse_decimal,
 )
 
 _SOURCE = "<iceberg-json>"
+_MISSING = object()
 
 
 def type_from_json(obj: Any, source: str = _SOURCE) -> IcebergType:
     """Parse a type descriptor: a primitive/decimal string or a nested dict."""
     if isinstance(obj, str):
+        prim = PRIMITIVE_TYPES.get(obj)
+        if prim is not None:
+            return prim
         dec = parse_decimal(obj)
         if dec is not None:
             return dec
-        name = PRIMITIVE_ALIASES.get(obj, obj)
-        if name in PRIMITIVE_NAMES:
-            return PrimitiveType(name)
         raise SchemaParseError(source, f"unknown type string {obj!r}")
     if not isinstance(obj, dict):
         raise SchemaParseError(source, f"type descriptor must be str or dict, got {type(obj).__name__}")
@@ -57,7 +61,7 @@ def type_from_json(obj: Any, source: str = _SOURCE) -> IcebergType:
     if kind == "struct":
         if "fields" not in obj:
             raise SchemaParseError(source, "struct type missing 'fields'")
-        return StructType(field_from_json(f, source) for f in obj["fields"])
+        return StructType([field_from_json(f, source) for f in obj["fields"]])
     if kind == "list":
         if "element-id" not in obj:
             raise SchemaParseError(source, "list type missing 'element-id'")
@@ -85,21 +89,26 @@ def type_from_json(obj: Any, source: str = _SOURCE) -> IcebergType:
 def field_from_json(obj: Any, source: str = _SOURCE) -> Field:
     if not isinstance(obj, dict):
         raise SchemaParseError(source, f"field must be a dict, got {type(obj).__name__}")
-    if "id" not in obj:
-        raise SchemaParseError(source, f"field {obj.get('name')!r} missing 'id'")
-    if "name" not in obj:
-        raise SchemaParseError(source, f"field id={obj.get('id')!r} missing 'name'")
-    if "type" not in obj:
-        raise SchemaParseError(source, f"field {obj.get('name')!r} missing 'type'")
+    get = obj.get
+    fid, name, ftype = get("id", _MISSING), get("name", _MISSING), get("type", _MISSING)
+    if fid is _MISSING:
+        raise SchemaParseError(source, f"field {get('name')!r} missing 'id'")
+    if name is _MISSING:
+        raise SchemaParseError(source, f"field id={fid!r} missing 'name'")
+    if ftype is _MISSING:
+        raise SchemaParseError(source, f"field {name!r} missing 'type'")
+    fid, name = int(fid), str(name)
+    # A str leaf is almost always a primitive: skip the type_from_json call.
+    type_ = PRIMITIVE_TYPES.get(ftype) if ftype.__class__ is str else None
     return Field(
-        field_id=int(obj["id"]),
-        name=str(obj["name"]),
-        type=type_from_json(obj["type"], source),
-        required=bool(obj.get("required", False)),
-        doc=obj.get("doc"),
+        fid,
+        name,
+        type_ or type_from_json(ftype, source),
+        bool(get("required", False)),
+        get("doc"),
         # Iceberg v3 default values (spec keys: initial-default/write-default)
-        initial_default=obj.get("initial-default"),
-        write_default=obj.get("write-default"),
+        get("initial-default"),
+        get("write-default"),
     )
 
 
@@ -111,7 +120,7 @@ def schema_from_json(data: Any, source: str = _SOURCE) -> tuple[StructType, int]
         raise SchemaParseError(source, f"top-level type must be 'struct', got {data.get('type')!r}")
     if "fields" not in data:
         raise SchemaParseError(source, "schema missing 'fields'")
-    struct = StructType(field_from_json(f, source) for f in data["fields"])
+    struct = StructType([field_from_json(f, source) for f in data["fields"]])
     return struct, int(data.get("schema-id", 0))
 
 

@@ -24,6 +24,7 @@ from iceberg_evolve_spark.model import (
     IDAllocator,
     ListType,
     MapType,
+    PRIMITIVE_TYPES,
     PrimitiveType,
     StructType,
 )
@@ -120,7 +121,7 @@ def type_from_spark(dt: T.DataType, allocator: IDAllocator) -> IcebergType:
     name = _FROM_SPARK.get(dt)
     if name is None:
         raise ValueError(f"No model mapping for Spark type {dt!r}")
-    return PrimitiveType(name)
+    return PRIMITIVE_TYPES[name]
 
 
 def _struct_from_spark(st: T.StructType, allocator: IDAllocator) -> StructType:

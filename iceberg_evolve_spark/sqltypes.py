@@ -21,9 +21,7 @@ from iceberg_evolve_spark.model import (
     IDAllocator,
     ListType,
     MapType,
-    PRIMITIVE_ALIASES,
-    PRIMITIVE_NAMES,
-    PrimitiveType,
+    PRIMITIVE_TYPES,
     StructType,
     parse_decimal,
 )
@@ -58,11 +56,12 @@ def parse_sql_type(type_str: str, allocator: IDAllocator | None = None) -> Icebe
     s = type_str.strip()
     lower = s.lower()
 
+    prim = PRIMITIVE_TYPES.get(lower)
+    if prim is not None:
+        return prim
     dec = parse_decimal(lower)
     if dec is not None:
         return dec
-    if lower in PRIMITIVE_NAMES or lower in PRIMITIVE_ALIASES:
-        return PrimitiveType(PRIMITIVE_ALIASES.get(lower, lower))
 
     if lower.startswith("struct<") and s.endswith(">"):
         inner = s[len("struct<") : -1]

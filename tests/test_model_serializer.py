@@ -6,6 +6,8 @@ import pytest
 
 from iceberg_evolve_spark.exceptions import SchemaParseError
 from iceberg_evolve_spark.model import (
+    PRIMITIVE_ALIASES,
+    PRIMITIVE_NAMES,
     DecimalType,
     Field,
     IDAllocator,
@@ -30,6 +32,7 @@ class TestPrimitives:
     def test_aliases(self):
         assert PrimitiveType("integer").name == "int"
         assert PrimitiveType("bool").name == "boolean"
+        assert PrimitiveType("integer") == PrimitiveType("int")
 
     def test_unknown_raises(self):
         with pytest.raises(ValueError):
@@ -80,28 +83,85 @@ class TestIcebergJsonRoundTrip:
         assert isinstance(t.value, ListType)
         assert type_from_json(type_to_json(t)) == t
 
-    # Malformed inputs (FIXTURES.md A.7 / reference test_integration.py:246-279)
+    def test_primitives_are_shared(self):
+        assert type_from_json("integer") is type_from_json("int")
+        struct, _ = schema_from_json(
+            {"type": "struct", "fields": [
+                {"id": 1, "name": "a", "type": "long"},
+                {"id": 2, "name": "b", "type": "bigint"},
+            ]}
+        )
+        assert struct.fields[0].type is struct.fields[1].type
+
+    def test_aliases_parse_to_canonical_names(self):
+        for alias, canonical in PRIMITIVE_ALIASES.items():
+            assert type_from_json(alias).name == canonical
+            assert type_from_json(alias) is type_from_json(canonical)
+        for name in PRIMITIVE_NAMES:
+            assert type_from_json(name) == PrimitiveType(name)
+
+    def test_nested_v3_schema_round_trip(self):
+        s = StructType([
+            Field(1, "id", PrimitiveType("long"), required=True, doc="key"),
+            Field(2, "price", DecimalType(10, 2), initial_default="0.00", write_default="1.50"),
+            Field(3, "tags", ListType(4, DecimalType(38, 0), element_required=True)),
+            Field(5, "attrs", MapType(6, PrimitiveType("string"), 7, StructType([
+                Field(8, "n", PrimitiveType("int"), initial_default=0, write_default=7),
+                Field(9, "on", PrimitiveType("boolean"), required=True, write_default=True),
+            ]), value_required=True)),
+            Field(10, "events", ListType(11, StructType([
+                Field(12, "at", PrimitiveType("timestamp"), doc="when"),
+            ]))),
+        ])
+        assert schema_from_json(schema_to_json(s, 4)) == (s, 4)
+
+    # Malformed inputs (FIXTURES.md A.7 / reference test_integration.py:246-279).
+    # Exact messages: which check fires first is part of the contract.
+    @staticmethod
+    def _message(fn, arg) -> str:
+        with pytest.raises(SchemaParseError) as exc:
+            fn(arg)
+        return str(exc.value).removeprefix("Failed to parse schema from '<iceberg-json>': ")
+
+    @staticmethod
+    def _fields(*fields) -> dict:
+        return {"type": "struct", "fields": list(fields)}
+
     def test_unknown_type_string_raises(self):
-        with pytest.raises(SchemaParseError):
-            type_from_json("not_a_type")
+        assert self._message(type_from_json, "not_a_type") == "unknown type string 'not_a_type'"
+        # no strip before the primitive lookup
+        assert self._message(type_from_json, " int") == "unknown type string ' int'"
 
     def test_uuid_unsupported(self):
-        with pytest.raises(SchemaParseError):
-            type_from_json("uuid")
+        assert self._message(type_from_json, "uuid") == "unknown type string 'uuid'"
 
     def test_field_missing_id_raises(self):
-        with pytest.raises(SchemaParseError):
-            schema_from_json(
-                {"type": "struct", "fields": [{"name": "x", "type": "string"}]}
-            )
+        f = self._fields
+        assert self._message(schema_from_json, f({"name": "x", "type": "string"})) == "field 'x' missing 'id'"
+        assert self._message(schema_from_json, f({"type": "string"})) == "field None missing 'id'"
+        assert self._message(schema_from_json, f({})) == "field None missing 'id'"
+
+    def test_field_missing_name_raises(self):
+        f = self._fields
+        assert self._message(schema_from_json, f({"id": 1, "type": "string"})) == "field id=1 missing 'name'"
+        assert self._message(schema_from_json, f({"id": 1})) == "field id=1 missing 'name'"
+
+    def test_field_missing_type_raises(self):
+        assert self._message(schema_from_json, self._fields({"id": 1, "name": "x"})) == "field 'x' missing 'type'"
+
+    def test_non_dict_field_raises(self):
+        assert self._message(schema_from_json, self._fields("x")) == "field must be a dict, got str"
 
     def test_schema_missing_fields_raises(self):
-        with pytest.raises(SchemaParseError):
-            schema_from_json({"type": "struct"})
+        assert self._message(schema_from_json, {"type": "struct"}) == "schema missing 'fields'"
 
     def test_list_missing_element_id_raises(self):
-        with pytest.raises(SchemaParseError):
-            type_from_json({"type": "list", "element": "int"})
+        msg = self._message(type_from_json, {"type": "list", "element": "int"})
+        assert msg == "list type missing 'element-id'"
+
+    def test_map_missing_value_id_raises(self):
+        msg = self._message(type_from_json, {"type": "map", "key-id": 1, "key": "string", "value": "int"})
+        assert msg == "map type missing 'value-id'"
 
 
 class TestSqlTypeParser:
