@@ -76,109 +76,3 @@ def asof_join(
         )
     out_cols = left.columns + [f"{c}{suffix}" for c in right_cols]
     return filled.filter(F.col("_side") == 0).select(*out_cols)
-
-
-def asof_join_bucketed(
-    left: DataFrame,
-    right: DataFrame,
-    on: str,
-    left_ts: str = "ts",
-    right_ts: str = "ts",
-    right_cols: list[str] | None = None,
-    suffix: str = "_asof",
-    bucket_seconds: int = 86400,
-) -> DataFrame:
-    """Skew-hardened as-of join: same semantics as :func:`asof_join`, but the
-    window partitions on (key, time-bucket) instead of (key), so one monster
-    key no longer serializes on a single task.
-
-    Two passes:
-
-    1. **seed pass** — per (key, bucket) take the latest right row, then a
-       running ``last`` ACROSS buckets per key (one row per touched bucket —
-       thousands of rows per key, not millions) gives each bucket the newest
-       right row from any EARLIER bucket;
-    2. **fill pass** — per (key, bucket) partition: seed row (sorts first) +
-       right rows + left rows, running ``last`` forward-fills within the
-       bucket.
-
-    Partition size is bounded by rows-per-bucket; pick ``bucket_seconds`` so a
-    hot key's densest bucket fits a task. Equivalence with the plain
-    formulation is asserted in tests over random data.
-    """
-    if right_cols is None:
-        right_cols = [c for c in right.columns if c not in (on, right_ts)]
-    w = F.lit(bucket_seconds)
-
-    def ts_long(df_, c):
-        col = df_[c]
-        if dict(df_.dtypes)[c].startswith("timestamp"):
-            col = col.cast("timestamp")
-        return col.cast("long")
-
-    r_val = F.struct(
-        ts_long(right, right_ts).alias("_rts"), *[right[c] for c in right_cols]
-    )
-    rb = right.select(
-        right[on].alias(on),
-        (ts_long(right, right_ts) / w).cast("long").alias("_bkt"),
-        r_val.alias("_val"),
-    )
-    # latest right row per (key, bucket)
-    latest = rb.groupBy(on, "_bkt").agg(F.max_by("_val", F.col("_val._rts")).alias("_val"))
-    # the seed for bucket b is the latest value from any EARLIER bucket; emit
-    # it for the NEXT bucket each right-bucket precedes. Left buckets with no
-    # earlier right rows simply find no seed (correct: NULL fill).
-    lb = left.select(left[on].alias(on), (ts_long(left, left_ts) / w).cast("long").alias("_bkt")).distinct()
-    buckets = latest.select(on, "_bkt").unionByName(lb).distinct()
-    carry_w = (
-        Window.partitionBy(on).orderBy("_bkt").rowsBetween(Window.unboundedPreceding, -1)
-    )
-    seeds = (
-        buckets.join(latest, [on, "_bkt"], "left")
-        .withColumn("_seed", F.last("_val", ignorenulls=True).over(carry_w))
-        .filter(F.col("_seed").isNotNull())
-        .select(on, "_bkt", F.col("_seed").alias("_val"))
-    )
-
-    # fill pass inside each (key, bucket): side 2=seed < 1=right < 0=left at
-    # equal ts; seed carries _ats = -inf so it always sorts first.
-    l_tagged = left.withColumn("_side", F.lit(0)).withColumn("_ats", ts_long(left, left_ts))
-    for c in right_cols:
-        l_tagged = l_tagged.withColumn(f"_r_{c}", F.lit(None).cast(dict(right.dtypes)[c]))
-    l_tagged = l_tagged.withColumn("_bkt", (F.col("_ats") / w).cast("long"))
-
-    def expand(src, side_lit, ats_col):
-        out = src.select(
-            F.col(on),
-            F.col("_bkt"),
-            F.lit(side_lit).alias("_side"),
-            ats_col.alias("_ats"),
-            *[F.col(f"_val.{c}").alias(f"_r_{c}") for c in right_cols],
-        )
-        for c in left.columns:
-            if c != on:
-                out = out.withColumn(c, F.lit(None).cast(dict(left.dtypes)[c]))
-        return out
-
-    r_expanded = expand(
-        rb, 1, F.col("_val._rts")
-    )
-    s_expanded = expand(seeds, 2, F.lit(None).cast("long"))
-
-    cols_order = l_tagged.columns
-    unioned = l_tagged.unionByName(r_expanded.select(cols_order)).unionByName(
-        s_expanded.select(cols_order)
-    )
-    win = (
-        Window.partitionBy(on, "_bkt")
-        .orderBy(F.col("_ats").asc_nulls_first(), F.col("_side").desc())
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    filled = unioned
-    for c in right_cols:
-        filled = filled.withColumn(
-            f"{c}{suffix}", F.last(F.col(f"_r_{c}"), ignorenulls=True).over(win)
-        )
-    out_cols = left.columns + [f"{c}{suffix}" for c in right_cols]
-    return filled.filter(F.col("_side") == 0).select(*out_cols)

@@ -35,7 +35,3 @@ def hash60_seeded(col: Column | str, seed: int) -> Column:
 def hash60_sql(expr: str) -> str:
     """DuckDB SQL text computing the identical value (for oracle queries)."""
     return f"CAST('0x' || substr(md5({expr}), 1, 15) AS BIGINT)"
-
-
-def hash60_seeded_sql(expr: str, seed: int) -> str:
-    return hash60_sql(f"{expr} || '{SEP}{seed}'")

@@ -127,25 +127,6 @@ def _decode_pixels(payload: bytes) -> tuple[int, int, list[list[tuple[int, int, 
     return width, height, rows
 
 
-def _encode_bmp(width: int, height: int, rows: list[list[tuple[int, int, int]]]) -> bytes:
-    """Pack image-order RGB rows as a standard bottom-up 24-bit BMP."""
-    stride = (3 * width + 3) // 4 * 4
-    data_size = stride * height
-    out = bytearray(
-        struct.pack("<2sIHHI", b"BM", 14 + 40 + data_size, 0, 0, 14 + 40)
-    )
-    out += struct.pack(
-        "<IiiHHIIiiII", 40, width, height, 1, 24, 0, data_size, 2835, 2835, 0, 0
-    )
-    pad = b"\x00" * (stride - 3 * width)
-    for y in range(height - 1, -1, -1):
-        row = bytearray()
-        for r, g, b in rows[y]:
-            row += bytes((b, g, r))
-        out += bytes(row) + pad
-    return bytes(out)
-
-
 def resize_one_bmp(payload: bytes, target_w: int, target_h: int) -> bytes:
     """REAL image resize — decode, nearest-neighbor resample, re-encode.
 

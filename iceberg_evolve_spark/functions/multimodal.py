@@ -296,13 +296,3 @@ def sample_frames(
             )
 
     return df.select(id_col, payload_col, meta_col).mapInPandas(run, schema=FRAME_SCHEMA)
-
-
-def extract_features_sql_equivalent(df: DataFrame, id_col: str = "doc_id", payload_col: str = "payload") -> DataFrame:
-    """The same features as pure column expressions (for oracle cross-checks:
-    byte_len/head_byte are SQL-expressible; checksum via aggregate over bytes is
-    not portable, so the oracle checks the first two)."""
-    return df.select(
-        F.col(id_col).alias("doc_id"),
-        F.length(F.col(payload_col)).cast("long").alias("byte_len"),
-    )

@@ -546,23 +546,6 @@ def document_fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def rolling_fingerprint(df: DataFrame, text_col: str = "text", base: int = 31, mod: int = (1 << 61) - 1) -> DataFrame:
-    """Polynomial rolling hash over whitespace tokens (h = h*base + tokhash mod m).
-
-    Order-sensitive (unlike a bag-of-words hash). Implemented as one
-    ``F.aggregate`` fold over the token array — still JVM-side, no UDF.
-    """
-    toks = tokens(text_col)
-    rolled = F.aggregate(
-        toks,
-        F.lit(0).cast("decimal(38,0)"),
-        lambda acc, t: (acc * base + F.abs(F.xxhash64(t)) % mod) % F.lit(mod).cast(
-            "decimal(38,0)"
-        ),
-    )
-    return df.withColumn("rolling_fp", rolled.cast("long"))
-
-
 def token_count_bpe(df: DataFrame, text_col: str = "text", out_col: str = "n_bpe_tokens") -> DataFrame:
     """BPE-ish token count: letter runs + digit runs + single symbols
     (a cheap, deterministic proxy for subword tokenizer cost accounting)."""

@@ -90,55 +90,3 @@ def chunk_tokens(
     return df.lateralJoin(
         TokenChunkUDTF(F.col(text_col).outer(), F.lit(chunk_size).outer())
     ).select(id_col, "chunk_idx", "chunk_text", "n_tokens")
-
-
-def cogroup_asof_align(
-    left: DataFrame,
-    right: DataFrame,
-    key: str,
-    left_ts: str = "ts",
-    right_ts: str = "ts",
-    right_cols: tuple[str, ...] = (),
-) -> DataFrame:
-    """Per-key as-of alignment via **cogrouped** ``applyInPandas`` — the fourth
-    pandas API surface (alongside grouped-agg, grouped-map/WithState, and
-    mapInPandas). Both inputs shuffle once on the key; each task receives the
-    two groups as pandas frames and runs a vectorized ``merge_asof``.
-
-    Exists as the imperative counterpart of ``functions/asof.py`` (union +
-    window, pure JVM): same semantics, different execution strategy — useful
-    when the per-key logic grows beyond what window functions express (e.g.
-    interpolation instead of last-value). Prefer the JVM formulation when it
-    fits; this one pays Arrow transfer but keeps numpy-vectorized group logic.
-    """
-    import pyspark.sql.types as T
-
-    out_fields = [left.schema[c] for c in left.columns]
-    for c in right_cols:
-        f = right.schema[c]
-        out_fields.append(T.StructField(f.name, f.dataType, True))
-    out_schema = T.StructType(out_fields)
-    rcols = list(right_cols)
-
-    def align(l: pd.DataFrame, r: pd.DataFrame) -> pd.DataFrame:
-        if l.empty:
-            return pd.DataFrame(columns=[f.name for f in out_fields])
-        l = l.sort_values(left_ts, kind="mergesort")
-        if r.empty:
-            for c in rcols:
-                l[c] = None
-            return l
-        r = r.sort_values(right_ts, kind="mergesort")[[right_ts] + rcols]
-        merged = pd.merge_asof(
-            l, r, left_on=left_ts, right_on=right_ts, suffixes=("", "_r")
-        )
-        keep = [c for c in l.columns] + [
-            c if c in merged.columns else f"{c}_r" for c in rcols
-        ]
-        merged = merged[keep]
-        merged.columns = [f.name for f in out_fields]
-        return merged
-
-    return left.groupBy(key).cogroup(right.groupBy(key)).applyInPandas(
-        align, schema=out_schema
-    )

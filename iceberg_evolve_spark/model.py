@@ -19,7 +19,7 @@ from __future__ import annotations
 
 import re
 from dataclasses import dataclass, field as dc_field, replace
-from typing import Iterator, Union
+from typing import Union
 
 # ---------------------------------------------------------------------------
 # Type algebra
@@ -220,36 +220,6 @@ class IDAllocator:
 # ---------------------------------------------------------------------------
 # Tree helpers
 # ---------------------------------------------------------------------------
-
-
-def iter_fields(
-    struct: StructType, prefix: str = ""
-) -> Iterator[tuple[str, Field]]:
-    """Yield ``(dotted_path, field)`` for every field, depth-first.
-
-    Nested struct fields get dotted paths ``parent.child`` (reference diff recursion,
-    ``diff.py:169-180``). List/map element types are not descended into — matching the
-    reference, which treats a list/map as a single leaf type.
-    """
-    for f in struct.fields:
-        path = f"{prefix}{f.name}"
-        yield path, f
-        if isinstance(f.type, StructType):
-            yield from iter_fields(f.type, prefix=f"{path}.")
-
-
-def max_field_id(t: IcebergType) -> int:
-    """Highest field ID used anywhere in the type tree (0 if none)."""
-    if isinstance(t, StructType):
-        out = 0
-        for f in t.fields:
-            out = max(out, f.field_id, max_field_id(f.type))
-        return out
-    if isinstance(t, ListType):
-        return max(t.element_id, max_field_id(t.element))
-    if isinstance(t, MapType):
-        return max(t.key_id, t.value_id, max_field_id(t.key), max_field_id(t.value))
-    return 0
 
 
 def primitive(name: str) -> PrimitiveType:

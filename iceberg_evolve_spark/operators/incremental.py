@@ -9,11 +9,10 @@ a sketch instead (``functions/sketch.py``: KMV for distinct, CMS for
 frequencies — both mergeable by construction).
 
 This is the batch half of the incremental story; the streaming half is
-``streaming/sink.py`` (foreachBatch upsert = the same merge driven by a
-stream). Scale shape: the delta aggregates first (map-side combine over the
-small delta), then one key-partitioned full-outer join against the base — the
-base is never rescanned, only shuffled on the same key it is already keyed by
-(a bucketed base table skips even that, see ``sources/bucketing.py``).
+``streaming/sink.py`` (foreachBatch merge-on-read CDC commits). Scale shape:
+the delta aggregates first (map-side combine over the small delta), then one
+key-partitioned full-outer join against the base — the base is never
+rescanned, only shuffled on the same key it is already keyed by.
 """
 
 from __future__ import annotations

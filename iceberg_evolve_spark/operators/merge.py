@@ -9,13 +9,12 @@ transactional table format.
   merge into a full snapshot replace).
 
 Shape: ONE full-outer shuffle join on the key, then a coalesce projection —
-no driver loops, no collects. At 100 TB both sides hash-partition on the key;
-if the target is bucketed by the key (sources/bucketing.py) its half of the
-shuffle disappears. Against a real Iceberg catalog the same call site would
-emit ``MERGE INTO`` and let the format do copy-on-write/merge-on-read; this
-operator is the engine-level equivalent for raw parquet lakes, and composes
-with the schema engine: run ``migrate_dataframe`` on the updates first when
-their schema is a newer version of the target's.
+no driver loops, no collects. At 100 TB both sides hash-partition on the key.
+Against a real Iceberg catalog the same call site would emit ``MERGE INTO``
+and let the format do copy-on-write/merge-on-read; this operator is the
+engine-level equivalent for raw parquet lakes, and composes with the schema
+engine: run ``migrate_dataframe`` on the updates first when their schema is a
+newer version of the target's.
 """
 
 from __future__ import annotations

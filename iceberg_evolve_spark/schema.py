@@ -173,7 +173,6 @@ class Schema:
             MoveColumn,
             RenameColumn,
             SetNullability,
-            UnionSchema,
             UpdateColumn,
         )
 
@@ -184,12 +183,6 @@ class Schema:
         )
         ops = diff.to_evolution_operations()
 
-        if any(isinstance(op, UnionSchema) for op in ops):
-            raise NotImplementedError(
-                "UnionSchema operations cannot be applied; use match_by='name' "
-                "to plan per-field adds/updates instead (reference schema.py:195-198)"
-            )
-
         if not quiet:
             for op in ops:
                 op.display()
@@ -197,27 +190,7 @@ class Schema:
         if dry_run:
             return ops
 
-        unsupported = [op for op in ops if not op.is_supported]
-        if unsupported:
-            if strict:
-                raise ValueError(
-                    "Unsupported operations present (strict mode): "
-                    + ", ".join(op.pretty() for op in unsupported)
-                )
-            for op in unsupported:
-                warnings.warn(
-                    f"Skipping unsupported operation: {op.pretty()}",
-                    UnsupportedSchemaEvolutionWarning,
-                    stacklevel=2,
-                )
-            ops = [op for op in ops if op.is_supported]
-
-        breaking = [op for op in ops if op.is_breaking()]
-        if breaking and not allow_breaking:
-            raise ValueError(
-                "Breaking operations present (pass allow_breaking=True to apply): "
-                + ", ".join(op.pretty() for op in breaking)
-            )
+        ops = gate_operations(ops, strict=strict, allow_breaking=allow_breaking)
 
         phase1 = [op for op in ops if isinstance(op, RenameColumn)]
         phase2 = [
@@ -237,3 +210,33 @@ class Schema:
             if applied is not None:
                 return applied
         return ops
+
+
+def gate_operations(ops: list, *, strict: bool = True, allow_breaking: bool = False) -> list:
+    """The evolve gate shared by :meth:`Schema.evolve` and
+    ``SnapshotTable.evolve_schema``. Unsupported ops raise under ``strict``
+    (reference ``schema.py:215-224``) and are warned about and skipped
+    otherwise; breaking ops raise unless ``allow_breaking``
+    (``schema.py:226-231``). Returns the ops to apply."""
+    unsupported = [op for op in ops if not op.is_supported]
+    if unsupported:
+        if strict:
+            raise ValueError(
+                "Unsupported operations present (strict mode): "
+                + ", ".join(op.pretty() for op in unsupported)
+            )
+        for op in unsupported:
+            warnings.warn(
+                f"Skipping unsupported operation: {op.pretty()}",
+                UnsupportedSchemaEvolutionWarning,
+                stacklevel=3,
+            )
+        ops = [op for op in ops if op.is_supported]
+
+    breaking = [op for op in ops if op.is_breaking()]
+    if breaking and not allow_breaking:
+        raise ValueError(
+            "Breaking operations present (pass allow_breaking=True to apply): "
+            + ", ".join(op.pretty() for op in breaking)
+        )
+    return ops

@@ -47,6 +47,10 @@ _MISSING = object()
 
 def type_from_json(obj: Any, source: str = _SOURCE) -> IcebergType:
     """Parse a type descriptor: a primitive/decimal string or a nested dict."""
+    return _type(obj, source, set())
+
+
+def _type(obj: Any, source: str, ids: set[int]) -> IcebergType:
     if isinstance(obj, str):
         prim = PRIMITIVE_TYPES.get(obj)
         if prim is not None:
@@ -61,7 +65,7 @@ def type_from_json(obj: Any, source: str = _SOURCE) -> IcebergType:
     if kind == "struct":
         if "fields" not in obj:
             raise SchemaParseError(source, "struct type missing 'fields'")
-        return StructType([field_from_json(f, source) for f in obj["fields"]])
+        return StructType([_field(f, source, ids) for f in obj["fields"]])
     if kind == "list":
         if "element-id" not in obj:
             raise SchemaParseError(source, "list type missing 'element-id'")
@@ -69,7 +73,7 @@ def type_from_json(obj: Any, source: str = _SOURCE) -> IcebergType:
             raise SchemaParseError(source, "list type missing 'element'")
         return ListType(
             element_id=int(obj["element-id"]),
-            element=type_from_json(obj["element"], source),
+            element=_type(obj["element"], source, ids),
             element_required=bool(obj.get("element-required", False)),
         )
     if kind == "map":
@@ -78,15 +82,15 @@ def type_from_json(obj: Any, source: str = _SOURCE) -> IcebergType:
                 raise SchemaParseError(source, f"map type missing {key!r}")
         return MapType(
             key_id=int(obj["key-id"]),
-            key=type_from_json(obj["key"], source),
+            key=_type(obj["key"], source, ids),
             value_id=int(obj["value-id"]),
-            value=type_from_json(obj["value"], source),
+            value=_type(obj["value"], source, ids),
             value_required=bool(obj.get("value-required", False)),
         )
     raise SchemaParseError(source, f"unknown complex type {kind!r}")
 
 
-def field_from_json(obj: Any, source: str = _SOURCE) -> Field:
+def _field(obj: Any, source: str, ids: set[int]) -> Field:
     if not isinstance(obj, dict):
         raise SchemaParseError(source, f"field must be a dict, got {type(obj).__name__}")
     get = obj.get
@@ -98,12 +102,19 @@ def field_from_json(obj: Any, source: str = _SOURCE) -> Field:
     if ftype is _MISSING:
         raise SchemaParseError(source, f"field {name!r} missing 'type'")
     fid, name = int(fid), str(name)
-    # A str leaf is almost always a primitive: skip the type_from_json call.
+    # Struct field ids are unique within one document (the diff keys fields
+    # by id, so a repeated id would hide a dropped column). Element, key and
+    # value ids are not checked: the reference's own users_renamed fixture
+    # gives a list the same element id as its field, and nothing keys on them.
+    if fid in ids:
+        raise SchemaParseError(source, f"duplicate field id {fid}")
+    ids.add(fid)
+    # A str leaf is almost always a primitive: skip the _type call.
     type_ = PRIMITIVE_TYPES.get(ftype) if ftype.__class__ is str else None
     return Field(
         fid,
         name,
-        type_ or type_from_json(ftype, source),
+        type_ or _type(ftype, source, ids),
         bool(get("required", False)),
         get("doc"),
         # Iceberg v3 default values (spec keys: initial-default/write-default)
@@ -120,7 +131,8 @@ def schema_from_json(data: Any, source: str = _SOURCE) -> tuple[StructType, int]
         raise SchemaParseError(source, f"top-level type must be 'struct', got {data.get('type')!r}")
     if "fields" not in data:
         raise SchemaParseError(source, "schema missing 'fields'")
-    struct = StructType([field_from_json(f, source) for f in data["fields"]])
+    ids: set[int] = set()
+    struct = StructType([_field(f, source, ids) for f in data["fields"]])
     return struct, int(data.get("schema-id", 0))
 
 

@@ -51,17 +51,15 @@ def evolve_partition_spec(
     spark: SparkSession,
     path: str,
     new_spec: dict[str, Column | str],
-    drop_derived: bool = False,
 ) -> int:
     """Rewrite the layout at ``path`` under ``new_spec`` (ordered mapping
     column name → expression; plain strings reference existing columns).
     Returns the number of partition directories in the new layout.
 
     Derived columns are added before the write and kept in the data
-    (matching Spark's partition-column round-trip on read); pass
-    ``drop_derived=False`` to keep reads schema-stable across the
-    evolution. The swap is atomic-per-rename: readers see the old layout
-    until the final rename lands."""
+    (matching Spark's partition-column round-trip on read). The swap is
+    atomic-per-rename: readers see the old layout until the final rename
+    lands."""
     _swap.recover(path)
     df = spark.read.parquet(path)
     for name, expr in new_spec.items():
@@ -70,12 +68,6 @@ def evolve_partition_spec(
                 df = df.withColumn(name, F.col(expr))
         elif name not in df.columns:
             df = df.withColumn(name, expr)
-    if drop_derived:
-        # partitionBy columns must exist in df; dropping happens on read-side
-        raise NotImplementedError(
-            "drop_derived would change the read schema across the evolution; "
-            "keep derived partition columns in the data"
-        )
     tmp = path.rstrip("/") + "._spec_tmp"
     write_partitioned(df, tmp, list(new_spec.keys()))
     _swap.swap(tmp, path)

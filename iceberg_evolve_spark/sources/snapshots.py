@@ -727,7 +727,7 @@ class SnapshotTable:
         the new head resolve OLD file generations by field id
         automatically; time-travel reads of old versions use their own
         recorded schema. Returns the new version number."""
-        from iceberg_evolve_spark.operators.evolution import UnionSchema
+        from iceberg_evolve_spark.schema import gate_operations
         from iceberg_evolve_spark.serializer import schema_to_json
 
         entries = self.versions()
@@ -755,23 +755,7 @@ class SnapshotTable:
         ops = diff.to_evolution_operations()
         if not ops:
             return cur["version"]  # no-op: no empty commits
-        if any(isinstance(op, UnionSchema) for op in ops):
-            raise NotImplementedError(
-                "UnionSchema operations cannot be applied; use "
-                "match_by='name' to plan per-field adds/updates instead"
-            )
-        unsupported = [op for op in ops if not op.is_supported]
-        if unsupported:
-            raise ValueError(
-                "Unsupported operations present: "
-                + ", ".join(op.pretty() for op in unsupported)
-            )
-        breaking = [op for op in ops if op.is_breaking()]
-        if breaking and not allow_breaking:
-            raise ValueError(
-                "Breaking operations present (pass allow_breaking=True): "
-                + ", ".join(op.pretty() for op in breaking)
-            )
+        gate_operations(ops, allow_breaking=allow_breaking)
         self._gate_schema_change(cur, ops)
 
         def _ids(node) -> "list[int]":

@@ -1,10 +1,11 @@
 """Crash-safe directory snapshot swap.
 
-The rename discipline used by the compactor and the streaming upsert sink:
-write the new snapshot to a sibling temp dir, move the live dir aside, move the
-temp dir into place, drop the old one. The two renames are not atomic together
-— a crash between them leaves NO live directory, which a naive reader would
-treat as "empty state" and silently discard all history. ``recover`` closes
+The rename discipline used by the compactor (``sources/compact.py``) and the
+partition-spec rewrite (``sources/partitions.py``): write the new snapshot to
+a sibling temp dir, move the live dir aside, move the temp dir into place, drop
+the old one. The two renames are not atomic together — a crash between them
+leaves NO live directory, which a naive reader would treat as "empty state"
+and silently discard all history. ``recover`` closes
 that window: callers invoke it before reading the target, restoring the
 ``._old`` sibling if the swap died half-way. (On object stores rename is a
 copy; there the fix is a manifest/pointer flip, which is what table formats

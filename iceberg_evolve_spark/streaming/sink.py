@@ -1,18 +1,12 @@
-"""Exactly-once-shaped streaming sink: foreachBatch + idempotent upsert.
+"""Exactly-once-effect streaming CDC sink: foreachBatch + merge-on-read commits.
 
 Structured Streaming's ``foreachBatch`` gives at-least-once batch delivery —
 a crashed batch replays with the SAME ``batch_id``. Exactly-once *effects*
-therefore need the write to be idempotent. Two standard shapes:
-
-* key-idempotent (this module): merge each micro-batch into the target by a
-  business key (``operators.merge.merge_upsert``). A replayed batch merges the
-  same keys to the same values — converges to the same state.
-* transactional: write batch output + batch_id atomically (table formats).
-
-The target here is a plain parquet directory snapshot, rewritten per batch via
-the safe-swap rename discipline (see ``sources/compact.py``). At scale, the
-target is an Iceberg/Delta table and MERGE INTO does the swap; the call-site
-shape is identical.
+therefore need the write to be idempotent. This module applies each
+micro-batch of CDC envelopes to a ``SnapshotTable`` as an equality-delete
+commit plus a fast-append commit, and stamps the batch id into the commit
+notes so a replayed batch is recognised and skipped (see
+``mor_cdc_batch_writer``).
 """
 
 from __future__ import annotations
@@ -21,118 +15,6 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-
-from iceberg_evolve_spark.sources import swap as _swap
-
-
-def upsert_batch_writer(
-    spark: SparkSession,
-    target_path: str,
-    key: str,
-    order_col: str | None = None,
-):
-    """Build a ``foreachBatch`` function that merges every micro-batch into
-    the parquet snapshot at ``target_path`` by ``key``.
-
-    A micro-batch can carry several rows for one key. With ``order_col`` the
-    winner is deterministic — the row with the greatest ``order_col`` (an
-    event-time / sequence column), ties broken arbitrarily-but-stably by the
-    key ordering of the remaining columns. Without it, which row survives is
-    UNDEFINED (Spark's ``dropDuplicates`` keeps an arbitrary one); pass an
-    ordering column whenever replay determinism matters.
-    """
-    from iceberg_evolve_spark.operators.merge import merge_upsert
-
-    def write(batch_df: DataFrame, batch_id: int) -> None:
-        if order_col is not None:
-            w = Window.partitionBy(key).orderBy(F.col(order_col).desc())
-            batch_df = (
-                batch_df.withColumn("_rn", F.row_number().over(w))
-                .filter(F.col("_rn") == 1)
-                .drop("_rn")
-            )
-        else:
-            batch_df = batch_df.dropDuplicates([key])  # arbitrary within-batch winner
-        _swap.recover(target_path)  # heal a half-finished swap from a crash
-        if os.path.isdir(target_path):
-            target = spark.read.parquet(target_path)
-            merged = merge_upsert(target, batch_df.select(target.columns), key)
-        else:
-            merged = batch_df
-        tmp = target_path.rstrip("/") + f"._batch_{batch_id}_tmp"
-        merged.write.mode("overwrite").parquet(tmp)
-        _swap.swap(tmp, target_path)
-
-    return write
-
-
-def run_upsert_stream(
-    stream: DataFrame,
-    target_path: str,
-    key: str,
-    checkpoint: str,
-    order_col: str | None = None,
-):
-    """Start the stream with the idempotent upsert sink. The checkpoint dir
-    makes batch replay use stable batch_ids across restarts."""
-    return (
-        stream.writeStream.foreachBatch(
-            upsert_batch_writer(stream.sparkSession, target_path, key, order_col)
-        )
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-        .start()
-    )
-
-
-def cdc_batch_writer(
-    spark: SparkSession,
-    target_path: str,
-    key: str,
-    op_col: str = "op",
-    order_col: str = "ts_ms",
-):
-    """``foreachBatch`` CDC apply — the streaming twin of
-    ``operators/cdc.py:apply_cdc``: each micro-batch carries upserts
-    (``op`` = 'c'/'u', full row) AND deletes ('d'), reduced to the last
-    change per key (event-time; delete beats upsert on ties — same total
-    order as the batch operator), then applied to the parquet snapshot via
-    the same crash-safe swap.
-
-    Replay safety is the same key-idempotent argument as the upsert sink:
-    re-applying a batch's final per-key changes to the already-changed
-    snapshot converges to the identical state (upserts overwrite with the
-    same values; deletes of absent keys are no-ops) — so at-least-once
-    delivery yields exactly-once effects with no batch markers."""
-
-    def write(batch_df: DataFrame, batch_id: int) -> None:
-        w = Window.partitionBy(key).orderBy(
-            F.col(order_col).desc(),
-            (F.col(op_col) == "d").cast("int").desc(),
-            F.col(op_col).desc(),
-        )
-        last = (
-            batch_df.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
-        _swap.recover(target_path)
-        # op and the event-time ordinal are envelope METADATA — the snapshot
-        # holds the row payload only
-        data_cols = [c for c in last.columns if c not in (op_col, order_col)]
-        upserts = last.filter(F.col(op_col) != "d").select(*data_cols)
-        dropped_keys = last.select(key)
-        if os.path.isdir(target_path):
-            target = spark.read.parquet(target_path)
-            survivors = target.join(dropped_keys, key, "left_anti")
-            merged = survivors.unionByName(upserts.select(target.columns))
-        else:
-            merged = upserts
-        tmp = target_path.rstrip("/") + f"._batch_{batch_id}_tmp"
-        merged.write.mode("overwrite").parquet(tmp)
-        _swap.swap(tmp, target_path)
-
-    return write
 
 
 def mor_cdc_batch_writer(
@@ -144,9 +26,12 @@ def mor_cdc_batch_writer(
     max_delete_files: int | None = None,
     delete_mode: str = "rewrite",
 ):
-    """``foreachBatch`` CDC apply with MERGE-ON-READ commits (VERDICT r7
-    task 5): instead of rewriting the parquet snapshot per batch (the swap
-    path above — correct, but O(table) per batch), each micro-batch lands as
+    """``foreachBatch`` CDC apply — the streaming twin of
+    ``operators/cdc.py:apply_cdc``: each micro-batch carries upserts
+    (``op`` = 'c'/'u', full row) AND deletes ('d'), reduced to the last
+    change per key (event-time; delete beats upsert on ties — same total
+    order as the batch operator). Instead of rewriting the table per batch
+    (O(table) per batch), each micro-batch lands with MERGE-ON-READ commits as
 
     1. ONE equality-delete commit (``SnapshotTable.delete_by_key``) retiring
        every changed key — delete envelopes AND the superseded versions of
@@ -279,28 +164,6 @@ def run_mor_cdc_stream(
             mor_cdc_batch_writer(
                 stream.sparkSession, table_path, key, op_col, order_col,
                 max_delete_files=max_delete_files, delete_mode=delete_mode,
-            )
-        )
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-        .start()
-    )
-
-
-def run_cdc_stream(
-    stream: DataFrame,
-    target_path: str,
-    key: str,
-    checkpoint: str,
-    op_col: str = "op",
-    order_col: str = "ts_ms",
-):
-    """Start a CDC-apply stream (availableNow-compatible; see
-    ``cdc_batch_writer``)."""
-    return (
-        stream.writeStream.foreachBatch(
-            cdc_batch_writer(
-                stream.sparkSession, target_path, key, op_col, order_col
             )
         )
         .option("checkpointLocation", checkpoint)

@@ -29,21 +29,13 @@ def users_new():
 
 @pytest.fixture(scope="session")
 def spark():
-    """Session-scoped local Spark. Config mirrors the driver's bench environment."""
-    from pyspark.sql import SparkSession
+    """Session-scoped local Spark from the engine's own factory, so tests run
+    under the configuration the entries and the benchmark use. The test JVM
+    heap stays at 4g unless ``SPARK_GRAFT_DRIVER_MEM`` says otherwise."""
+    from iceberg_evolve_spark.sources import get_session
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "4")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("iceberg-evolve-spark-tests")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "4g")
-        .getOrCreate()
-    )
+    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "4g")
+    spark = get_session(app_name="iceberg-evolve-spark-tests")
     yield spark
     spark.stop()
 

@@ -166,88 +166,3 @@ class TestRangeJoin:
             if i[2] <= p[2] <= i[3]
         )
         assert got == want
-
-
-class TestAsofBucketed:
-    def test_matches_plain_asof_on_random_data(self, spark):
-        import random
-
-        from iceberg_evolve_spark.functions.asof import asof_join, asof_join_bucketed
-
-        rng = random.Random(7)
-        # skewed: key 1 gets 10x the rows; ts in [0, 10_000_000)
-        lrows = [
-            (i, rng.choice([1] * 10 + [2, 3, 4]), rng.randrange(0, 10_000_000))
-            for i in range(400)
-        ]
-        rrows_raw = {}
-        for _ in range(300):
-            k = rng.choice([1] * 10 + [2, 3, 4])
-            t = rng.randrange(0, 10_000_000)
-            rrows_raw[(k, t)] = rng.random()  # dedupe (key, ts): deterministic
-        rrows = [(k, t, round(v, 6)) for (k, t), v in rrows_raw.items()]
-        left = spark.createDataFrame(lrows, "eid long, k long, ts long")
-        right = spark.createDataFrame(rrows, "k long, ts long, px double")
-
-        plain = {
-            r.eid: r.px_asof
-            for r in asof_join(left, right, on="k").collect()
-        }
-        bucketed = {
-            r.eid: r.px_asof
-            for r in asof_join_bucketed(
-                left, right, on="k", bucket_seconds=500_000
-            ).collect()
-        }
-        assert plain == bucketed
-
-    def test_bucket_width_does_not_change_result(self, spark):
-        from iceberg_evolve_spark.functions.asof import asof_join_bucketed
-
-        left = spark.createDataFrame(
-            [(1, 1, 100), (2, 1, 999_999), (3, 1, 1_000_001)], "eid long, k long, ts long"
-        )
-        right = spark.createDataFrame([(1, 50, 1.5)], "k long, ts long, px double")
-        for w in (10, 1000, 10_000_000):
-            got = {
-                r.eid: r.px_asof
-                for r in asof_join_bucketed(left, right, on="k", bucket_seconds=w).collect()
-            }
-            assert got == {1: 1.5, 2: 1.5, 3: 1.5}, w
-
-
-class TestCogroupAsof:
-    def test_cogroup_asof_matches_window_asof(self, spark):
-        """The cogrouped-applyInPandas alignment agrees with the JVM window
-        formulation on random-ish data."""
-        from datetime import datetime, timedelta
-
-        from iceberg_evolve_spark.functions.asof import asof_join
-        from iceberg_evolve_spark.functions.udxf import cogroup_asof_align
-
-        base = datetime(2024, 1, 1)
-        left = spark.createDataFrame(
-            [(i % 7, base + timedelta(minutes=3 * i), i) for i in range(200)],
-            "k long, ts timestamp, lval long",
-        )
-        right = spark.createDataFrame(
-            [(i % 7, base + timedelta(minutes=5 * i), 10 * i) for i in range(80)],
-            "k long, ts timestamp, rval long",
-        )
-        got = cogroup_asof_align(left, right, "k", right_cols=("rval",))
-        want = asof_join(left, right, on="k", left_ts="ts", right_ts="ts", right_cols=["rval"])
-        g = {(r.k, r.ts): r.rval for r in got.collect()}
-        w = {(r.k, r.ts): r.rval_asof for r in want.collect()}
-        assert g == w and len(g) == 200
-
-    def test_cogroup_asof_no_right_rows(self, spark):
-        from datetime import datetime
-
-        from iceberg_evolve_spark.functions.udxf import cogroup_asof_align
-
-        left = spark.createDataFrame(
-            [(1, datetime(2024, 1, 1), 5)], "k long, ts timestamp, lval long"
-        )
-        right = spark.createDataFrame([], "k long, ts timestamp, rval long")
-        rows = cogroup_asof_align(left, right, "k", right_cols=("rval",)).collect()
-        assert len(rows) == 1 and rows[0].rval is None

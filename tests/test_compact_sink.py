@@ -1,14 +1,7 @@
-import glob
 import os
-import shutil
-import tempfile
-
-import pytest
-from pyspark.sql import functions as F
 
 from iceberg_evolve_spark.sources.compact import compact, dir_stats
 from iceberg_evolve_spark.sources.tables import load_table
-from iceberg_evolve_spark.streaming.sink import run_upsert_stream
 
 
 class TestCompact:
@@ -24,55 +17,6 @@ class TestCompact:
         after = spark.read.parquet(d)
         assert after.count() == rows_before
         assert sorted(after.columns) == sorted(li.columns)
-
-
-class TestUpsertSink:
-    def test_stream_upserts_by_key(self, spark, tmp_path_factory):
-        base = str(tmp_path_factory.mktemp("sink"))
-        src, tgt, ckpt = f"{base}/src", f"{base}/tgt", f"{base}/ckpt"
-        os.makedirs(src)
-
-        def feed(rows, name):
-            df = spark.createDataFrame(rows, "k long, v string")
-            stage = f"{base}/_stage"
-            df.coalesce(1).write.mode("overwrite").parquet(stage)
-            shutil.copy(glob.glob(f"{stage}/part-*.parquet")[0], f"{src}/{name}.parquet")
-
-        feed([(1, "a"), (2, "b")], "b1")
-        stream = spark.readStream.schema("k long, v string").option(
-            "maxFilesPerTrigger", "1"
-        ).parquet(src)
-        q = run_upsert_stream(stream, tgt, key="k", checkpoint=ckpt)
-        try:
-            q.processAllAvailable()
-            feed([(2, "b2"), (3, "c")], "b2")  # update k=2, insert k=3
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        got = sorted(tuple(r) for r in spark.read.parquet(tgt).collect())
-        assert got == [(1, "a"), (2, "b2"), (3, "c")]
-
-    def test_within_batch_winner_is_deterministic_with_order_col(self, spark, tmp_path_factory):
-        """One micro-batch carrying several updates for a key must persist the
-        row with the greatest order column, not an arbitrary one."""
-        base = str(tmp_path_factory.mktemp("sinkdet"))
-        src, tgt, ckpt = f"{base}/src", f"{base}/tgt", f"{base}/ckpt"
-        os.makedirs(src)
-        df = spark.createDataFrame(
-            [(1, 10, "old"), (1, 30, "newest"), (1, 20, "mid"), (2, 5, "only")],
-            "k long, seq long, v string",
-        )
-        stage = f"{base}/_stage"
-        df.coalesce(1).write.mode("overwrite").parquet(stage)
-        shutil.copy(glob.glob(f"{stage}/part-*.parquet")[0], f"{src}/b1.parquet")
-        stream = spark.readStream.schema("k long, seq long, v string").parquet(src)
-        q = run_upsert_stream(stream, tgt, key="k", checkpoint=ckpt, order_col="seq")
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        got = {r.k: r.v for r in spark.read.parquet(tgt).collect()}
-        assert got == {1: "newest", 2: "only"}
 
 
 class TestSwapRecovery:
@@ -99,69 +43,3 @@ class TestSwapRecovery:
         swap.swap(tmp, tgt)
         assert spark.read.parquet(tgt).count() == 7
         assert not os.path.exists(tgt + "._old")
-
-
-class TestCdcSink:
-    def test_stream_applies_upserts_and_deletes(self, spark, tmp_path_factory):
-        import glob
-        import shutil
-
-        from iceberg_evolve_spark.streaming.sink import run_cdc_stream
-
-        base = str(tmp_path_factory.mktemp("cdcsink"))
-        src, tgt, ckpt = f"{base}/src", f"{base}/tgt", f"{base}/ckpt"
-        os.makedirs(src)
-
-        def feed(rows, name):
-            df = spark.createDataFrame(rows, "k long, v string, op string, ts_ms long")
-            stage = f"{base}/_stage"
-            df.coalesce(1).write.mode("overwrite").parquet(stage)
-            shutil.copy(glob.glob(f"{stage}/part-*.parquet")[0], f"{src}/{name}.parquet")
-
-        feed([(1, "a", "c", 1), (2, "b", "c", 1)], "b1")
-        stream = spark.readStream.schema(
-            "k long, v string, op string, ts_ms long"
-        ).option("maxFilesPerTrigger", "1").parquet(src)
-        q = run_cdc_stream(stream, tgt, key="k", checkpoint=ckpt)
-        try:
-            q.processAllAvailable()
-            # batch 2: update k=1, delete k=2, insert k=3; k=3 also carries a
-            # same-ts superseded upsert + delete tie — delete must win the tie
-            feed(
-                [
-                    (1, "a2", "u", 5),
-                    (2, "b", "d", 5),
-                    (3, "c1", "c", 5),
-                    (3, "c2", "d", 5),
-                ],
-                "b2",
-            )
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        got = sorted(tuple(r) for r in spark.read.parquet(tgt).collect())
-        assert got == [(1, "a2")]
-
-    def test_replayed_cdc_batch_is_noop(self, spark, tmp_path_factory):
-        """Key-idempotence: applying the same micro-batch's final changes
-        twice converges to the same snapshot (at-least-once delivery =>
-        exactly-once effects, no batch markers)."""
-        from iceberg_evolve_spark.streaming.sink import cdc_batch_writer
-
-        base = str(tmp_path_factory.mktemp("cdcreplay"))
-        tgt = f"{base}/tgt"
-        batch = spark.createDataFrame(
-            [(1, "x", "u", 9), (2, "y", "d", 9), (3, "z", "c", 9)],
-            "k long, v string, op string, ts_ms long",
-        )
-        seed = spark.createDataFrame(
-            [(1, "old", "c", 0), (2, "old2", "c", 0)],
-            "k long, v string, op string, ts_ms long",
-        )
-        w = cdc_batch_writer(spark, tgt, key="k")
-        w(seed, 0)
-        w(batch, 1)
-        state1 = sorted(tuple(r) for r in spark.read.parquet(tgt).collect())
-        w(batch, 1)  # replay the SAME batch
-        state2 = sorted(tuple(r) for r in spark.read.parquet(tgt).collect())
-        assert state1 == state2 == [(1, "x"), (3, "z")]

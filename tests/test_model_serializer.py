@@ -163,6 +163,35 @@ class TestIcebergJsonRoundTrip:
         msg = self._message(type_from_json, {"type": "map", "key-id": 1, "key": "string", "value": "int"})
         assert msg == "map type missing 'value-id'"
 
+    def test_duplicate_field_id_raises(self):
+        # Two top-level fields sharing id 1: the diff keys fields by id, so
+        # accepting this would hide column `a`'s removal behind a rename.
+        doc = self._fields(
+            {"id": 1, "name": "a", "required": False, "type": "int"},
+            {"id": 1, "name": "b", "required": False, "type": "string"},
+        )
+        assert self._message(schema_from_json, doc) == "duplicate field id 1"
+
+    @pytest.mark.parametrize(
+        "nested",
+        [
+            # nested struct field reuses a top-level id
+            {"type": "struct", "fields": [{"id": 1, "name": "x", "type": "int"}]},
+            # struct inside a list element reuses a top-level id
+            {"type": "list", "element-id": 3, "element": {
+                "type": "struct", "fields": [{"id": 1, "name": "x", "type": "int"}]}},
+            # struct inside a map value reuses its parent's id
+            {"type": "map", "key-id": 3, "key": "string", "value-id": 4, "value": {
+                "type": "struct", "fields": [{"id": 2, "name": "x", "type": "int"}]}},
+        ],
+    )
+    def test_nested_duplicate_id_raises(self, nested):
+        doc = self._fields(
+            {"id": 1, "name": "a", "type": "int"},
+            {"id": 2, "name": "n", "type": nested},
+        )
+        assert self._message(schema_from_json, doc).startswith("duplicate field id ")
+
 
 class TestSqlTypeParser:
     def test_split_top_level(self):

@@ -65,10 +65,3 @@ class TestPartitionEvolution:
 
         assert _swap.recover(d) is True
         assert partition_dirs(d) == ["status=A", "status=B"]
-
-    def test_drop_derived_refuses(self, spark, lake):
-        d, _ = lake
-        with pytest.raises(NotImplementedError):
-            evolve_partition_spec(
-                spark, d, {"status": "status"}, drop_derived=True
-            )

@@ -202,7 +202,12 @@ class TestMorCdcStream:
             [(k, f"v{k}", "c", 10 + k) for k in range(10)],
             [(k, f"u{k}", "u", 100 + k) for k in range(0, 6, 2)]
             + [(7, None, "d", 107)],
-            [(1, None, "d", 201), (1, "back", "c", 205), (99, "nine", "c", 209)],
+            [(1, None, "d", 201), (1, "back", "c", 205), (99, "nine", "c", 209)]
+            # several changes for one key, out of ts order: the greatest
+            # ts wins, not the first or last row of the batch
+            + [(3, "old", "u", 210), (3, "newest", "u", 230), (3, "mid", "u", 220)]
+            # upsert/delete tie on ts: the delete wins
+            + [(8, "e1", "u", 215), (8, None, "d", 215)],
         ]
         t = self._run(spark, tdir, waves)
         streamed = sorted(
@@ -213,7 +218,9 @@ class TestMorCdcStream:
         env = spark.createDataFrame(
             [r for w in waves for r in w], CDC_SCHEMA
         )
-        w = Window.partitionBy("k").orderBy(F.col("ts_ms").desc())
+        w = Window.partitionBy("k").orderBy(
+            F.col("ts_ms").desc(), (F.col("op") == "d").cast("int").desc()
+        )
         batch = (
             env.withColumn("_rn", F.row_number().over(w))
             .filter("_rn = 1 AND op != 'd'")
@@ -221,6 +228,7 @@ class TestMorCdcStream:
         )
         expected = sorted((r["k"], r["val"]) for r in batch.collect())
         assert streamed == expected
+        assert (3, "newest") in streamed and 8 not in {k for k, _ in streamed}
         # MOR-ness: multiple commits, equality-delete files attached, and
         # appended (s-prefixed) data files present
         assert len(t.versions()) >= 3

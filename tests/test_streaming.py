@@ -104,751 +104,3 @@ class TestStreamingSessionWindow:
         plan = out._jdf.queryExecution().analyzed().toString()
         assert "EventTimeWatermark" in plan
         assert "45 minutes" in plan
-
-
-ROWS_BATCH2 = [
-    # user 1 event far in the future: advances the watermark past every
-    # earlier session's (last + gap), firing the event-time timeouts
-    (5, "2024-01-02 09:00:00", 99, "click", 0.5),
-]
-
-
-class TestStatefulSessionize:
-    def test_sessions_close_on_gap_and_timeout(self, spark, stream_dir):
-        from iceberg_evolve_spark.streaming.stateful import stateful_sessionize
-
-        src = stream_dir + "/data"
-        _write_batch(spark, src, ROWS_BATCH1, "b1")
-        stream = (
-            spark.readStream.schema(EVENTS_SCHEMA)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
-        out = stateful_sessionize(stream, gap_minutes=30, watermark_minutes=10)
-        q = (
-            out.writeStream.format("memory")
-            .queryName("stateful_out")
-            .outputMode("append")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-            _write_batch(spark, src, ROWS_BATCH2, "b2")
-            q.processAllAvailable()
-            # one more empty-ish pass so timeout-only microbatch runs
-            _write_batch(spark, src, [(6, "2024-01-02 10:00:00", 99, "x", 0.0)], "b3")
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        rows = spark.sql(
-            "SELECT user_id, n_events, total_value, first_type, last_type "
-            "FROM stateful_out WHERE user_id < 99"
-        ).collect()
-        got = sorted((r.user_id, r.n_events, r.total_value, r.first_type, r.last_type) for r in rows)
-        # user 1: session (10:00,10:10)x2 clicks closed by the 12:00 event's gap
-        # OR by timeout; the 12:00 view session closed by timeout; user 2: one.
-        assert got == [
-            (1, 1, 3.0, "view", "view"),
-            (1, 2, 3.0, "click", "click"),
-            (2, 1, 4.0, "click", "click"),
-        ]
-
-
-class TestStreamingDedup:
-    def test_dropduplicates_within_watermark(self, spark, stream_dir):
-        from iceberg_evolve_spark.streaming.dedup_stream import (
-            dedup_stream_by_content,
-            dedup_stream_exact,
-        )
-
-        src = stream_dir + "/data"
-        # event 2 duplicates event 1's id within the window; event 4 is a
-        # replay of event 1's payload under a fresh id
-        rows = [
-            (1, "2024-01-01 10:00:00", 1, "click", 1.0),
-            (1, "2024-01-01 10:01:00", 1, "click", 1.0),
-            (3, "2024-01-01 10:02:00", 2, "view", 2.0),
-            (4, "2024-01-01 10:03:00", 1, "click", 9.0),
-        ]
-        _write_batch(spark, src, rows, "b1")
-        stream = spark.readStream.schema(EVENTS_SCHEMA).parquet(src)
-        q = (
-            dedup_stream_exact(stream, key_cols=["event_id"], watermark="5 minutes")
-            .writeStream.format("memory")
-            .queryName("dedup_exact_out")
-            .outputMode("append")
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-        got = sorted(r.event_id for r in spark.sql("SELECT event_id FROM dedup_exact_out").collect())
-        assert got == [1, 3, 4]
-
-        # content-keyed: event_type+value fingerprint (use event_type col as content)
-        stream2 = spark.readStream.schema(EVENTS_SCHEMA).parquet(src)
-        q2 = (
-            dedup_stream_by_content(stream2, content_col="event_type", watermark="5 minutes")
-            .writeStream.format("memory")
-            .queryName("dedup_content_out")
-            .outputMode("append")
-            .start()
-        )
-        q2.processAllAvailable()
-        q2.stop()
-        types = sorted(
-            r.event_type for r in spark.sql("SELECT event_type FROM dedup_content_out").collect()
-        )
-        assert types == ["click", "view"]
-
-
-class TestStreamStaticEnrichment:
-    def _run_append_stream(self, spark, src, transform, out_name):
-        stream = (
-            spark.readStream.schema(EVENTS_SCHEMA)
-            .option("maxFilesPerTrigger", "10")
-            .parquet(src)
-        )
-        q = (
-            transform(stream)
-            .writeStream.format("memory")
-            .queryName(out_name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        return spark.sql(f"SELECT * FROM {out_name}")
-
-    def test_enrich_stream_with_static_dim(self, spark, stream_dir):
-        from iceberg_evolve_spark.streaming.enrich import enrich_stream
-
-        _write_batch(spark, stream_dir + "/data", ROWS_BATCH1, "b1")
-        dim = spark.createDataFrame(
-            [(1, "gold"), (2, "silver")], "user_id long, tier string"
-        )
-        got = self._run_append_stream(
-            spark,
-            stream_dir + "/data",
-            lambda s: enrich_stream(s, dim, "user_id"),
-            "enrich_out",
-        ).collect()
-        tiers = {r.event_id: r.tier for r in got}
-        assert tiers == {1: "gold", 2: "gold", 3: "gold", 4: "silver"}
-
-    def test_enrich_stream_point_in_time_scd2(self, spark, stream_dir):
-        """Events pick the dimension row valid at THEIR timestamp: user 1 was
-        'bronze' until 11:00, 'gold' after — the 10:00/10:10 clicks must see
-        bronze, the 12:00 view gold."""
-        from iceberg_evolve_spark.streaming.enrich import enrich_stream_point_in_time
-
-        _write_batch(spark, stream_dir + "/data", ROWS_BATCH1, "b1")
-        dim = spark.createDataFrame(
-            [
-                (1, "bronze", "2024-01-01 00:00:00", "2024-01-01 11:00:00"),
-                (1, "gold", "2024-01-01 11:00:00", None),
-                (2, "silver", "2024-01-01 00:00:00", None),
-            ],
-            "user_id long, tier string, valid_from string, valid_to string",
-        ).select(
-            "user_id",
-            "tier",
-            F.col("valid_from").cast("timestamp").alias("valid_from"),
-            F.col("valid_to").cast("timestamp").alias("valid_to"),
-        )
-        got = self._run_append_stream(
-            spark,
-            stream_dir + "/data",
-            lambda s: enrich_stream_point_in_time(s, dim, "user_id", "ts"),
-            "pit_out",
-        ).collect()
-        tiers = {r.event_id: r.tier for r in got}
-        assert tiers == {1: "bronze", 2: "bronze", 3: "gold", 4: "silver"}
-
-
-class TestStreamStreamJoin:
-    def test_attribution_join_matches_batch(self, spark, stream_dir):
-        """Click→view attribution as a true stream-stream join: both sides are
-        unbounded file streams; watermark + interval bound the state."""
-        from iceberg_evolve_spark.streaming.join import attribute_within_window
-
-        clicks = [
-            (1, "2024-01-01 10:00:00", 1, "click", 0.0),
-            (2, "2024-01-01 11:00:00", 2, "click", 0.0),
-        ]
-        views = [
-            (10, "2024-01-01 10:10:00", 1, "view", 1.0),  # within 30m of click 1
-            (11, "2024-01-01 10:50:00", 1, "view", 2.0),  # outside 30m
-            (12, "2024-01-01 11:05:00", 2, "view", 3.0),  # within 30m of click 2
-            (13, "2024-01-01 11:05:00", 3, "view", 4.0),  # no click for user 3
-        ]
-        _write_batch(spark, stream_dir + "/clicks", clicks, "c1")
-        _write_batch(spark, stream_dir + "/views", views, "v1")
-
-        cs = (
-            spark.readStream.schema(EVENTS_SCHEMA)
-            .option("maxFilesPerTrigger", "10")
-            .parquet(stream_dir + "/clicks")
-        )
-        vs = (
-            spark.readStream.schema(EVENTS_SCHEMA)
-            .option("maxFilesPerTrigger", "10")
-            .parquet(stream_dir + "/views")
-        )
-        joined = attribute_within_window(
-            cs, vs, key="user_id", window_minutes=30, watermark_minutes=60
-        )
-        q = (
-            joined.writeStream.format("memory")
-            .queryName("attr_out")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        got = spark.sql("SELECT l_event_id, r_event_id FROM attr_out").collect()
-        pairs = sorted((r.l_event_id, r.r_event_id) for r in got)
-        assert pairs == [(1, 10), (2, 12)]
-
-    def test_attribution_join_batch_equivalence(self, spark):
-        """The same operator applied to bounded DataFrames gives the join the
-        streaming run produced (stream-stream inner join is exactly the batch
-        interval join, incrementalized)."""
-        from iceberg_evolve_spark.streaming.join import attribute_within_window
-
-        mk = lambda rows: spark.createDataFrame(
-            [(i, ts, u, t, v) for i, ts, u, t, v in rows],
-            "event_id long, ts string, user_id long, event_type string, value double",
-        ).withColumn("ts", F.col("ts").cast("timestamp"))
-        clicks = mk([(1, "2024-01-01 10:00:00", 1, "click", 0.0)])
-        views = mk(
-            [
-                (10, "2024-01-01 10:10:00", 1, "view", 1.0),
-                (11, "2024-01-01 10:31:00", 1, "view", 2.0),
-            ]
-        )
-        out = attribute_within_window(clicks, views, key="user_id", window_minutes=30)
-        assert [(r.l_event_id, r.r_event_id) for r in out.collect()] == [(1, 10)]
-
-
-class TestStreamingCMS:
-    """Incremental Count-Min maintenance: the streamed sketch must equal the
-    batch sketch over the union of all micro-batches (counter linearity), and
-    a replayed batch_id must be a no-op (marker-based idempotence)."""
-
-    def test_streamed_counters_match_batch(self, spark, stream_dir):
-        import tempfile
-
-        from iceberg_evolve_spark.functions.sketch import cms_counters
-        from iceberg_evolve_spark.streaming.sketch_sink import run_cms_stream
-
-        batch2 = [
-            (5, "2024-01-01 11:00:00", 3, "view", 1.0),
-            (6, "2024-01-01 11:30:00", 3, "click", 2.0),
-            (7, "2024-01-01 11:45:00", 1, "click", 2.5),
-        ]
-        _write_batch(spark, stream_dir, ROWS_BATCH1, "b1")
-        _write_batch(spark, stream_dir, batch2, "b2")
-        target = tempfile.mkdtemp(prefix="cms_snap_") + "/sketch"
-        ckpt = tempfile.mkdtemp(prefix="cms_ckpt_")
-        stream = (
-            spark.readStream.schema(EVENTS_SCHEMA)
-            .option("maxFilesPerTrigger", "1")  # force >= 2 micro-batches
-            .parquet(stream_dir)
-        )
-        q = run_cms_stream(stream, target, "event_type", ckpt, depth=3, width=64)
-        q.awaitTermination(120)
-
-        streamed = {
-            (r["seed"], r["bucket"]): r["cnt"]
-            for r in spark.read.parquet(target).collect()
-        }
-        all_rows = spark.read.schema(EVENTS_SCHEMA).parquet(stream_dir)
-        expected = {
-            (r["seed"], r["bucket"]): r["cnt"]
-            for r in cms_counters(all_rows, "event_type", depth=3, width=64).collect()
-        }
-        assert streamed == expected
-
-    def test_replayed_batch_is_noop(self, spark):
-        import tempfile
-
-        from iceberg_evolve_spark.streaming.sketch_sink import cms_batch_writer
-
-        target = tempfile.mkdtemp(prefix="cms_replay_") + "/sketch"
-        writer = cms_batch_writer(spark, target, "event_type", depth=3, width=64)
-        df = spark.createDataFrame(
-            [(1, "click"), (2, "view")], "event_id long, event_type string"
-        )
-        writer(df, 0)
-        once = sorted(tuple(r) for r in spark.read.parquet(target).collect())
-        writer(df, 0)  # at-least-once replay of the same batch
-        twice = sorted(tuple(r) for r in spark.read.parquet(target).collect())
-        assert once == twice
-        writer(df, 1)  # a genuinely new batch still merges
-        thrice = sorted(tuple(r) for r in spark.read.parquet(target).collect())
-        assert thrice != once
-
-
-def _has_protobuf() -> bool:
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except Exception:
-        return False
-
-
-@pytest.mark.skipif(
-    not _has_protobuf(),
-    reason="transformWithStateInPandas needs google.protobuf in the Python "
-    "workers (its state-server protocol is protobuf-based); not installed in "
-    "this environment — auto-runs wherever protobuf exists, like the "
-    "jar-gated Iceberg round-trip",
-)
-class TestStatefulSessionizeTWS:
-    """Same scenario as TestStatefulSessionize, on the Spark 4
-    transformWithStateInPandas API (typed ValueState + explicit event-time
-    timers) — the two stateful formulations must agree."""
-
-    def test_sessions_close_on_gap_and_timeout(self, spark, stream_dir):
-        from iceberg_evolve_spark.streaming.stateful import stateful_sessionize_tws
-
-        src = stream_dir + "/data"
-        _write_batch(spark, src, ROWS_BATCH1, "b1")
-        stream = (
-            spark.readStream.schema(EVENTS_SCHEMA)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
-        out = stateful_sessionize_tws(stream, gap_minutes=30, watermark_minutes=10)
-        q = (
-            out.writeStream.format("memory")
-            .queryName("stateful_tws_out")
-            .outputMode("append")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-            _write_batch(spark, src, ROWS_BATCH2, "b2")
-            q.processAllAvailable()
-            _write_batch(
-                spark, src, [(6, "2024-01-02 10:00:00", 99, "x", 0.0)], "b3"
-            )
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        rows = spark.sql(
-            "SELECT user_id, n_events, total_value, first_type, last_type "
-            "FROM stateful_tws_out WHERE user_id < 99"
-        ).collect()
-        got = sorted(
-            (r.user_id, r.n_events, r.total_value, r.first_type, r.last_type)
-            for r in rows
-        )
-        assert got == [
-            (1, 1, 3.0, "view", "view"),
-            (1, 2, 3.0, "click", "click"),
-            (2, 1, 4.0, "click", "click"),
-        ]
-
-
-class TestSessionProcessorLogic:
-    """The StatefulProcessor's fold + timer logic, driven directly with stub
-    state/handle objects — runs everywhere (no protobuf/state-server needed),
-    so the processor's semantics stay pinned even where the streaming API
-    can't start. Must agree with make_session_fn's output shape."""
-
-    class _StubValueState:
-        def __init__(self):
-            self._v = None
-
-        def exists(self):
-            return self._v is not None
-
-        def get(self):
-            return self._v
-
-        def update(self, v):
-            self._v = v
-
-        def clear(self):
-            self._v = None
-
-    class _StubHandle:
-        def __init__(self):
-            self.timers = []
-
-        def getValueState(self, name, schema, ttlDurationMs=None):
-            return TestSessionProcessorLogic._StubValueState()
-
-        def listTimers(self):
-            return list(self.timers)
-
-        def deleteTimer(self, t):
-            self.timers.remove(t)
-
-        def registerTimer(self, t):
-            self.timers.append(t)
-
-    def _batch(self, rows):
-        import pandas as pd
-
-        return pd.DataFrame(
-            {
-                "ts": pd.to_datetime([r[0] for r in rows]),
-                "event_type": [r[1] for r in rows],
-                "value": [r[2] for r in rows],
-            }
-        )
-
-    def test_gap_split_and_timer_eviction(self):
-        from iceberg_evolve_spark.streaming.stateful import SessionProcessor
-
-        p = SessionProcessor(gap_minutes=30)
-        p.init(self._StubHandle())
-        out = list(
-            p.handleInputRows(
-                (1,),
-                iter(
-                    [
-                        self._batch(
-                            [
-                                ("2024-01-01 10:00:00", "click", 1.0),
-                                ("2024-01-01 10:10:00", "click", 2.0),
-                                ("2024-01-01 12:00:00", "view", 3.0),
-                            ]
-                        )
-                    ]
-                ),
-                None,
-            )
-        )
-        # the 12:00 event is > 30 min after 10:10 → first session closed inline
-        assert len(out) == 1
-        closed = out[0].iloc[0]
-        assert (closed["n_events"], closed["total_value"]) == (2, 3.0)
-        assert (closed["first_type"], closed["last_type"]) == ("click", "click")
-        # open session (the 12:00 view) lives in state with an eviction timer
-        assert p.session.exists()
-        assert len(p.handle.timers) == 1
-        # watermark passes → timer fires → open session emitted and evicted
-        evicted = list(p.handleExpiredTimer((1,), None, None))
-        assert len(evicted) == 1
-        assert evicted[0].iloc[0]["n_events"] == 1
-        assert evicted[0].iloc[0]["first_type"] == "view"
-        assert not p.session.exists()
-
-    def test_timer_reregistered_as_session_extends(self):
-        from iceberg_evolve_spark.streaming.stateful import SessionProcessor
-
-        p = SessionProcessor(gap_minutes=30)
-        p.init(self._StubHandle())
-        list(p.handleInputRows((1,), iter([self._batch([("2024-01-01 10:00:00", "a", 1.0)])]), None))
-        t1 = p.handle.timers[0]
-        list(p.handleInputRows((1,), iter([self._batch([("2024-01-01 10:20:00", "b", 1.0)])]), None))
-        assert len(p.handle.timers) == 1  # old timer replaced, not accumulated
-        assert p.handle.timers[0] == t1 + 20 * 60 * 1000
-
-
-class TestStreamingHLL:
-    """Incremental HLL maintenance: the streamed registers must equal the
-    batch sketch over the union of all micro-batches (merge == whole), and —
-    unlike CMS — replaying a batch is a no-op WITHOUT markers, because
-    register max is idempotent."""
-
-    def test_streamed_registers_match_batch(self, spark, stream_dir):
-        import tempfile
-
-        from iceberg_evolve_spark.functions.sketch import hll_registers
-        from iceberg_evolve_spark.streaming.sketch_sink import run_hll_stream
-
-        batch2 = [
-            (5, "2024-01-01 11:00:00", 3, "view", 1.0),
-            (6, "2024-01-01 11:30:00", 3, "click", 2.0),
-            (7, "2024-01-01 11:45:00", 1, "click", 2.5),
-        ]
-        _write_batch(spark, stream_dir, ROWS_BATCH1, "b1")
-        _write_batch(spark, stream_dir, batch2, "b2")
-        target = tempfile.mkdtemp(prefix="hll_snap_") + "/sketch"
-        ckpt = tempfile.mkdtemp(prefix="hll_ckpt_")
-        stream = (
-            spark.readStream.schema(EVENTS_SCHEMA)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(stream_dir)
-        )
-        q = run_hll_stream(stream, target, "event_id", ckpt, b=6)
-        q.awaitTermination(120)
-
-        streamed = sorted(
-            (r["j"], r["rho"]) for r in spark.read.parquet(target).collect()
-        )
-        all_rows = spark.read.schema(EVENTS_SCHEMA).parquet(stream_dir)
-        expected = sorted(
-            (r["j"], r["rho"])
-            for r in hll_registers(
-                all_rows, F.col("event_id").cast("string"), b=6
-            ).collect()
-        )
-        assert streamed == expected
-
-    def test_replay_idempotent_without_markers(self, spark):
-        import os as _os
-        import tempfile
-
-        from iceberg_evolve_spark.streaming.sketch_sink import hll_batch_writer
-
-        target = tempfile.mkdtemp(prefix="hll_replay_") + "/sketch"
-        writer = hll_batch_writer(spark, target, "event_type", b=6)
-        df = spark.createDataFrame(
-            [(1, "click"), (2, "view")], "event_id long, event_type string"
-        )
-        writer(df, 0)
-        once = sorted(tuple(r) for r in spark.read.parquet(target).collect())
-        writer(df, 0)  # replay: max-merge of identical registers — no-op
-        twice = sorted(tuple(r) for r in spark.read.parquet(target).collect())
-        assert once == twice
-        # and no marker files were needed to achieve it
-        assert not [f for f in _os.listdir(target) if f.startswith("_applied_")]
-        writer(spark.createDataFrame([(3, "purchase")], "event_id long, event_type string"), 1)
-        thrice = sorted(tuple(r) for r in spark.read.parquet(target).collect())
-        assert thrice != once
-
-
-class TestGroupedHllSinkServesSlidingWindows:
-    """The stream maintains PER-BUCKET registers (group_cols) and any
-    trailing-window distinct query is answered from the maintained snapshot
-    — streamed registers == batch registers, and the sliding merge over the
-    maintained table == the batch sliding computation."""
-
-    def test_sliding_query_from_maintained_registers(self, spark):
-        import tempfile
-
-        from iceberg_evolve_spark.functions.sketch import (
-            hll_registers,
-            hll_sliding_distinct,
-        )
-        from iceberg_evolve_spark.streaming.sketch_sink import hll_batch_writer
-
-        target = tempfile.mkdtemp(prefix="hll_grp_") + "/sketch"
-        writer = hll_batch_writer(spark, target, "u", b=6, group_cols=["hb"])
-        rows1 = [(t, f"u{100 * t + i}") for t in (0, 1) for i in range(30)]
-        rows2 = [(t, f"u{100 * t + i}") for t in (1, 2, 3) for i in range(20, 50)]
-        writer(spark.createDataFrame(rows1, "hb long, u string"), 0)
-        writer(spark.createDataFrame(rows2, "hb long, u string"), 1)
-
-        # maintained per-bucket registers == one-shot batch registers
-        both = spark.createDataFrame(rows1 + rows2, "hb long, u string")
-        expect_regs = sorted(
-            (r["hb"], r["j"], r["rho"])
-            for r in hll_registers(
-                both, F.col("u").cast("string"), b=6, group_cols=["hb"]
-            ).collect()
-        )
-        got_regs = sorted(
-            (r["hb"], r["j"], r["rho"])
-            for r in spark.read.parquet(target).collect()
-        )
-        assert got_regs == expect_regs
-
-        # a trailing-2 sliding query served FROM the maintained registers
-        # equals the batch sliding computation over the raw rows
-        maintained = spark.read.parquet(target)
-        covered = maintained.select(
-            F.explode(F.sequence(F.col("hb"), F.col("hb") + 1)).alias("out_bucket"),
-            "j",
-            "rho",
-        )
-        present = maintained.select(F.col("hb").alias("out_bucket")).distinct()
-        from iceberg_evolve_spark.functions.sketch import hll_estimate_from_registers
-
-        merged = (
-            covered.join(present, "out_bucket", "left_semi")
-            .groupBy("out_bucket", "j")
-            .agg(F.max("rho").alias("rho"))
-        )
-        from_sink = {
-            r["out_bucket"]: r["est_distinct"]
-            for r in hll_estimate_from_registers(
-                merged, b=6, group_cols=["out_bucket"]
-            ).collect()
-        }
-        from_batch = {
-            r["out_bucket"]: r["est_distinct"]
-            for r in hll_sliding_distinct(
-                both, F.col("u").cast("string"), "hb", window_n=2, b=6
-            ).collect()
-        }
-        assert from_sink == from_batch
-
-
-class TestMultiStatefulChain:
-    """TWO stateful operators in ONE streaming query (Spark 3.4+ capability):
-    watermarked dedup feeding a session-window aggregation — the composed
-    shape of a real ingest pipeline (at-least-once source → exactly-once
-    sessions), not just the operators in isolation."""
-
-    def test_dedup_then_session_window_single_query(self, spark, stream_dir):
-        from iceberg_evolve_spark.streaming.dedup_stream import dedup_stream_exact
-
-        rows = ROWS_BATCH1 + ROWS_BATCH1[:2]  # replay two duplicate events
-        _write_batch(spark, stream_dir, rows, "b1")
-        # sentinel batch a day later: advances the watermark on the SECOND
-        # trigger so append mode can emit the closed day-1 sessions
-        # (availableNow + maxFilesPerTrigger=1 -> one trigger per file).
-        _write_batch(
-            spark, stream_dir,
-            [(99, "2024-01-02 10:00:00", 9, "click", 0.0)], "b2",
-        )
-
-        def chain(stream):
-            deduped = dedup_stream_exact(
-                stream, key_cols=["event_id"], watermark="2 hours"
-            )
-            return (
-                deduped.groupBy(
-                    F.session_window("ts", "30 minutes").alias("w"), "user_id"
-                )
-                .agg(F.count(F.lit(1)).alias("n"))
-                .select("user_id", F.col("w.start").alias("start"), "n")
-            )
-
-        # multi-stateful chains require append mode (complete is rejected)
-        stream = (
-            spark.readStream.schema(EVENTS_SCHEMA)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(stream_dir)
-        )
-        q = (
-            chain(stream)
-            .writeStream.format("memory")
-            .queryName("chained_sessions")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        got = {
-            (r.user_id, str(r.start), r.n)
-            for r in spark.sql("SELECT * FROM chained_sessions").collect()
-        }
-        # batch twin over the DISTINCT events — duplicates must not inflate n
-        batch = spark.createDataFrame(
-            [(i, ts, u, t, v) for i, ts, u, t, v in ROWS_BATCH1],
-            "event_id long, ts string, user_id long, event_type string, value double",
-        ).withColumn("ts", F.col("ts").cast("timestamp"))
-        want = {
-            (r.user_id, str(r.start), r.n)
-            for r in batch.groupBy(
-                F.session_window("ts", "30 minutes").alias("w"), "user_id"
-            )
-            .agg(F.count(F.lit(1)).alias("n"))
-            .select("user_id", F.col("w.start").alias("start"), "n")
-            .collect()
-        }
-        # append mode only emits windows the watermark has closed; everything
-        # emitted must match the batch twin, and the duplicated session (user
-        # 1's 10:00 click pair) must have been emitted deduplicated.
-        assert got <= want
-        assert any(u == 1 and n == 2 for u, _, n in got), got
-
-
-DOCS_SCHEMA = "doc_id long, text string"
-
-
-def _write_doc_batch(spark, d, rows, name):
-    df = spark.createDataFrame(rows, DOCS_SCHEMA)
-    stage = f"{d}/_stage_{name}"
-    df.coalesce(1).write.mode("overwrite").parquet(stage)
-    os.makedirs(d, exist_ok=True)
-    part = glob.glob(f"{stage}/part-*.parquet")[0]
-    shutil.copy(part, f"{d}/{name}.parquet")
-    shutil.rmtree(stage, ignore_errors=True)
-
-
-class TestStreamingLSHIndex:
-    """Incremental near-dup index maintenance: the streamed index must equal
-    the batch signature relation over all micro-batches, cross-batch dups
-    must be logged exactly once (new batch vs prior corpus — never a corpus
-    self-join), and a replayed batch_id must be a no-op."""
-
-    B1 = [
-        (1, "the quick brown fox jumps over the lazy dog tonight"),
-        (2, "pack my box with five dozen liquor jugs right now"),
-        (3, "sphinx of black quartz judge my vow again please"),
-    ]
-    B2 = [
-        # doc 11 is an exact copy of doc 1 -> must be logged as a dup of 1
-        (11, "the quick brown fox jumps over the lazy dog tonight"),
-        (12, "completely unrelated sentence about distributed query engines"),
-    ]
-
-    def test_streamed_index_and_dup_log(self, spark, stream_dir):
-        from iceberg_evolve_spark.functions.dedup import minhash_signatures
-        from iceberg_evolve_spark.streaming.dedup_index import run_lsh_dedup_stream
-
-        _write_doc_batch(spark, stream_dir, self.B1, "d1")
-        _write_doc_batch(spark, stream_dir, self.B2, "d2")
-        target = tempfile.mkdtemp(prefix="lsh_snap_") + "/state"
-        ckpt = tempfile.mkdtemp(prefix="lsh_ckpt_")
-        stream = (
-            spark.readStream.schema(DOCS_SCHEMA)
-            .option("maxFilesPerTrigger", "1")  # force >= 2 micro-batches
-            .parquet(stream_dir)
-        )
-        q = run_lsh_dedup_stream(stream, target, ckpt, threshold=0.9)
-        q.awaitTermination(120)
-
-        streamed = {
-            (r["doc_id"], tuple(r["sig"]))
-            for r in spark.read.parquet(f"{target}/index").collect()
-        }
-        all_docs = spark.createDataFrame(self.B1 + self.B2, DOCS_SCHEMA)
-        expected = {
-            (r["doc_id"], tuple(r["sig"]))
-            for r in minhash_signatures(all_docs, "doc_id").collect()
-        }
-        assert streamed == expected
-
-        dups = {
-            frozenset((r["new_id"], r["corpus_id"]))
-            for r in spark.read.parquet(f"{target}/dups").collect()
-        }
-        # exactly the cross-batch exact-copy pair; within-batch pairs are
-        # not the probe's job (the corpus index existed before the batch)
-        assert dups == {frozenset((11, 1))}
-
-    def test_replayed_batch_is_noop(self, spark):
-        from iceberg_evolve_spark.streaming.dedup_index import lsh_index_batch_writer
-
-        target = tempfile.mkdtemp(prefix="lsh_replay_") + "/state"
-        write = lsh_index_batch_writer(spark, target)
-        b1 = spark.createDataFrame(self.B1, DOCS_SCHEMA)
-        b2 = spark.createDataFrame(self.B2, DOCS_SCHEMA)
-        write(b1, 0)
-        write(b2, 1)
-        n_index = spark.read.parquet(f"{target}/index").count()
-        n_dups = spark.read.parquet(f"{target}/dups").count()
-        write(b2, 1)  # at-least-once replay
-        assert spark.read.parquet(f"{target}/index").count() == n_index == 5
-        assert spark.read.parquet(f"{target}/dups").count() == n_dups == 1
-
-    def test_crash_between_renames_recovers(self, spark):
-        """Simulate the swap crash window: the live snapshot moved aside but
-        the replacement not yet installed. The next batch's recover() call
-        must restore the previous index+dup-log pair ATOMICALLY (both live
-        under one snapshot dir), and the retried batch then applies
-        normally."""
-        import os
-
-        from iceberg_evolve_spark.streaming.dedup_index import lsh_index_batch_writer
-
-        target = tempfile.mkdtemp(prefix="lsh_crash_") + "/state"
-        write = lsh_index_batch_writer(spark, target)
-        write(spark.createDataFrame(self.B1, DOCS_SCHEMA), 0)
-        # crash window: live dir moved aside, new dir never arrived
-        os.rename(target, target + "._old")
-        assert not os.path.isdir(target)
-        write(spark.createDataFrame(self.B2, DOCS_SCHEMA), 1)  # recovers, then applies
-        assert spark.read.parquet(f"{target}/index").count() == 5
-        assert spark.read.parquet(f"{target}/dups").count() == 1
-        assert not os.path.isdir(target + "._old")
