@@ -96,7 +96,7 @@ def canonicalize_type(t: IcebergType) -> IcebergType:
     if isinstance(t, StructType):
         fields = sorted(
             (
-                replace(f, doc=None, type=canonicalize_type(f.type))
+                f._replace(doc=None, type=canonicalize_type(f.type))
                 for f in t.fields
             ),
             key=lambda f: f.field_id,
@@ -113,7 +113,7 @@ _field_id = attrgetter("field_id")
 
 
 def _same(x: object, y: object) -> bool:
-    # Tuple-element equality, as dataclass ``__eq__`` compares fields.
+    # Tuple-element equality, as ``Field.__eq__`` (a tuple's) compares elements.
     return x is y or x == y
 
 

@@ -150,7 +150,10 @@ class SchemaDiff:
         # common IDs: rename / retype / doc / recurse
         for fid, cur_f in cur_by_id.items():
             new_f = new_by_id.get(fid)
-            if new_f is None:
+            # Equal fields have the same name, type (nested fields included),
+            # doc and required flag, so every check below, the recursion too,
+            # would report nothing. Moves are computed apart, from the orders.
+            if new_f is None or cur_f == new_f:
                 continue
             path = f"{prefix}{new_f.name}"  # renames apply first, so use new names
             if cur_f.name != new_f.name:
@@ -226,8 +229,10 @@ class SchemaDiff:
     def _union_struct(self, current: StructType, new: StructType, prefix: str) -> None:
         cur_by_name = {f.name: f for f in current.fields}
         for f in new.fields:
-            path = f"{prefix}{f.name}"
             cur_f = cur_by_name.get(f.name)
+            if cur_f == f:  # same name and type all the way down: nothing to report
+                continue
+            path = f"{prefix}{f.name}"
             if cur_f is None:
                 self.added.append(FieldChange("added", path, f.field_id, new=f))
             elif isinstance(cur_f.type, StructType) and isinstance(f.type, StructType):

@@ -13,13 +13,18 @@ design decision of the reference (``diff.py:131, 175-177, 215-220``).
 
 Supported types (reference ``utils.py:26-40``): string, int, long, float, double,
 boolean, date, time, timestamp, binary, decimal(p, s), struct, list, map.
+
+:class:`Field` is a :class:`typing.NamedTuple`: a schema of N fields builds N of
+them per parse and the diff compares them pairwise, so each is one tuple
+allocation and ``==``/``hash`` run in C. The type nodes stay frozen dataclasses:
+a schema holds far fewer of them, and primitives are shared instances.
 """
 
 from __future__ import annotations
 
 import re
-from dataclasses import dataclass, field as dc_field, replace
-from typing import Union
+from dataclasses import dataclass
+from typing import NamedTuple, Union
 
 # ---------------------------------------------------------------------------
 # Type algebra
@@ -92,8 +97,7 @@ class DecimalType:
         return self.name
 
 
-@dataclass(frozen=True)
-class Field:
+class Field(NamedTuple):
     """A named, typed, ID'd field (reference: PyIceberg ``NestedField``).
 
     ``required`` is nullability (inverted vs Spark's ``nullable``); ``doc`` is the
@@ -109,6 +113,13 @@ class Field:
     and the DataFrame migrator fills added columns with ``initial_default``
     instead of NULL (see ``operators/migrate_df.py``). JSON keys:
     ``initial-default`` / ``write-default``, omitted when unset.
+
+    A ``NamedTuple``, not a frozen dataclass: parsing builds one per field and
+    the diff compares them pairwise. A tuple is built in one allocation, with
+    no ``object.__setattr__`` per attribute, and ``==`` and ``hash`` run in C.
+    ``hash`` is that of the tuple of the seven values; assignment raises
+    ``AttributeError``. A ``Field`` compares equal to (and orders like) a
+    plain tuple of its values; no package code compares it to one.
     """
 
     field_id: int
@@ -120,7 +131,7 @@ class Field:
     write_default: object = None
 
     def with_type(self, new_type: IcebergType) -> Field:
-        return replace(self, type=new_type)
+        return self._replace(type=new_type)
 
 
 @dataclass(frozen=True)

@@ -22,6 +22,11 @@ Decimals serialize as the string ``"decimal(p, s)"`` (reference
 Primitive type strings parse to the shared, immutable instances of
 :data:`~.model.PRIMITIVE_TYPES` (one dict lookup per leaf, no construction);
 only a miss there is tried as ``decimal(p, s)``.
+
+Each struct's field list parses in one loop (:func:`_struct`): per field one
+dict probe for each key, the id-uniqueness check, the primitive lookup, and
+one :class:`~.model.Field` tuple — no function call per field. Only a
+nested (non-primitive) field type recurses.
 """
 
 from __future__ import annotations
@@ -65,7 +70,7 @@ def _type(obj: Any, source: str, ids: set[int]) -> IcebergType:
     if kind == "struct":
         if "fields" not in obj:
             raise SchemaParseError(source, "struct type missing 'fields'")
-        return StructType([_field(f, source, ids) for f in obj["fields"]])
+        return _struct(obj["fields"], source, ids)
     if kind == "list":
         if "element-id" not in obj:
             raise SchemaParseError(source, "list type missing 'element-id'")
@@ -90,37 +95,44 @@ def _type(obj: Any, source: str, ids: set[int]) -> IcebergType:
     raise SchemaParseError(source, f"unknown complex type {kind!r}")
 
 
-def _field(obj: Any, source: str, ids: set[int]) -> Field:
-    if not isinstance(obj, dict):
-        raise SchemaParseError(source, f"field must be a dict, got {type(obj).__name__}")
-    get = obj.get
-    fid, name, ftype = get("id", _MISSING), get("name", _MISSING), get("type", _MISSING)
-    if fid is _MISSING:
-        raise SchemaParseError(source, f"field {get('name')!r} missing 'id'")
-    if name is _MISSING:
-        raise SchemaParseError(source, f"field id={fid!r} missing 'name'")
-    if ftype is _MISSING:
-        raise SchemaParseError(source, f"field {name!r} missing 'type'")
-    fid, name = int(fid), str(name)
-    # Struct field ids are unique within one document (the diff keys fields
-    # by id, so a repeated id would hide a dropped column). Element, key and
-    # value ids are not checked: the reference's own users_renamed fixture
-    # gives a list the same element id as its field, and nothing keys on them.
-    if fid in ids:
-        raise SchemaParseError(source, f"duplicate field id {fid}")
-    ids.add(fid)
-    # A str leaf is almost always a primitive: skip the _type call.
-    type_ = PRIMITIVE_TYPES.get(ftype) if ftype.__class__ is str else None
-    return Field(
-        fid,
-        name,
-        type_ or _type(ftype, source, ids),
-        bool(get("required", False)),
-        get("doc"),
-        # Iceberg v3 default values (spec keys: initial-default/write-default)
-        get("initial-default"),
-        get("write-default"),
-    )
+def _struct(fields: Any, source: str, ids: set[int]) -> StructType:
+    """One struct's field list → :class:`StructType`. ``ids`` collects the
+    struct field ids seen so far in the document."""
+    out: list[Field] = []
+    for obj in fields:
+        if not isinstance(obj, dict):
+            raise SchemaParseError(source, f"field must be a dict, got {type(obj).__name__}")
+        get = obj.get
+        fid, name, ftype = get("id", _MISSING), get("name", _MISSING), get("type", _MISSING)
+        if fid is _MISSING:
+            raise SchemaParseError(source, f"field {get('name')!r} missing 'id'")
+        if name is _MISSING:
+            raise SchemaParseError(source, f"field id={fid!r} missing 'name'")
+        if ftype is _MISSING:
+            raise SchemaParseError(source, f"field {name!r} missing 'type'")
+        fid, name = int(fid), str(name)
+        # Struct field ids are unique within one document (the diff keys fields
+        # by id, so a repeated id would hide a dropped column). Element, key and
+        # value ids are not checked: the reference's own users_renamed fixture
+        # gives a list the same element id as its field, and nothing keys on them.
+        if fid in ids:
+            raise SchemaParseError(source, f"duplicate field id {fid}")
+        ids.add(fid)
+        # A str leaf is almost always a primitive: skip the _type call.
+        type_ = PRIMITIVE_TYPES.get(ftype) if ftype.__class__ is str else None
+        out.append(
+            Field(
+                fid,
+                name,
+                type_ or _type(ftype, source, ids),
+                bool(get("required", False)),
+                get("doc"),
+                # Iceberg v3 default values (spec keys: initial-default/write-default)
+                get("initial-default"),
+                get("write-default"),
+            )
+        )
+    return StructType(out)
 
 
 def schema_from_json(data: Any, source: str = _SOURCE) -> tuple[StructType, int]:
@@ -131,9 +143,7 @@ def schema_from_json(data: Any, source: str = _SOURCE) -> tuple[StructType, int]
         raise SchemaParseError(source, f"top-level type must be 'struct', got {data.get('type')!r}")
     if "fields" not in data:
         raise SchemaParseError(source, "schema missing 'fields'")
-    ids: set[int] = set()
-    struct = StructType([_field(f, source, ids) for f in data["fields"]])
-    return struct, int(data.get("schema-id", 0))
+    return _struct(data["fields"], source, set()), int(data.get("schema-id", 0))
 
 
 # ---------------------------------------------------------------------------

@@ -79,6 +79,26 @@ class TestMinimalMoves:
         assert minimal_moves([1, 2, 3, 4], [4, 1, 2, 3]) == [4]
 
 
+class TestEqualParents:
+    """Parents that differ only below them are not equal fields: the diff
+    must still descend to the change and report its full dotted path."""
+
+    @staticmethod
+    def _nested(leaf_type="int", leaf_doc=None):
+        leaf = StructType([Field(5, "leaf", PrimitiveType(leaf_type), doc=leaf_doc)])
+        c = StructType([Field(4, "c", leaf, doc="same")])
+        b = StructType([Field(3, "b", c)])
+        return StructType([Field(1, "id", PrimitiveType("long")), Field(2, "a", b)])
+
+    def test_doc_change_three_structs_deep(self):
+        diff = SchemaDiff.from_schemas(self._nested(leaf_doc="old"), self._nested(leaf_doc="new"))
+        assert _kinds(diff) == {"doc_changed": ["a.b.c.leaf"]}
+
+    def test_union_type_change_three_structs_deep(self):
+        diff = SchemaDiff.union_by_name(self._nested("int"), self._nested("long"))
+        assert _kinds(diff) == {"type_changed": ["a.b.c.leaf"]}
+
+
 class TestUnionByName:
     def test_union_candidate_only_adds(self, users_current):
         cand = Schema.from_file(str(FIXTURES / "users_union_candidate.iceberg.json"))
