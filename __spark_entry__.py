@@ -11250,9 +11250,9 @@ def orders_merge_into(spark: SparkSession, sf_dir: str) -> DataFrame:
     INSERT` with its MOR write mode): the source carries price-bumped
     versions of every 'P' order (matched -> update) plus re-keyed copies
     of a slice of 'F' orders (not matched -> insert); the merge costs ONE
-    equality-delete commit + ONE fast-append commit — for the classic
+    row-delta commit (equality delete + new rows) — for the classic
     upsert clause pair the match set is never computed, so NO target scan
-    happens at write time (hash witness: exactly two commits, no rewrite
+    happens at write time (hash witness: exactly one commit, no rewrite
     stamps). The oracle recomputes the merged state from the clauses. At
     100 TB this is the upsert path that stays O(source): the target's
     terabytes are never read, rewritten, or shuffled by the merge."""
@@ -11298,7 +11298,7 @@ def orders_merge_into(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         vN = merge_into(spark, t, src, on="o_orderkey", ts=2000.0)
         entries = t.versions()
-        mor_ok = vN == v1 + 2 and not any(e.get("rewrite") for e in entries)
+        mor_ok = vN == v1 + 1 and not any(e.get("rewrite") for e in entries)
         agg = t.read(spark).groupBy("o_orderstatus").agg(
             F.count(F.lit(1)).alias("n"),
             F.sum(
@@ -12733,19 +12733,20 @@ def orders_cdc_stream_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
     r8 task 6): a delete-bearing CDC envelope sequence derived from orders
     runs through an ACTUAL Structured Streaming query (file source, one
     micro-batch per wave) into ``streaming/sink.py:run_mor_cdc_stream`` —
-    each micro-batch commits ONE equality delete (``delete_by_key``,
-    retiring changed keys without scanning data) plus ONE fast append
-    (``SnapshotTable.append``, data-sequence numbers keeping the new rows
-    alive past the delete). The table is never rewritten: O(batch) work per
-    batch, the Iceberg streaming-upsert shape.
+    each micro-batch is ONE row-delta commit (``SnapshotTable.row_delta``:
+    an equality delete retiring changed keys without scanning data, plus
+    the new rows, whose data-sequence number keeps them alive past the
+    delete). The table is never rewritten: O(batch) work per batch, the
+    Iceberg streaming-upsert shape.
 
     Waves: (1) insert every order; (2) reprice the 'O' orders (+1000);
     (3) delete the 'P' orders, re-inserting keys divisible by 10 as
     restored rows (status 'R', price 0) — an in-batch delete+append on the
     same keys, the case sequence numbers exist for. The oracle replays the
     net state from the base table; ``mor_shape`` asserts the physical
-    claim (multiple commits, equality-delete files attached, s-prefixed
-    appended data files present — not a rewrite that happens to match)."""
+    claim (one commit per wave — bootstrap + 2 batches — equality-delete
+    files attached, s-prefixed appended data files present — not a
+    rewrite that happens to match)."""
     import shutil
     import tempfile
 

@@ -64,9 +64,10 @@ def merge_into(
     """MERGE INTO over a :class:`~iceberg_evolve_spark.sources.snapshots.
     SnapshotTable` with MERGE-ON-READ commits — Iceberg's
     ``MERGE INTO ... WHEN MATCHED ... WHEN NOT MATCHED`` under its
-    merge-on-read write mode: the merge costs at most ONE equality-delete
-    commit (retiring matched keys) plus ONE fast-append commit (the new
-    row versions), never a rewrite of any target data file.
+    merge-on-read write mode: the merge is ONE row-delta commit
+    (``SnapshotTable.row_delta``: an equality delete retiring matched keys
+    plus the new row versions), never a rewrite of any target data file,
+    and no reader sees the delete without the rows.
 
     Clauses (SCD-1 semantics, as :func:`merge_upsert`):
 
@@ -83,7 +84,7 @@ def merge_into(
     shortcut Iceberg's streaming upsert takes). Asymmetric clause pairs
     need the match set: ONE column-pruned scan of the target's key column,
     semi-/anti-joined against the (usually much smaller) source. Returns
-    the final new version. Source rows must be key-distinct — a MERGE with
+    the new version. Source rows must be key-distinct — a MERGE with
     several rows per key is ambiguous (Iceberg raises the same way)."""
     if when_matched not in ("update", "delete", None):
         raise ValueError(f"when_matched={when_matched!r}")
@@ -99,17 +100,20 @@ def merge_into(
         )
     note = note or f"merge_into on {on}"
     if when_matched == "update" and when_not_matched == "insert":
-        table.delete_by_key(source.select(on), [on], note=f"{note} retire", ts=ts)
-        return table.append(source, note=f"{note} apply", ts=ts)
+        return table.row_delta(
+            add=source, delete_keys=source, cols=[on], note=note, ts=ts
+        )
     # asymmetric clauses: compute the match set from the key column only
     # (column-pruned target scan; the source side is the small one)
     target_keys = table.read(spark).select(on)
-    if when_matched is not None:
-        matched = source.join(target_keys, on=[on], how="semi")
-        table.delete_by_key(matched.select(on), [on], note=f"{note} retire", ts=ts)
-        if when_matched == "update":
-            table.append(matched, note=f"{note} matched apply", ts=ts)
-    if when_not_matched == "insert":
-        unmatched = source.join(target_keys, on=[on], how="anti")
-        table.append(unmatched, note=f"{note} insert", ts=ts)
-    return table.versions()[-1]["version"]
+    matched = source.join(target_keys, on=[on], how="semi")
+    # one side at most: update+insert took the shortcut above
+    add = matched if when_matched == "update" else (
+        source.join(target_keys, on=[on], how="anti")
+        if when_not_matched
+        else None
+    )
+    return table.row_delta(
+        add=add, delete_keys=matched if when_matched else None,
+        cols=[on], note=note, ts=ts,
+    )

@@ -22,8 +22,9 @@ Append-only discipline, as Iceberg: a commit that is not a plain append
 (row deletes, compaction rewrite, rollback, delete-fold) breaks
 "new rows = new files" attribution, so the reader RAISES when the range
 crosses one — or skips it under ``on_change="skip"`` (emitting only the
-appended files of the range, Iceberg's ``streaming-skip-delete-snapshots``
-/ ``streaming-skip-overwrite-snapshots`` escape hatch).
+appended files of the range, a row delta's included; Iceberg's
+``streaming-skip-delete-snapshots`` / ``streaming-skip-overwrite-snapshots``
+escape hatch).
 
 Usage::
 
@@ -152,12 +153,14 @@ def _added_files(
     entry carries beyond its predecessor's. Non-append commits raise (or
     are skipped under ``on_change='skip'``): deletes/rewrites/rollbacks
     change visibility without adding rows, so "new rows = new files"
-    attribution would be wrong across them. ``with_schema=True`` returns
-    ``(path, schema_id)`` pairs instead of bare paths — the schema id each
-    file's manifest was committed under on a schema-tracked lineage (None
-    when untracked), so the reader can detect and project drifted
-    generations. A schema-evolution commit itself adds no files and is
-    therefore transparent to the rows-only tail.
+    attribution would be wrong across them. Skip mode still emits the
+    files a row delta (delete + add in one commit) adds.
+    ``with_schema=True`` returns ``(path, schema_id)`` pairs instead of
+    bare paths — the schema id each file's manifest was committed under
+    on a schema-tracked lineage (None when untracked), so the reader can
+    detect and project drifted generations. A schema-evolution commit
+    itself adds no files and is therefore transparent to the rows-only
+    tail.
 
     Exactly-once under retention: each emitted version diffs against the
     nearest RETAINED predecessor entry (manifest lists are cumulative per
@@ -212,14 +215,18 @@ def _added_files(
             prev = e
             continue
         prev_m = set(prev["manifests"])
-        is_append = (
+        # skip mode still delivers the rows a row delta ADDS (its delete
+        # changes visibility only — rows, not visibility, is the contract)
+        if (
             prev_m <= cur
             and e.get("rollback_of") is None
             and not e.get("rewrite")
             and not e.get("delete_rewrite")
-            and delete_stack_keys(e) == delete_stack_keys(prev)
-        )
-        if is_append:
+            and (
+                on_change == "skip"
+                or delete_stack_keys(e) == delete_stack_keys(prev)
+            )
+        ):
             out.extend(_manifest_files(table_path, e, cur - prev_m))
         elif on_change != "skip":
             raise ValueError(

@@ -84,6 +84,7 @@ from __future__ import annotations
 import json
 import os
 import re
+import shutil
 import time
 import uuid
 
@@ -999,8 +1000,6 @@ class SnapshotTable:
         key=value subdirs. Per-file ``os.rename`` is atomic; the files stay
         invisible until the snapshot-log commit because reads are
         manifest-list-based. Returns the files' lineage-relative paths."""
-        import shutil
-
         rels = []
         for root, _dirs, names in os.walk(stage):
             rel = os.path.relpath(root, stage)
@@ -1033,9 +1032,9 @@ class SnapshotTable:
         fast-append + data-sequence-number semantics): appended files are
         named with this commit's sequence number (``s{version}-...``), and
         equality deletes apply only to data files with a STRICTLY OLDER
-        sequence — so the CDC upsert shape (eq-delete the key, append the
-        new row, possibly in adjacent commits) keeps the new row live while
-        retiring the old one.
+        sequence — so the CDC upsert shape (eq-delete the key and append the
+        new row, in one :meth:`row_delta` or in adjacent commits) keeps the
+        new row live while retiring the old one.
 
         The new files land inside the lineage's existing data dir (same
         key=value layout) and ONE new manifest file lists them; the new
@@ -1049,11 +1048,21 @@ class SnapshotTable:
             return self.write(df, note=note or "append (bootstrap)", ts=ts)
         cur = entries[-1]
         self._check_append_schema(cur, df)
-        version = cur["version"] + 1
+        return self._commit_delta(
+            cur, self._stage_rows(cur, df), None, note or "append", ts
+        )
+
+    def _stage_rows(self, cur: dict, df: DataFrame) -> str | None:
+        """Write ``df`` into a stage dir laid out like ``cur``'s lineage
+        (partition spec, sort order) for :meth:`_commit_delta` to ingest.
+        None, with nothing left behind, when it holds no rows: no empty
+        commits, counted from the footers (Spark writes a 0-row part
+        file)."""
         # writer-unique stage dir: two concurrent appends must never share
         # scratch (crashed stages become orphans, swept by expire_snapshots)
         stage = os.path.join(
-            self.path, f"v{version:05d}-{uuid.uuid4().hex[:8]}.stage"
+            self.path,
+            f"v{cur['version'] + 1:05d}-{uuid.uuid4().hex[:8]}.stage",
         )
         # a sorted lineage clusters each increment on its own (file-level
         # clustering, as Iceberg sorted writes — old files stay untouched)
@@ -1065,58 +1074,9 @@ class SnapshotTable:
             writer = writer.partitionBy(*cur["partition_by"])
         writer.parquet(stage)
         if _parquet_dir_rows(stage) == 0:
-            # no empty commits (matching delete_where/delete_by_key) —
-            # counted from footers, Spark writes a 0-row part file
-            import shutil
-
             shutil.rmtree(stage, ignore_errors=True)
-            return cur["version"]
-        dest = os.path.join(self.path, cur["data_dir"])
-        # the s{seq}- prefix is provisional: files are invisible until the
-        # log commit (reads are manifest-scoped), so if the CAS below lands
-        # on a moved head, _build RENAMES them to the final commit's
-        # sequence before the manifest is written — Iceberg assigns data
-        # sequence numbers at commit time, and keeping a stale lower stamp
-        # would let an equality delete that serialized BEFORE this append
-        # wrongly erase its rows (part names are job-UUID'd: no collisions)
-        new_rels = self._ingest_stage(stage, dest, f"s{version:05d}-")
-        # mutable across CAS retries: each lost publish race re-runs _build
-        # against the fresh log, and the restamp must move the files from
-        # wherever the PREVIOUS attempt left them, not from the original
-        # provisional names
-        stamped = {"v": version, "rels": new_rels}
-
-        def _build(fresh: list[dict]) -> dict:
-            head = self._composable_head(fresh, cur, allow_fold=True)
-            new_version = head["version"] + 1
-            if new_version != stamped["v"]:
-                stamped["rels"] = self._restamp_seq(
-                    dest, stamped["rels"], stamped["v"], new_version
-                )
-                stamped["v"] = new_version
-            mname = self._write_manifest_file(new_version, stamped["rels"])
-            new_entry = {
-                "version": new_version,
-                "data_dir": head["data_dir"],
-                "manifests": head["manifests"] + [mname],
-                "base_seq": head.get("base_seq", head["version"]),
-                # marks the lineage as multi-sequence: readers must compare
-                # per-file sequence numbers against delete sequences
-                # (append-free lineages keep the cheaper plain anti-join)
-                "has_appends": True,
-                "ts": time.time() if ts is None else ts,
-                "note": note or "append",
-            }
-            for prop in ("partition_by", "sort_by"):
-                if head.get(prop):
-                    new_entry[prop] = list(head[prop])
-            if head.get("deletes"):
-                new_entry["deletes"] = list(head["deletes"])
-            return self._carry_schema(new_entry, head)
-
-        # CAS publish: two concurrent appends both survive (the later one
-        # renumbers onto the winner's head inside _build)
-        return self._commit_build(_build)
+            return None
+        return stage
 
     def rollback(self, version: int, note: str | None = None, ts: float | None = None) -> int:
         """Make ``version``'s data current again by appending a NEW snapshot
@@ -1235,56 +1195,125 @@ class SnapshotTable:
                 mx = max(mx, int(name[1:]))
         return f"d{mx + 1:05d}"
 
-    def _append_delete_entry(
+    def _commit_delta(
         self,
-        entries: list[dict],
-        delete: dict,
-        note: str | None,
+        cur: dict,
+        stage: str | None,
+        delete: dict | None,
+        note: str,
         ts: float | None,
     ) -> int:
-        cur = entries[-1]
+        """THE row-level commit (Iceberg's ``RowDelta``), the one entry
+        builder of append, append-publish, every delete kind and
+        :meth:`row_delta`: ``stage``'s data files and/or ONE ``delete``
+        file land on the head as a single snapshot (neither: no commit).
+        ``cur`` is the snapshot the payload was computed against.
+
+        Sequence numbers are assigned at commit time, as in Iceberg: the
+        files are ingested under a provisional ``s{v}-`` prefix (invisible
+        until the log commit) and renamed if the CAS lands on a moved head;
+        the delete takes the same final version. Deletes apply only to
+        STRICTLY OLDER data, so the commit's own rows survive its delete
+        and an earlier-serialized delete never erases them. A commit with
+        a delete does not compose over a delete-stack fold, and a merged
+        deletion vector refuses any concurrent delete-stack change."""
+        if stage is None and delete is None:
+            return cur["version"]
+        dest = os.path.join(self.path, cur["data_dir"])
+        # mutable across CAS retries: each lost publish race re-runs _build
+        # against the fresh log, and the restamp must move the files from
+        # wherever the PREVIOUS attempt left them
+        stamped = {"v": cur["version"] + 1, "rels": []}
+        if stage is not None:
+            stamped["rels"] = self._ingest_stage(
+                stage, dest, f"s{stamped['v']:05d}-"
+            )
 
         def _build(fresh: list[dict]) -> dict:
-            # CAS under the commit lock: a delete commit composes with
-            # concurrent plain appends (it serializes after them — the
-            # sequence stamp below is the FINAL commit's, so it applies to
-            # everything strictly older, Iceberg's commit-time sequence
-            # assignment); a concurrent change to the delete stack a
-            # MERGED deletion vector was computed against raises instead
-            # of silently dropping the other writer's deletes
-            head = self._composable_head(fresh, cur, allow_fold=False)
+            head = self._composable_head(
+                fresh, cur, allow_fold=delete is None
+            )
             new_version = head["version"] + 1
-            # data-sequence stamp: this delete applies only to data files
-            # with a strictly older sequence (rows appended AFTER it must
-            # survive it)
-            d = {**delete, "seq": new_version}
-            prior = list(head.get("deletes", []))
-            if d["kind"] == "dv":
-                if delete_stack_keys(head) != delete_stack_keys(cur):
-                    raise CommitConflict(
-                        "concurrent delete commit: this merged deletion "
-                        "vector was computed against a delete stack that "
-                        "moved — retry the delete against the new head"
-                    )
-                # Iceberg v3 invariant: at most ONE deletion vector per
-                # snapshot — the new (merged) vector REPLACES the old,
-                # which stays on disk for older versions until retention
-                prior = [x for x in prior if x["kind"] != "dv"]
-            new_entry = {
+            entry = {
                 "version": new_version,
                 "data_dir": head["data_dir"],
                 "manifests": list(head["manifests"]),
                 "base_seq": head.get("base_seq", head["version"]),
-                **({"has_appends": True} if head.get("has_appends") else {}),
-                **({"partition_by": list(head["partition_by"])} if head.get("partition_by") else {}),
-                **({"sort_by": list(head["sort_by"])} if head.get("sort_by") else {}),
-                "deletes": prior + [d],
                 "ts": time.time() if ts is None else ts,
                 "note": note,
             }
-            return self._carry_schema(new_entry, head)
+            if stamped["rels"]:
+                if new_version != stamped["v"]:
+                    stamped["rels"] = self._restamp_seq(
+                        dest, stamped["rels"], stamped["v"], new_version
+                    )
+                    stamped["v"] = new_version
+                entry["manifests"].append(
+                    self._write_manifest_file(new_version, stamped["rels"])
+                )
+            if stamped["rels"] or head.get("has_appends"):
+                # marks the lineage as multi-sequence: readers must compare
+                # per-file sequence numbers against delete sequences
+                # (append-free lineages keep the cheaper plain anti-join)
+                entry["has_appends"] = True
+            for prop in ("partition_by", "sort_by"):
+                if head.get(prop):
+                    entry[prop] = list(head[prop])
+            deletes = list(head.get("deletes", []))
+            if delete is not None:
+                if delete["kind"] == "dv":
+                    if delete_stack_keys(head) != delete_stack_keys(cur):
+                        raise CommitConflict(
+                            "concurrent delete commit: this merged deletion "
+                            "vector was computed against a delete stack "
+                            "that moved — retry the delete against the new "
+                            "head"
+                        )
+                    # Iceberg v3 invariant: at most ONE deletion vector per
+                    # snapshot — the new (merged) vector REPLACES the old,
+                    # which stays on disk for older versions until retention
+                    deletes = [x for x in deletes if x["kind"] != "dv"]
+                deletes.append({**delete, "seq": new_version})
+            if deletes:
+                entry["deletes"] = deletes
+            return self._carry_schema(entry, head)
 
         return self._commit_build(_build)
+
+    def row_delta(
+        self,
+        add: DataFrame | None = None,
+        delete_keys: DataFrame | None = None,
+        cols: list[str] | None = None,
+        note: str | None = None,
+        ts: float | None = None,
+    ) -> int:
+        """ROW DELTA: append ``add``'s rows AND equality-delete every current
+        row whose ``cols`` values appear in ``delete_keys`` as ONE commit
+        (Iceberg's ``RowDelta``), so no read ever sees the delete without
+        the add. The added rows share the delete's sequence number and
+        survive it: "delete key k, add k's new row" is the upsert the CDC
+        sink and MERGE INTO commit. Each side is gated like :meth:`append`
+        / :meth:`delete_by_key`; empty sides are skipped (both: no commit).
+        On an empty table the add bootstraps it, as :meth:`append` does.
+        Returns the new (or unchanged) head version."""
+        if delete_keys is not None and not cols:
+            raise ValueError("delete_keys needs the key columns (cols)")
+        entries = self.versions()
+        if not entries:
+            if add is None:
+                return 0
+            return self.write(add, note=note or "row_delta", ts=ts)
+        cur = entries[-1]
+        if add is not None:
+            self._check_append_schema(cur, add)
+        delete = (
+            self._write_eq_delete(entries, delete_keys, cols)
+            if delete_keys is not None
+            else None
+        )
+        stage = self._stage_rows(cur, add) if add is not None else None
+        return self._commit_delta(cur, stage, delete, note or "row_delta", ts)
 
     def delete_where(
         self,
@@ -1335,18 +1364,15 @@ class SnapshotTable:
         # empty delete => no commit (the dir becomes an orphan, reclaimed by
         # expire_snapshots' sweep); counted from the written footers —
         # KB-scale driver reads, no second Spark job over the data
-        n = _parquet_dir_rows(tmp)
-        if n == 0:
-            import shutil
-
+        if _parquet_dir_rows(tmp) == 0:
             shutil.rmtree(tmp, ignore_errors=True)
             return entries[-1]["version"]
         dd = self._claim_delete_dir(tmp, dd)
         # paths stamp (ADVICE r9): recorded _file values are lineage-dir-
         # relative; the reader REFUSES unstamped delete files whose paths
         # look absolute (the pre-r9 scheme) instead of silently un-deleting.
-        return self._append_delete_entry(
-            entries, {"dir": dd, "kind": "pos", "paths": "rel"},
+        return self._commit_delta(
+            entries[-1], None, {"dir": dd, "kind": "pos", "paths": "rel"},
             note or "delete_where", ts,
         )
 
@@ -1367,7 +1393,18 @@ class SnapshotTable:
         entries = self.versions()
         if not entries:
             raise FileNotFoundError(f"no snapshots at {self.path}")
+        return self._commit_delta(
+            entries[-1], None, self._write_eq_delete(entries, keys, cols),
+            note or f"delete_by_key {cols}", ts,
+        )
 
+    def _write_eq_delete(
+        self, entries: list[dict], keys: DataFrame, cols: list[str]
+    ) -> dict | None:
+        """Write the distinct ``cols`` rows of ``keys`` as an equality-delete
+        file and claim its dir; the delete descriptor for
+        :meth:`_commit_delta`, or None (nothing left behind) when there are
+        no keys. NULL keys raise."""
         key_rows = keys.select(*cols).distinct()
         dd = self._next_delete_dir(entries)
         # writer-unique scratch; the final name is claimed atomically after
@@ -1393,22 +1430,13 @@ class SnapshotTable:
             )
             nulls = {"_fallback": bad}
         if any(v > 0 for v in nulls.values()):
-            import shutil
-
             shutil.rmtree(tmp, ignore_errors=True)
             raise ValueError(f"equality-delete keys contain NULLs in {cols}")
         if _parquet_dir_rows(tmp) == 0:
-            import shutil
-
             shutil.rmtree(tmp, ignore_errors=True)
-            return entries[-1]["version"]
+            return None
         dd = self._claim_delete_dir(tmp, dd)
-        return self._append_delete_entry(
-            entries,
-            {"dir": dd, "kind": "eq", "cols": list(cols)},
-            note or f"delete_by_key {cols}",
-            ts,
-        )
+        return {"dir": dd, "kind": "eq", "cols": list(cols)}
 
     # -- deletion vectors (Iceberg v3) --------------------------------------
     @staticmethod
@@ -1491,8 +1519,6 @@ class SnapshotTable:
         # applied), so merged ⊇ old with equality iff nothing new matched:
         # equal cardinality ⇒ no commit (footer-scale check, no extra job)
         if self._dv_total_card(tmp) == prev_card:
-            import shutil
-
             shutil.rmtree(tmp, ignore_errors=True)
             return cur["version"]
         dd = self._claim_delete_dir(tmp, dd)
@@ -1504,7 +1530,7 @@ class SnapshotTable:
         delete = {"dir": dd, "kind": "dv", "paths": "rel"}
         if chain:
             delete["supersedes"] = chain
-        return self._append_delete_entry(entries, delete, note, ts)
+        return self._commit_delta(cur, None, delete, note, ts)
 
     def rewrite_delete_files(
         self,
@@ -1977,8 +2003,6 @@ class SnapshotTable:
                 # all affected rows were deleted and other files remain: no
                 # empty data files needed (but keep one when the table would
                 # otherwise have NO files — reads need a schema)
-                import shutil
-
                 shutil.rmtree(stage, ignore_errors=True)
             else:
                 new_rels = self._ingest_stage(
@@ -2279,8 +2303,9 @@ class SnapshotTable:
         everything committed before the pick, exactly Iceberg's
         commit-time sequence assignment). Anything non-composable on
         either side — a rollback, a compaction rewrite, a delete fold, a
-        branch deletion vector (merged against branch-local state), or a
-        replaced lineage — raises :class:`CommitConflict`: nothing is
+        branch deletion vector (merged against branch-local state), files
+        added with or after a branch equality delete (a branch MERGE), or
+        a replaced lineage — raises :class:`CommitConflict`: nothing is
         ever silently dropped. Each picked commit lands as its own main
         commit under the CAS lock (so a conflict mid-sequence leaves the
         already-picked PREFIX applied — a consistent converged prefix,
@@ -2383,22 +2408,24 @@ class SnapshotTable:
                     "pos-or-eq-delete — cherry-pick refuses (fold, rollback,"
                     " rewrite, and deletion-vector merges are branch-local)"
                 )
-            if own_m and eq_delete_picked:
-                # an EQUALITY delete earlier in the pick set must not apply
-                # to this later branch append, but the append's files keep
-                # their branch-version sequence stamps while the delete was
+            own_eq = any(d.get("kind") == "eq" for d in own_d)
+            if own_m and (eq_delete_picked or own_eq):
+                # an EQUALITY delete earlier in the pick set — or in the
+                # same row-delta commit (a branch merge_into) — must not
+                # apply to this commit's files, but the files keep their
+                # branch-version sequence stamps while the delete is
                 # restamped to the (larger) pick-time sequence — one scalar
                 # sequence cannot order "after main's concurrent appends but
-                # before the branch's own later files". Positional deletes
-                # are immune (they name fork-time files outright).
+                # before the branch's own files". Positional deletes are
+                # immune (they name fork-time files outright).
                 raise CommitConflict(
-                    "branch history appends AFTER an equality delete — the "
-                    "restamped delete would wrongly apply to those files; "
-                    "publish this branch by fast_forward after rebasing "
-                    "main, or re-apply the changes via merge_into"
+                    "branch history appends AFTER an equality delete (or "
+                    "in the same row-delta commit) — the restamped delete "
+                    "would wrongly apply to those files; publish this "
+                    "branch by fast_forward after rebasing main, or "
+                    "re-apply the changes via merge_into"
                 )
-            if any(d.get("kind") == "eq" for d in own_d):
-                eq_delete_picked = True
+            eq_delete_picked = eq_delete_picked or own_eq
 
             def _build(fresh, own_m=own_m, own_d=own_d, e=e):
                 head = fresh[-1]
@@ -2521,8 +2548,6 @@ class SnapshotTable:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(tmp)
         if os.path.isdir(final):
-            import shutil
-
             shutil.rmtree(final)
         os.rename(tmp, final)
         if partition_by:
@@ -2622,10 +2647,11 @@ class SnapshotTable:
         (a fresh lineage, like :meth:`write`).
 
         ``mode="append"``: the audited rows are ADDED to the current
-        snapshot through the fast-append commit — staged files move into the
-        lineage dir under a fresh data-sequence prefix, so prior rows
+        snapshot through :meth:`append`'s commit — staged files move into
+        the lineage dir under a fresh data-sequence prefix, so prior rows
         survive, carried equality deletes (all strictly older) cannot touch
-        the published rows, and the cost is O(staged files). This is the
+        the published rows, a concurrent append is rebased onto rather
+        than refused, and the cost is O(staged files). This is the
         more common Iceberg WAP shape: audit a day's increment, then graft
         it onto the table. The staged partition spec must match the
         lineage's."""
@@ -2650,39 +2676,15 @@ class SnapshotTable:
                     "publish requires matching layouts"
                 )
             if _parquet_dir_rows(staged) == 0:
-                import shutil
-
                 shutil.rmtree(staged, ignore_errors=True)
                 return cur["version"]  # no empty commits, as append()
             if "schema_id" in cur:
                 self._check_staged_schema(staged, cur, partition_by)
-            version = cur["version"] + 1
-            dest = os.path.join(self.path, cur["data_dir"])
-            new_rels = self._ingest_stage(staged, dest, f"s{version:05d}-")
-            mname = self._write_manifest_file(version, new_rels)
-            new_entry = {
-                "version": version,
-                "data_dir": cur["data_dir"],
-                "manifests": cur["manifests"] + [mname],
-                "base_seq": cur.get("base_seq", cur["version"]),
-                "has_appends": True,
-                "ts": time.time() if ts is None else ts,
-                "note": note or f"publish {stage_id} (append)",
-            }
-            if cur.get("partition_by"):
-                new_entry["partition_by"] = list(cur["partition_by"])
-            if cur.get("sort_by"):
-                # the spec is CARRIED, not enforced: publish must stay
-                # O(staged files), so a sorted lineage expects its stager
-                # to have clustered the audited increment already
-                new_entry["sort_by"] = list(cur["sort_by"])
-            if cur.get("deletes"):
-                new_entry["deletes"] = list(cur["deletes"])
-            self._carry_schema(new_entry, cur)
-            self._commit(
-                entries + [new_entry], expected_head=cur["version"]
+            # a sorted lineage's sort spec is CARRIED, not enforced: publish
+            # stays O(staged files), so the stager clusters the increment
+            return self._commit_delta(
+                cur, staged, None, note or f"publish {stage_id} (append)", ts
             )
-            return version
         version = (entries[-1]["version"] + 1) if entries else 1
         cur = entries[-1] if entries else None
         if cur is not None and "schema_id" in cur:
@@ -2719,8 +2721,6 @@ class SnapshotTable:
         return version
 
     def discard_staged(self, stage_id: str) -> None:
-        import shutil
-
         staged = os.path.join(self.path, f"stage_{stage_id}")
         if not os.path.isdir(staged):
             raise FileNotFoundError(f"no staged write {stage_id!r}")
@@ -3733,8 +3733,6 @@ class SnapshotTable:
         list it.
 
         Returns (expired version numbers, removed dirs/files)."""
-        import shutil
-
         if self.branch:
             raise ValueError(
                 "expire_snapshots runs on the main handle — a branch pins "

@@ -1,7 +1,7 @@
 """Round-10 storage-layer semantics: manifest-list commits, rollback-aware
 changelog scans (with the value-diff fallback across rewrite boundaries),
-WAP staged-append publish, the pos-delete path-scheme guard, and dual-commit
-CDC replay stamping."""
+WAP staged-append publish, the pos-delete path-scheme guard, and CDC
+batch replay stamping."""
 
 import json
 import os
@@ -190,10 +190,13 @@ class TestPosDeletePathGuard:
         assert t.read(spark).count() == 7
 
 
-class TestCdcRetireStamp:
-    def test_crash_between_commits_does_not_stack_deletes(self, spark, tdir):
-        """ADVICE r9: a crash after the delete commit but before the append
-        commit must not accumulate one equality-delete file per replay."""
+class TestCdcBatchStamp:
+    def test_crash_before_link_does_not_stack_deletes(
+        self, spark, tdir, monkeypatch
+    ):
+        """A batch whose payload was written but whose commit never linked
+        replays into exactly ONE new entry with ONE new delete file; the
+        crashed attempt's delete dir is an orphan retention reclaims."""
         from iceberg_evolve_spark.streaming.sink import mor_cdc_batch_writer
 
         CDC_SCHEMA = "k long, val string, op string, ts_ms long"
@@ -208,23 +211,37 @@ class TestCdcRetireStamp:
         b1 = spark.createDataFrame(
             [(1, "u1", "u", 100), (2, None, "d", 101)], CDC_SCHEMA
         )
-        # simulate the crash window: run ONLY the delete commit by calling
-        # the real writer, then rolling the append commit back off the log
-        writer(b1, 1)
         t = SnapshotTable(tbl)
-        entries = t.versions()
-        assert "append" in (entries[-1].get("note") or "")
-        # crash: the append's commit file was never linked
-        os.unlink(t._commit_file(entries[-1]["version"]))
-        n_delete_files = len(t.versions()[-1].get("deletes", []))
+        n_entries = len(t.versions())
+        n_deletes = len(t.versions()[-1].get("deletes", []))
+
+        def crash(self, entry):
+            raise RuntimeError("crash before the commit link")
+
+        # the payload (delete file, data files, manifest) is staged, then
+        # the process dies before the commit file is linked
+        with monkeypatch.context() as m:
+            m.setattr(SnapshotTable, "_link_commit", crash)
+            with pytest.raises(RuntimeError, match="crash before"):
+                writer(b1, 1)
+        assert len(t.versions()) == n_entries
+        orphans = {n for n in os.listdir(tbl) if n.startswith("d")}
+        assert len(orphans) == 1
         writer(b1, 1)  # at-least-once replay
-        t2 = SnapshotTable(tbl)
-        # the retire stamp skipped the delete step: same delete-file count
-        assert len(t2.versions()[-1].get("deletes", [])) == n_delete_files
-        got = sorted((r["k"], r["val"]) for r in t2.read(spark).collect())
+        entries = t.versions()
+        assert len(entries) == n_entries + 1
+        assert len(entries[-1]["deletes"]) == n_deletes + 1
+        assert entries[-1]["deletes"][-1]["dir"] not in orphans
+        got = sorted((r["k"], r["val"]) for r in t.read(spark).collect())
+        assert got == [(0, "v0"), (1, "u1"), (3, "v3"), (4, "v4")]
+        writer(b1, 1)  # a replay after the commit is skipped whole
+        assert len(t.versions()) == n_entries + 1
+        _expired, removed = t.expire_snapshots(keep_last=len(entries))
+        assert orphans <= set(removed)
+        got = sorted((r["k"], r["val"]) for r in t.read(spark).collect())
         assert got == [(0, "v0"), (1, "u1"), (3, "v3"), (4, "v4")]
 
-    def test_both_commits_stamped(self, spark, tdir):
+    def test_one_commit_per_batch_stamped(self, spark, tdir):
         from iceberg_evolve_spark.streaming.sink import mor_cdc_batch_writer
 
         CDC_SCHEMA = "k long, val string, op string, ts_ms long"
@@ -239,10 +256,13 @@ class TestCdcRetireStamp:
             ),
             1,
         )
-        notes = [(e.get("note") or "") for e in SnapshotTable(tbl).versions()]
-        tokens = [n.split(" ", 1)[0] for n in notes]
-        assert "cdc-batch:1:retire" in tokens  # delete commit stamped
-        assert "cdc-batch:1" in tokens         # final commit stamped
+        entries = SnapshotTable(tbl).versions()
+        tokens = [(e.get("note") or "").split(" ", 1)[0] for e in entries]
+        # one log entry per batch: the upsert batch's delete and rows
+        # land together under the batch token
+        assert tokens == ["cdc-batch:0", "cdc-batch:1"]
+        assert [d["kind"] for d in entries[-1]["deletes"]] == ["eq"]
+        assert len(entries[-1]["manifests"]) == 2
 
 
 class TestManifestCommits:
@@ -918,8 +938,8 @@ class TestStreamingVectorMaintenance:
 
 
 class TestMergeInto:
-    """MERGE INTO with merge-on-read commits: <=1 equality-delete + <=1
-    fast-append per merge, never a data-file rewrite."""
+    """MERGE INTO with merge-on-read commits: one row-delta commit per
+    merge, never a data-file rewrite."""
 
     def _seed(self, spark, tdir):
         from iceberg_evolve_spark.sources.snapshots import SnapshotTable
@@ -938,7 +958,7 @@ class TestMergeInto:
             [(2, "new2"), (4, "new4"), (10, "new10")], "k long, val string"
         )
         v = merge_into(spark, t, src, on="k")
-        assert v == 3  # one delete commit + one append commit
+        assert v == 2  # one row-delta commit
         got = sorted((r["k"], r["val"]) for r in t.read(spark).collect())
         assert got == [
             (0, "old0"), (1, "old1"), (2, "new2"), (3, "old3"),
@@ -1181,11 +1201,14 @@ class TestSnapshotStreamSource:
             )
 
     def test_skip_mode_streams_past_changes(self, spark, tdir):
+        from iceberg_evolve_spark.operators.merge import merge_into
         tbl = os.path.join(tdir, "t")
         t = SnapshotTable(tbl)
         t.write(spark.range(0, 10))
         t.delete_where(spark, F.col("id") == 0)
         t.append(spark.range(50, 52))
+        # a row delta: its delete changes the stack, its rows still stream
+        merge_into(spark, t, spark.range(60, 62), on="id")
         self._start(
             spark, tbl,
             os.path.join(tdir, "out"), os.path.join(tdir, "ck"),
@@ -1196,8 +1219,9 @@ class TestSnapshotStreamSource:
             for r in spark.read.parquet(os.path.join(tdir, "out")).collect()
         )
         # bootstrap emits v1's files; the delete commit is skipped (no new
-        # rows); the append lands — rows, not visibility, is the contract
-        assert got == list(range(10)) + [50, 51]
+        # rows); the append and the merge's inserted rows land — rows, not
+        # visibility, is the contract
+        assert got == list(range(10)) + [50, 51, 60, 61]
 
     def test_expired_offset_detected(self, spark, tdir):
         from iceberg_evolve_spark.sources.snapshot_stream import _added_files

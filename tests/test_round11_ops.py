@@ -312,8 +312,8 @@ class TestCommitCAS:
         stale_entries = t.versions()  # snapshot of the log pre-race
         t.delete_where(spark, F.col("id") == 1, vector=True)  # the winner
         with pytest.raises(CommitConflict, match="delete"):
-            t._append_delete_entry(
-                stale_entries,
+            t._commit_delta(
+                stale_entries[-1], None,
                 {"dir": "d99999", "kind": "dv", "paths": "rel"},
                 "loser", None,
             )

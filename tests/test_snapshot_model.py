@@ -148,7 +148,8 @@ def test_random_op_sequences_match_model(spark, ops):
 _BRANCH_OPS = st.lists(
     st.tuples(
         st.sampled_from(
-            ["b_append", "b_delete_pred", "m_append", "m_delete_pred"]
+            ["b_append", "b_delete_pred", "b_upsert", "m_append",
+             "m_delete_pred"]
         ),
         st.integers(min_value=0, max_value=9),
     ),
@@ -171,7 +172,12 @@ def test_branch_cherry_pick_converges_to_model(spark, ops):
     deletes ever touch the other side's appends (positional deletes name
     fork-or-own files only). Id ranges are disjoint by construction
     (fork < 100, branch appends 100-499, main appends >= 500) so the
-    model is exact."""
+    model is exact. A branch MERGE (``b_upsert``: one row delta adding
+    rows and equality-deleting their keys) either converges to the same
+    model or is refused with CommitConflict — never a silent row loss."""
+    from iceberg_evolve_spark.operators.merge import merge_into
+    from iceberg_evolve_spark.sources.snapshots import CommitConflict
+
     tmp = tempfile.mkdtemp(prefix="ies-model-branch-")
     try:
         t = SnapshotTable(os.path.join(tmp, "t"))
@@ -202,6 +208,17 @@ def test_branch_cherry_pick_converges_to_model(spark, ops):
                     for i, g in bstate.items()
                     if not (cut <= i < cut + 3)
                 }
+            elif kind == "b_upsert":
+                # update up to two live branch rows, insert two fresh ones
+                ids = sorted(bstate)
+                upd = ids[p % len(ids):][:2] if ids else []
+                src = {i: 9 for i in upd} | _rows(bnext, bnext + 2)
+                bnext += 2
+                rows = spark.createDataFrame(
+                    list(src.items()), "id long, g long"
+                )
+                merge_into(spark, b, rows, on="id")
+                bstate.update(src)
             elif kind == "m_append":
                 new = _rows(mnext, mnext + 4)
                 mnext += 4
@@ -222,12 +239,23 @@ def test_branch_cherry_pick_converges_to_model(spark, ops):
                     for i, g in mstate.items()
                     if not (cut <= i < cut + 3)
                 }
-        t.cherry_pick("audit")
+        try:
+            t.cherry_pick("audit")
+        except CommitConflict:
+            # only a picked row delta may be refused, and nothing both
+            # sides kept is lost (the refused pick and those after it add
+            # and delete nothing)
+            assert any(kind == "b_upsert" for kind, _p in ops)
+            got = {r["id"] for r in t.read(spark).collect()}
+            assert {i for i in fork if i in bstate and i in mstate} <= got
+            assert {i for i in mstate if i >= 500} <= got
+            return
         expect = (
-            # fork rows: survive iff neither side deleted them
+            # fork rows: survive iff neither side deleted them (a branch
+            # update re-adds the row with the branch's value)
             {
-                i: g
-                for i, g in fork.items()
+                i: bstate[i]
+                for i in fork
                 if i in bstate and i in mstate
             }
             # branch appends: survive the branch's own deletes

@@ -117,6 +117,12 @@ def test_log_is_valid_json_after_every_commit(spark, table):
     t.stage(rows(55, 60), "wap")
     t.publish("wap", mode="append")
     _assert_log_sound(t)
+    t.row_delta(
+        add=rows(60, 62),
+        delete_keys=spark.createDataFrame([(4,), (61,)], "id long"),
+        cols=["id"],
+    )
+    _assert_log_sound(t)
     j = copy.deepcopy(t.table_schema().to_json())
     j["fields"].append(
         {"id": 99, "name": "note", "type": "string", "required": False}
@@ -125,7 +131,7 @@ def test_log_is_valid_json_after_every_commit(spark, table):
     _assert_log_sound(t)
     t.expire_snapshots(keep_last=2)
     _assert_log_sound(t)
-    live = set(range(60)) - {1, 2, 3}
+    live = set(range(62)) - {1, 2, 3, 4}
     assert {r["id"] for r in t.read(spark).collect()} == live
 
 
