@@ -4713,7 +4713,6 @@ def _ivf_index(spark: SparkSession, sf_dir: str):
             "vec_id",
             "embedding",
             n_centroids=IVF_CELLS,
-            method="sample",
             sample_seed=IVF_SEED,  # one constant drives BOTH engines' md5 order
             quantize=True,
             # pq=True: the same build also carries the product-quantization

@@ -196,7 +196,6 @@ def pagerank(
     iterations: int = 3,
     damping_pct: int = 85,
     scale: int = 10**10,
-    eager_checkpoint: bool | None = None,
 ) -> DataFrame:
     """PageRank in exact fixed-point integer arithmetic — the iterative
     link-analysis operator, built so every intermediate is a BIGINT and the
@@ -218,8 +217,8 @@ def pagerank(
     the caller (under AQE even a lazy per-round checkpoint materializes each
     round's shuffle stages as its own blocking query; skipping them runs the
     whole loop as one AQE query, measured 1.2–1.6× faster at sf0.1).
-    ``eager_checkpoint`` defaults to True above 8 iterations, where
-    unmaterialized plan nesting would start to tax the planner
+    Above 8 iterations, where unmaterialized plan nesting would start to
+    tax the planner, every round is eagerly checkpointed instead
     (convergence-checked loops like :func:`connected_components` must
     materialize per round — they read a scalar each round, via a lazy
     checkpoint whose convergence aggregate is the materializing action).
@@ -250,8 +249,7 @@ def pagerank(
         .distinct()
         .persist()
     )
-    if eager_checkpoint is None:
-        eager_checkpoint = iterations > 8
+    eager_checkpoint = iterations > 8
     base = (100 - damping_pct) * scale // 100
     ranks = nodes.select("node", F.lit(scale).cast("long").alias("r"))
     if eager_checkpoint:
@@ -354,7 +352,6 @@ def label_propagation(
     src: str = "src",
     dst: str = "dst",
     rounds: int = 4,
-    eager_checkpoint: bool | None = None,
 ) -> DataFrame:
     """Synchronous label propagation (Raghavan et al. 2007) — community
     detection as K deterministic rounds of "adopt the most frequent label
@@ -372,7 +369,7 @@ def label_propagation(
     the symmetrized edge list with the label table on the source key, one
     map-side-combined (node, label) count, one argmax aggregation — all
     partitioned on a node id, lineage truncated per round with
-    ``localCheckpoint`` (lazy for small fixed round counts). Returns
+    ``localCheckpoint`` (lazy up to 8 rounds, eager above). Returns
     (node, label); nodes sharing a label are one community.
 
     Node ids must be NUMERIC: the tie-break negates the label inside
@@ -395,8 +392,7 @@ def label_propagation(
         .distinct()
         .persist()
     )
-    if eager_checkpoint is None:
-        eager_checkpoint = rounds > 8
+    eager_checkpoint = rounds > 8
     labels = (
         e.select(F.col("s").alias("node"))
         .union(e.select(F.col("d").alias("node")))

@@ -3,10 +3,11 @@
 Baseline: exact brute-force cosine top-k — a single narrow map + distributed
 TopK (Spark's ``TakeOrderedAndProject``), no shuffle of the corpus. Scale paths:
 
-* :func:`topk_ivf` — IVF-style two-stage search: KMeans-partition the corpus once
-  (MLlib, Catalyst-external but offline), then probe only the ``n_probe`` nearest
-  cells. At 100 TB the cell assignment becomes the table's physical partition key
-  so a probe prunes partitions at the parquet/Iceberg scan.
+* :func:`topk_ivf` — IVF-style two-stage search: partition the corpus once
+  around sampled centroids (:func:`sample_centroids`), then probe only the
+  ``n_probe`` nearest cells. At 100 TB the cell assignment becomes the
+  table's physical partition key so a probe prunes partitions at the
+  parquet/Iceberg scan.
 * :func:`lsh_bucket` — deterministic random-hyperplane sign buckets (hash-derived
   hyperplanes, no stored model) for join-style candidate generation.
 
@@ -337,41 +338,12 @@ def nearest_cells(
     return order[:n_probe]
 
 
-def _fit_quantizer(
-    df: DataFrame,
-    vec_col: str,
-    n_centroids: int,
-    seed: int,
-    max_iter: int,
-):
-    """Fit the IVF coarse quantizer (MLlib KMeans) and return it with its
-    centroid matrix. ``max_iter`` is capped low on purpose: an ANN coarse
-    quantizer needs roughly-balanced cells, not converged centroids — extra
-    iterations buy recall nothing."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    import numpy as np
-
-    from iceberg_evolve_spark.functions.dedup import _ensure_parallelism
-
-    df = _ensure_parallelism(df)
-    vecs = df.withColumn(
-        "_features", array_to_vector(F.col(vec_col).cast("array<double>"))
-    )
-    model = KMeans(
-        k=n_centroids, seed=seed, featuresCol="_features", maxIter=max_iter
-    ).fit(vecs)
-    centers = np.array([np.asarray(c) for c in model.clusterCenters()])
-    return vecs, model, centers
-
-
 class IVFIndex:
     """An OFFLINE-built IVF index: the corpus stored partitioned by its coarse
     cell, plus the (tiny, driver-held) centroid matrix.
 
     This is the split the 100 TB deployment needs: :func:`build_ivf_index` runs
-    once per corpus version (the expensive iterative KMeans scan), writing the
+    once per corpus version (the full-corpus centroid scan), writing the
     data physically partitioned by ``_cell``; :meth:`probe` is then a pure
     read-side query whose plan is a partition-pruned parquet scan + TopK —
     no model fit, no full-corpus scan, sub-second at any corpus size. The
@@ -654,10 +626,7 @@ def build_ivf_index(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     n_centroids: int = 16,
-    seed: int = 42,
-    max_iter: int = 8,
     quantize: bool = False,
-    method: str = "sample",
     sample_seed: str = "ivf",
     pq: bool = False,
     pq_m: int = 8,
@@ -670,11 +639,9 @@ def build_ivf_index(
     to the data (``_ivf_centroids.json``) so :func:`load_ivf_index` can reopen
     the index without refitting.
 
-    ``method='sample'`` (default) uses :func:`sample_centroids` — deterministic,
+    Centroids come from :func:`sample_centroids` — deterministic,
     engine-portable, assignment is a pure Catalyst projection, and the whole
-    build+probe is replayable by a SQL oracle. ``method='kmeans'`` is the
-    opt-in refinement (MLlib fit; better cell balance on clustered corpora,
-    but a model-dependent assignment no other engine can replay).
+    build+probe is replayable by a SQL oracle.
 
     With ``quantize=True`` the store also carries the int8 copy (``q`` +
     ``scale``, FAISS-SQ8 layout from :mod:`.embedding`) enabling
@@ -682,22 +649,12 @@ def build_ivf_index(
     import json
     import os
 
-    if method == "sample":
-        # sample_seed (not the KMeans ``seed``) governs the md5 ordering here;
-        # callers replaying the build in SQL must use the same string
-        centers = sample_centroids(df, id_col, vec_col, n_centroids, seed=sample_seed)
-        assigned = df.select(
-            *df.columns, assign_cell(F.col(vec_col), centers).alias("_cell")
-        )
-    elif method == "kmeans":
-        vecs, model, centers = _fit_quantizer(
-            df, vec_col, n_centroids, seed, max_iter
-        )
-        assigned = model.transform(vecs).select(
-            *df.columns, F.col("prediction").alias("_cell")
-        )
-    else:
-        raise ValueError(f"unknown IVF method {method!r}; use 'sample' or 'kmeans'")
+    # sample_seed governs the md5 ordering; callers replaying the build in
+    # SQL must use the same string
+    centers = sample_centroids(df, id_col, vec_col, n_centroids, seed=sample_seed)
+    assigned = df.select(
+        *df.columns, assign_cell(F.col(vec_col), centers).alias("_cell")
+    )
     if quantize:
         from iceberg_evolve_spark.functions.embedding import quantize_int8_cols
 
@@ -757,34 +714,21 @@ def topk_ivf(
     vec_col: str = "embedding",
     n_centroids: int = 16,
     n_probe: int = 4,
-    seed: int = 42,
     round_digits: int | None = 6,
-    max_iter: int = 8,
-    method: str = "sample",
     sample_seed: str = "ivf",
 ) -> DataFrame:
     """One-shot IVF top-k (centroid pick + probe in a single call) for ad-hoc
     use on corpora that are not worth indexing. Anything served repeatedly
     should use :func:`build_ivf_index` once and :meth:`IVFIndex.probe` per
     query — that keeps the full-corpus centroid scan out of the query path."""
-    if method == "sample":
-        # sample_seed (not the KMeans ``seed``) governs the md5 ordering here;
-        # callers replaying the build in SQL must use the same string
-        centers = sample_centroids(df, id_col, vec_col, n_centroids, seed=sample_seed)
-        assigned = df.select(
-            id_col,
-            F.col(vec_col),
-            assign_cell(F.col(vec_col), centers).alias("_cell"),
-        )
-    elif method == "kmeans":
-        vecs, model, centers = _fit_quantizer(
-            df, vec_col, n_centroids, seed, max_iter
-        )
-        assigned = model.transform(vecs).select(
-            id_col, F.col(vec_col), F.col("prediction").alias("_cell")
-        )
-    else:
-        raise ValueError(f"unknown IVF method {method!r}; use 'sample' or 'kmeans'")
+    # sample_seed governs the md5 ordering; callers replaying the build in
+    # SQL must use the same string
+    centers = sample_centroids(df, id_col, vec_col, n_centroids, seed=sample_seed)
+    assigned = df.select(
+        id_col,
+        F.col(vec_col),
+        assign_cell(F.col(vec_col), centers).alias("_cell"),
+    )
 
     probe = nearest_cells(query_vec, [list(map(float, c)) for c in centers], n_probe)
 

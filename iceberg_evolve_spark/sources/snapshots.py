@@ -64,6 +64,10 @@ Disciplines (the same ones real table formats automate):
   application is ``explode`` + anti-join: pure JVM, the scan side never
   leaves whole-stage codegen. Superseded vectors stay on disk for time
   travel until retention reclaims them.
+* **Two entry builders.** Every commit on the current lineage builds its
+  entry with ``SnapshotTable._successor`` (which decides what it inherits
+  from the head); ``write`` and the overwrite ``publish`` build a fresh
+  lineage's entry with ``SnapshotTable._new_lineage``.
 * **Compaction is scoped.** ``rewrite_data_files`` rewrites ONLY the files
   referenced by delete files (positional deletes name their files; equality
   deletes scope by key-column bound overlap, conservative on unknowns) plus
@@ -515,19 +519,44 @@ class SnapshotTable:
     # one KB-scale commit and reads at full speed across generations.
 
     @staticmethod
-    def _carry_schema(entry: dict, src: dict) -> dict:
-        """Copy schema tracking from ``src`` onto a new entry whose
-        ``manifests`` are already final: known manifests keep their
-        recorded generation, new ones are stamped with the current id."""
-        if "schema_id" not in src:
-            return entry
-        sid = src["schema_id"]
-        known = src.get("manifest_schemas", {})
-        entry["schema_id"] = sid
-        entry["schemas"] = dict(src["schemas"])
-        entry["manifest_schemas"] = {
-            m: known.get(m, sid) for m in entry["manifests"]
+    def _successor(
+        head: dict, version: int, note: str, ts: float | None, **changes
+    ) -> dict:
+        """THE entry builder of every commit that stays on ``head``'s
+        lineage (evolve, rollback, row delta, delete fold, scoped
+        compaction, cherry-pick). The new entry inherits ``head``'s
+        data_dir, manifests, base sequence, ``has_appends``,
+        ``partition_by``, ``sort_by``, ``deletes`` and schema tracking;
+        ``changes`` overrides any key, and a falsy change drops it (an
+        entry records flags and lists only when set). Schema tracking is
+        re-derived for the final manifest list: known manifests keep their
+        recorded generation, new ones take the entry's current id."""
+        entry = {
+            "version": version,
+            "data_dir": head["data_dir"],
+            "manifests": list(head["manifests"]),
+            "base_seq": head.get("base_seq", head["version"]),
+            "ts": time.time() if ts is None else ts,
+            "note": note,
         }
+        for prop in ("has_appends", "partition_by", "sort_by", "deletes"):
+            if head.get(prop):
+                v = head[prop]
+                entry[prop] = list(v) if isinstance(v, list) else v
+        for key, v in changes.items():
+            if v:
+                entry[key] = v
+            else:
+                entry.pop(key, None)
+        if "schema_id" in head:
+            sid = entry.setdefault("schema_id", head["schema_id"])
+            entry.setdefault("schemas", dict(head["schemas"]))
+            known = entry.get("manifest_schemas") or head.get(
+                "manifest_schemas", {}
+            )
+            entry["manifest_schemas"] = {
+                m: known.get(m, sid) for m in entry["manifests"]
+            }
         return entry
 
     def _entry_schema(self, entry: dict):
@@ -792,6 +821,17 @@ class SnapshotTable:
                 "rule: a recycled id would resurrect the dropped field's "
                 "historical data)"
             )
+        # a renamed sort column re-points the recorded sort order (the
+        # physical clustering is untouched — footer stats live in the
+        # files, reached through the rename at plan time); partition
+        # columns can't get here (gated above)
+        from iceberg_evolve_spark.operators.evolution import RenameColumn
+
+        renames = {
+            op.name: op.target
+            for op in ops
+            if isinstance(op, RenameColumn) and "." not in op.name
+        }
 
         def _build(fresh: list[dict]) -> dict:
             head = self._composable_head(fresh, cur, allow_fold=False)
@@ -804,55 +844,22 @@ class SnapshotTable:
                 )
             self._gate_schema_change(head, ops)  # fresh deletes too
             new_sid = max(int(k) for k in head["schemas"]) + 1
-            entry = {
-                "version": head["version"] + 1,
-                "data_dir": head["data_dir"],
-                "manifests": list(head["manifests"]),
-                "base_seq": head.get("base_seq", head["version"]),
-                "ts": time.time() if ts is None else ts,
-                "note": note or f"evolve schema -> id {new_sid}",
-                "schema_id": new_sid,
-                "schemas": {
+            return self._successor(
+                head,
+                head["version"] + 1,
+                note or f"evolve schema -> id {new_sid}",
+                ts,
+                schema_id=new_sid,
+                schemas={
                     **head["schemas"],
-                    str(new_sid): schema_to_json(
-                        new_schema.struct, new_sid
-                    ),
+                    str(new_sid): schema_to_json(new_schema.struct, new_sid),
                 },
-                "manifest_schemas": dict(
-                    head.get("manifest_schemas", {})
-                ),
-                "schema_evolution": {
+                schema_evolution={
                     "from": int(head["schema_id"]),
                     "to": new_sid,
                 },
-            }
-            for prop in ("partition_by", "sort_by", "has_appends"):
-                if head.get(prop):
-                    entry[prop] = (
-                        list(head[prop])
-                        if isinstance(head[prop], list)
-                        else head[prop]
-                    )
-            if entry.get("sort_by"):
-                # a renamed sort column re-points the recorded sort order
-                # (the physical clustering is untouched — footer stats
-                # live in the files, reached through the rename at plan
-                # time); partition columns can't get here (gated above)
-                from iceberg_evolve_spark.operators.evolution import (
-                    RenameColumn,
-                )
-
-                renames = {
-                    op.name: op.target
-                    for op in ops
-                    if isinstance(op, RenameColumn) and "." not in op.name
-                }
-                entry["sort_by"] = [
-                    renames.get(c, c) for c in entry["sort_by"]
-                ]
-            if head.get("deletes"):
-                entry["deletes"] = list(head["deletes"])
-            return entry
+                sort_by=[renames.get(c, c) for c in head.get("sort_by", [])],
+            )
 
         return self._commit_build(_build)
 
@@ -897,46 +904,7 @@ class SnapshotTable:
                 f"{self.branch!r}; use append()/delete_*/merge instead, "
                 "or write on main"
             )
-        entries = self.versions()
-        version = (entries[-1]["version"] + 1) if entries else 1
-        # Payload placement is COLLISION-SAFE under the lock-free commit
-        # plane: the parquet write lands in a writer-unique scratch dir, the
-        # preferred lineage name is claimed by atomic rename (rename onto an
-        # existing non-empty dir FAILS, never replaces), and on a collision —
-        # a crashed retry's orphan, or a concurrent writer that placed its
-        # payload first — this writer takes a uuid-suffixed lineage name
-        # instead. data_dir is carried per entry, so nothing requires the
-        # deterministic name; whichever writer loses the CAS below leaves an
-        # ordinary unreferenced orphan for retention's sweep. (The pre-r13
-        # scheme rmtree'd an existing dir at the deterministic name, which
-        # could destroy a CONCURRENT winner's freshly-committed data files —
-        # VERDICT r12 What's-wrong 1.)
-        data_dir, final, tmp = self._claim_lineage_target(version)
-        df = _apply_sort_order(df, sort_by, sort_files)
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(tmp)
-        data_dir, final = self._claim_lineage_dir(tmp, data_dir)
-        mname = self._write_manifest_file(version, _walk_rel_parquet(final))
-        new_entry = {
-                "version": version,
-                "data_dir": data_dir,
-                "manifests": [mname],
-                # data files written here carry no per-file sequence marker;
-                # they are the lineage BASE and inherit this sequence number
-                # (Iceberg's data sequence number, used so later equality
-                # deletes apply only to strictly older data — see append())
-                "base_seq": version,
-                "ts": time.time() if ts is None else ts,
-                "note": note,
-        }
-        if partition_by:
-            new_entry["partition_by"] = list(partition_by)
-        if sort_by:
-            new_entry["sort_by"] = list(sort_by)
-            if sort_files is not None:
-                new_entry["sort_files"] = int(sort_files)
+        tracking = None
         if schema is not None or track_schema:
             # bootstrap schema tracking (see the tracking section above):
             # an explicit Schema pins the field ids; track_schema derives
@@ -952,47 +920,91 @@ class SnapshotTable:
                     f"{sorted(f.name for f in schema.fields)} vs "
                     f"{sorted(df.columns)}"
                 )
-            new_entry["schema_id"] = 0
-            new_entry["schemas"] = {"0": schema_to_json(schema.struct, 0)}
-            new_entry["manifest_schemas"] = {mname: 0}
-        # CAS publish: a concurrent writer advancing the log raises (write()
-        # replaces the table CONTENT, but never someone else's commit)
-        self._commit(
-            entries + [new_entry],
-            expected_head=entries[-1]["version"] if entries else 0,
+            tracking = {
+                "schema_id": 0,
+                "schemas": {"0": schema_to_json(schema.struct, 0)},
+            }
+        entries = self.versions()
+        version = (entries[-1]["version"] + 1) if entries else 1
+        # writer-unique scratch: two concurrent writers never write into
+        # each other's payload dir (the lineage name is claimed after)
+        tmp = os.path.join(
+            self.path, f"v{version:05d}.{uuid.uuid4().hex[:8]}.tmp"
         )
-        return version
+        df = _apply_sort_order(df, sort_by, sort_files)
+        writer = df.write.mode("overwrite")
+        if partition_by:
+            writer = writer.partitionBy(*partition_by)
+        writer.parquet(tmp)
+        return self._new_lineage(
+            entries, tmp, note, ts, partition_by, sort_by, tracking
+        )
 
-    def _claim_lineage_target(self, version: int) -> "tuple[str, str, str]":
-        """(data_dir, final path, writer-unique scratch path) for a new
-        lineage at ``version``. Prefers the deterministic ``v{version:05d}``
-        name; if that dir already exists (crash orphan or concurrent
-        writer), picks a uuid-suffixed name up front. The scratch path is
-        always writer-unique, so two concurrent writers can never write
-        into each other's staging dir."""
+    def _new_lineage(
+        self,
+        entries: list[dict],
+        payload: str,
+        note: str | None,
+        ts: float | None,
+        partition_by: list[str] | None = None,
+        sort_by: list[str] | None = None,
+        tracking: dict | None = None,
+    ) -> int:
+        """THE entry builder of a fresh lineage (:meth:`write` and the
+        overwrite :meth:`publish`): claim a lineage dir for the parquet dir
+        written at ``payload``, write the one manifest listing its files,
+        and CAS-publish the entry on ``entries``' head — a concurrent
+        writer advancing the log raises (a new lineage replaces the table
+        CONTENT, never someone else's commit). ``tracking`` (an entry, or
+        a bootstrap ``{schema_id, schemas}``) carries schema tracking onto
+        the new lineage, every file stamped with its current id.
+
+        Placement is COLLISION-SAFE under the lock-free commit plane: the
+        preferred ``v{version}`` name is claimed by atomic rename (rename
+        onto an existing non-empty dir FAILS, never replaces), and on a
+        collision — a crashed retry's orphan, or a concurrent writer that
+        placed its payload first — this writer takes a uuid-suffixed
+        lineage name instead. data_dir is carried per entry, so nothing
+        requires the deterministic name; whichever writer loses the CAS
+        leaves an ordinary unreferenced orphan for retention's sweep."""
+        version = (entries[-1]["version"] + 1) if entries else 1
         data_dir = f"v{version:05d}"
         if os.path.isdir(os.path.join(self.path, data_dir)):
             data_dir = f"v{version:05d}-{uuid.uuid4().hex[:8]}"
-        final = os.path.join(self.path, data_dir)
-        tmp = os.path.join(
-            self.path, f"{data_dir}.{uuid.uuid4().hex[:8]}.tmp"
-        )
-        return data_dir, final, tmp
-
-    def _claim_lineage_dir(self, tmp: str, data_dir: str) -> "tuple[str, str]":
-        """Atomically claim ``data_dir`` for the payload staged at ``tmp``,
-        falling back to a uuid-suffixed lineage name when the preferred one
-        was taken between target selection and now (``os.rename`` onto an
-        existing non-empty dir fails — it can never replace a concurrent
-        writer's payload). Returns the claimed (data_dir, final path)."""
-        final = os.path.join(self.path, data_dir)
         try:
-            os.rename(tmp, final)
+            os.rename(payload, os.path.join(self.path, data_dir))
         except OSError:
-            data_dir = f"{data_dir.split('-')[0]}-{uuid.uuid4().hex[:8]}"
-            final = os.path.join(self.path, data_dir)
-            os.rename(tmp, final)
-        return data_dir, final
+            data_dir = f"v{version:05d}-{uuid.uuid4().hex[:8]}"
+            os.rename(payload, os.path.join(self.path, data_dir))
+        mname = self._write_manifest_file(
+            version, _walk_rel_parquet(os.path.join(self.path, data_dir))
+        )
+        entry = {
+            "version": version,
+            "data_dir": data_dir,
+            "manifests": [mname],
+            # the lineage's files carry no per-file sequence marker; they
+            # are its BASE and inherit this sequence number (Iceberg's data
+            # sequence number, used so later equality deletes apply only to
+            # strictly older data — see append())
+            "base_seq": version,
+            "ts": time.time() if ts is None else ts,
+            "note": note,
+        }
+        if partition_by:
+            entry["partition_by"] = list(partition_by)
+        if sort_by:
+            entry["sort_by"] = list(sort_by)
+        if tracking is not None and "schema_id" in tracking:
+            sid = tracking["schema_id"]
+            entry["schema_id"] = sid
+            entry["schemas"] = dict(tracking["schemas"])
+            entry["manifest_schemas"] = {mname: sid}
+        self._commit(
+            entries + [entry],
+            expected_head=entries[-1]["version"] if entries else 0,
+        )
+        return version
 
     def _ingest_stage(self, stage: str, dest_dir: str, prefix: str) -> list[str]:
         """Move a staged parquet write's part files into the lineage dir,
@@ -1089,26 +1101,15 @@ class SnapshotTable:
         entries = self.versions()
         target = self._entry_for(entries, version)
         new_version = entries[-1]["version"] + 1
-        new_entry = {
-            "version": new_version,
-            "data_dir": target["data_dir"],
-            "manifests": list(target["manifests"]),
-            "base_seq": target.get("base_seq", target["version"]),
-            "rollback_of": int(version),
-            "ts": time.time() if ts is None else ts,
-            "note": note or f"rollback to v{version}",
-        }
-        if target.get("has_appends"):
-            new_entry["has_appends"] = True
-        if target.get("partition_by"):
-            new_entry["partition_by"] = list(target["partition_by"])
-        if target.get("sort_by"):
-            new_entry["sort_by"] = list(target["sort_by"])
-        if target.get("deletes"):
-            new_entry["deletes"] = list(target["deletes"])
-        # a rollback restores the TARGET's schema too (its data reads
-        # under the schema it was committed with)
-        self._carry_schema(new_entry, target)
+        # the successor of the TARGET: its files, deletes and schema (its
+        # data reads under the schema it was committed with)
+        new_entry = self._successor(
+            target,
+            new_version,
+            note or f"rollback to v{version}",
+            ts,
+            rollback_of=int(version),
+        )
         # rollbacks rewrite visibility: never compose — CAS raises if any
         # writer advanced the log since the target was resolved
         self._commit(entries + [new_entry], expected_head=entries[-1]["version"])
@@ -1121,8 +1122,8 @@ class SnapshotTable:
     # plus the accumulated delete-file list — exactly Iceberg v2's
     # merge-on-read: writes stay O(rows deleted), reads subtract the delete
     # files, and compaction (:meth:`rewrite_data_files`) folds them back into
-    # clean data files when read amplification warrants it. Two delete-file
-    # kinds, as in the Iceberg spec:
+    # clean data files when read amplification warrants it. Three delete-file
+    # kinds, as in the Iceberg v2/v3 specs:
     #
     # * **positional** (`kind="pos"`): rows ``(_file, _pos)`` naming exact row
     #   positions inside named data files — produced from a predicate by
@@ -1132,11 +1133,15 @@ class SnapshotTable:
     # * **equality** (`kind="eq"`): rows of key-column values; every data row
     #   matching a key is deleted (what a CDC stream's deletes compile to —
     #   no read of the data at write time at all).
+    # * **deletion vector** (`kind="dv"`): one row per data file holding the
+    #   sorted array of its deleted positions; at most one per snapshot, each
+    #   new vector superseding the last (see the deletion-vector section).
     #
-    # Read-side application is an anti-join per kind: positional deletes join
-    # on (file, position), equality deletes on the key columns. Delete files
-    # are KBs-to-MBs against TBs of data, so both anti-joins broadcast the
-    # delete side — the scan stays a single pass with no extra shuffle.
+    # Read-side application is one anti-join per delete file: positional
+    # deletes and vectors join on (file, position), equality deletes on the
+    # key columns. A delete side at most ``BROADCAST_DELETE_MAX_BYTES`` on
+    # disk is broadcast, so the scan stays a single pass with no extra
+    # shuffle; a bigger one leaves the join strategy to AQE.
 
     @staticmethod
     def _restamp_seq(
@@ -1162,15 +1167,32 @@ class SnapshotTable:
             out.append(nrel)
         return sorted(out)
 
-    def _claim_delete_dir(self, tmp: str, dd: str) -> str:
-        """Atomically claim a delete-dir name by renaming the written
-        scratch dir into place. POSIX ``rename`` onto an existing
-        non-empty directory fails, so when a concurrent writer took the
-        name first this re-scans for the next free number and retries —
-        each writer ends up with its OWN directory, never silently
-        sharing one. Returns the dir name actually claimed."""
+    def _write_delete_dir(
+        self, entries: list[dict], frame: DataFrame, accept=None
+    ) -> str | None:
+        """Write ``frame`` as a delete file and return the ``d*`` dir name
+        it claimed. The write lands in a writer-unique scratch dir, then
+        the name is claimed by renaming the scratch into place. POSIX
+        ``rename`` onto an existing non-empty directory fails, so when a
+        concurrent writer took the name first this re-scans for the next
+        free number and retries — each writer ends up with its OWN
+        directory, never silently sharing one. ``accept(scratch)``
+        inspects the written files before the claim: False (nothing to
+        commit) or a raise drops the scratch dir, leaving nothing behind,
+        and False returns None."""
         import errno
 
+        dd = self._next_delete_dir(entries)
+        tmp = os.path.join(self.path, f"{dd}.{uuid.uuid4().hex[:8]}.tmp")
+        frame.write.mode("overwrite").parquet(tmp)
+        try:
+            keep = accept is None or accept(tmp)
+        except BaseException:
+            shutil.rmtree(tmp, ignore_errors=True)
+            raise
+        if not keep:
+            shutil.rmtree(tmp, ignore_errors=True)
+            return None
         for _ in range(1000):
             try:
                 os.rename(tmp, os.path.join(self.path, dd))
@@ -1234,31 +1256,16 @@ class SnapshotTable:
                 fresh, cur, allow_fold=delete is None
             )
             new_version = head["version"] + 1
-            entry = {
-                "version": new_version,
-                "data_dir": head["data_dir"],
-                "manifests": list(head["manifests"]),
-                "base_seq": head.get("base_seq", head["version"]),
-                "ts": time.time() if ts is None else ts,
-                "note": note,
-            }
+            manifests = list(head["manifests"])
             if stamped["rels"]:
                 if new_version != stamped["v"]:
                     stamped["rels"] = self._restamp_seq(
                         dest, stamped["rels"], stamped["v"], new_version
                     )
                     stamped["v"] = new_version
-                entry["manifests"].append(
+                manifests.append(
                     self._write_manifest_file(new_version, stamped["rels"])
                 )
-            if stamped["rels"] or head.get("has_appends"):
-                # marks the lineage as multi-sequence: readers must compare
-                # per-file sequence numbers against delete sequences
-                # (append-free lineages keep the cheaper plain anti-join)
-                entry["has_appends"] = True
-            for prop in ("partition_by", "sort_by"):
-                if head.get(prop):
-                    entry[prop] = list(head[prop])
             deletes = list(head.get("deletes", []))
             if delete is not None:
                 if delete["kind"] == "dv":
@@ -1274,9 +1281,18 @@ class SnapshotTable:
                     # which stays on disk for older versions until retention
                     deletes = [x for x in deletes if x["kind"] != "dv"]
                 deletes.append({**delete, "seq": new_version})
-            if deletes:
-                entry["deletes"] = deletes
-            return self._carry_schema(entry, head)
+            # has_appends marks the lineage as multi-sequence: readers must
+            # compare per-file sequence numbers against delete sequences
+            # (append-free lineages keep the cheaper plain anti-join)
+            return self._successor(
+                head,
+                new_version,
+                note,
+                ts,
+                manifests=manifests,
+                has_appends=bool(stamped["rels"] or head.get("has_appends")),
+                deletes=deletes,
+            )
 
         return self._commit_build(_build)
 
@@ -1349,10 +1365,6 @@ class SnapshotTable:
             return self._commit_delete_vector(
                 spark, entries, matched, note or "delete_where (vector)", ts
             )
-        dd = self._next_delete_dir(entries)
-        # writer-unique scratch; the final name is claimed atomically after
-        # the write (concurrent writers re-scan instead of sharing a dir)
-        tmp = os.path.join(self.path, f"{dd}.{uuid.uuid4().hex[:8]}.tmp")
         # No coalesce: the filtered snapshot scan must parallelize (coalesce
         # is a narrow dependency, so coalesce(1) would pull the WHOLE
         # read→filter pipeline onto one task — a serial full-table scan at
@@ -1360,14 +1372,13 @@ class SnapshotTable:
         # the dir, so multi-file is free, and small deletes still land in few
         # files because AQE's partition coalescing has already shrunk the
         # scan's output partitioning where the data is small.
-        matched.write.mode("overwrite").parquet(tmp)
-        # empty delete => no commit (the dir becomes an orphan, reclaimed by
-        # expire_snapshots' sweep); counted from the written footers —
-        # KB-scale driver reads, no second Spark job over the data
-        if _parquet_dir_rows(tmp) == 0:
-            shutil.rmtree(tmp, ignore_errors=True)
+        # Empty delete => no commit; counted from the written footers —
+        # KB-scale driver reads, no second Spark job over the data.
+        dd = self._write_delete_dir(
+            entries, matched, lambda tmp: _parquet_dir_rows(tmp) > 0
+        )
+        if dd is None:
             return entries[-1]["version"]
-        dd = self._claim_delete_dir(tmp, dd)
         # paths stamp (ADVICE r9): recorded _file values are lineage-dir-
         # relative; the reader REFUSES unstamped delete files whose paths
         # look absolute (the pre-r9 scheme) instead of silently un-deleting.
@@ -1405,38 +1416,65 @@ class SnapshotTable:
         file and claim its dir; the delete descriptor for
         :meth:`_commit_delta`, or None (nothing left behind) when there are
         no keys. NULL keys raise."""
-        key_rows = keys.select(*cols).distinct()
-        dd = self._next_delete_dir(entries)
-        # writer-unique scratch; the final name is claimed atomically after
-        # the write (concurrent writers re-scan instead of sharing a dir)
-        tmp = os.path.join(self.path, f"{dd}.{uuid.uuid4().hex[:8]}.tmp")
+
+        def _accept(tmp: str) -> bool:
+            # NULL-key gate from the written footers' per-row-group null
+            # counts — KB-scale driver reads instead of a second Spark pass
+            # over the distinct (the pre-write filter+count ran the whole
+            # distinct twice); a footer without null statistics (non-Spark
+            # writer) falls back to the data read. The refusal drops the
+            # scratch dir, so the raise leaves no orphan behind.
+            nulls = _parquet_dir_null_counts(tmp, list(cols))
+            if nulls is None:
+                bad = (
+                    keys.sparkSession.read.parquet(tmp)
+                    .filter(" OR ".join(f"({c} IS NULL)" for c in cols))
+                    .limit(1)
+                    .count()
+                )
+                nulls = {"_fallback": bad}
+            if any(v > 0 for v in nulls.values()):
+                raise ValueError(
+                    f"equality-delete keys contain NULLs in {cols}"
+                )
+            return _parquet_dir_rows(tmp) > 0
+
         # distinct() already shuffled, so the write parallelism is the
         # post-shuffle partitioning — AQE-coalesced to few files when the key
         # set is small, parallel when a mass delete is genuinely large.
-        key_rows.write.mode("overwrite").parquet(tmp)
-        # NULL-key gate from the written footers' per-row-group null counts —
-        # KB-scale driver reads instead of a second Spark pass over the
-        # distinct (the pre-write filter+count ran the whole distinct twice);
-        # a footer without null statistics (non-Spark writer) falls back to
-        # the data read. The scratch dir is removed on refusal, so the raise
-        # still leaves no orphan behind.
-        nulls = _parquet_dir_null_counts(tmp, list(cols))
-        if nulls is None:
-            bad = (
-                keys.sparkSession.read.parquet(tmp)
-                .filter(" OR ".join(f"({c} IS NULL)" for c in cols))
-                .limit(1)
-                .count()
-            )
-            nulls = {"_fallback": bad}
-        if any(v > 0 for v in nulls.values()):
-            shutil.rmtree(tmp, ignore_errors=True)
-            raise ValueError(f"equality-delete keys contain NULLs in {cols}")
-        if _parquet_dir_rows(tmp) == 0:
-            shutil.rmtree(tmp, ignore_errors=True)
+        dd = self._write_delete_dir(
+            entries, keys.select(*cols).distinct(), _accept
+        )
+        if dd is None:
             return None
-        dd = self._claim_delete_dir(tmp, dd)
         return {"dir": dd, "kind": "eq", "cols": list(cols)}
+
+    def _write_vector(
+        self,
+        entries: list[dict],
+        pairs: DataFrame,
+        prev: dict | None,
+        accept=None,
+    ) -> dict | None:
+        """Write ``(_file, _pos)`` pairs as a deletion-vector dir (see
+        :meth:`_commit_delete_vector` for the layout) through
+        :meth:`_write_delete_dir` and return its ``dv`` delete descriptor,
+        whose ``supersedes`` chain extends ``prev``'s (the vector it
+        replaces); None when ``accept`` refused it."""
+        from pyspark.sql import functions as F
+
+        dv = (
+            pairs.groupBy("_file")
+            .agg(F.sort_array(F.collect_set("_pos")).alias("positions"))
+            .withColumn("card", F.size("positions").cast("long"))
+        )
+        dd = self._write_delete_dir(entries, dv, accept)
+        if dd is None:
+            return None
+        delete = {"dir": dd, "kind": "dv", "paths": "rel"}
+        if prev is not None:
+            delete["supersedes"] = [*prev.get("supersedes", []), prev["dir"]]
+        return delete
 
     # -- deletion vectors (Iceberg v3) --------------------------------------
     @staticmethod
@@ -1494,8 +1532,6 @@ class SnapshotTable:
         role roaring bitmaps play in Iceberg's Puffin blobs) and the output
         deterministic. Per-file arrays live in executor memory during the
         groupBy — the same per-file bound a real DV writer carries."""
-        from pyspark.sql import functions as F
-
         cur = entries[-1]
         prev = self._dv_entry(cur)
         pairs = matched
@@ -1505,31 +1541,17 @@ class SnapshotTable:
                 os.path.join(self.path, prev["dir"])
             )
             pairs = pairs.unionByName(self._dv_pairs(spark, prev))
-        dv = (
-            pairs.groupBy("_file")
-            .agg(F.sort_array(F.collect_set("_pos")).alias("positions"))
-            .withColumn("card", F.size("positions").cast("long"))
-        )
-        dd = self._next_delete_dir(entries)
-        # writer-unique scratch; the final name is claimed atomically after
-        # the write (concurrent writers re-scan instead of sharing a dir)
-        tmp = os.path.join(self.path, f"{dd}.{uuid.uuid4().hex[:8]}.tmp")
-        dv.write.mode("overwrite").parquet(tmp)
         # matched rows come from the CURRENT read (existing vector already
         # applied), so merged ⊇ old with equality iff nothing new matched:
         # equal cardinality ⇒ no commit (footer-scale check, no extra job)
-        if self._dv_total_card(tmp) == prev_card:
-            shutil.rmtree(tmp, ignore_errors=True)
-            return cur["version"]
-        dd = self._claim_delete_dir(tmp, dd)
-        chain = (
-            list(prev.get("supersedes", [])) + [prev["dir"]]
-            if prev is not None
-            else []
+        delete = self._write_vector(
+            entries,
+            pairs,
+            prev,
+            lambda tmp: self._dv_total_card(tmp) != prev_card,
         )
-        delete = {"dir": dd, "kind": "dv", "paths": "rel"}
-        if chain:
-            delete["supersedes"] = chain
+        if delete is None:
+            return cur["version"]
         return self._commit_delta(cur, None, delete, note, ts)
 
     def rewrite_delete_files(
@@ -1582,10 +1604,9 @@ class SnapshotTable:
                 p = self._dv_pairs(spark, d)
             else:  # eq: keys hit rows with a strictly older data sequence
                 hit = raw.join(
-                    F.broadcast(dfile.select(*d["cols"]).distinct())
-                    if _dir_bytes(os.path.join(self.path, d["dir"]))
-                    <= BROADCAST_DELETE_MAX_BYTES
-                    else dfile.select(*d["cols"]).distinct(),
+                    self._broadcast_if_small(
+                        dfile.select(*d["cols"]).distinct(), d
+                    ),
                     on=list(d["cols"]),
                     how="semi",
                 )
@@ -1594,47 +1615,21 @@ class SnapshotTable:
                     hit = hit.filter(F.col("_seq") < F.lit(int(dseq)))
                 p = hit.select("_file", "_pos")
             pairs = p if pairs is None else pairs.unionByName(p)
-        pairs = pairs.dropDuplicates(["_file", "_pos"])
-        dv = (
-            pairs.groupBy("_file")
-            .agg(F.sort_array(F.collect_set("_pos")).alias("positions"))
-            .withColumn("card", F.size("positions").cast("long"))
-        )
-        dd = self._next_delete_dir(entries)
-        # writer-unique scratch; the final name is claimed atomically after
-        # the write (concurrent writers re-scan instead of sharing a dir)
-        tmp = os.path.join(self.path, f"{dd}.{uuid.uuid4().hex[:8]}.tmp")
-        dv.write.mode("overwrite").parquet(tmp)
-        dd = self._claim_delete_dir(tmp, dd)
-        prev = self._dv_entry(cur)
-        chain = (
-            list(prev.get("supersedes", [])) + [prev["dir"]]
-            if prev is not None
-            else []
+        delete = self._write_vector(
+            entries,
+            pairs.dropDuplicates(["_file", "_pos"]),
+            self._dv_entry(cur),
         )
         version = cur["version"] + 1
-        delete = {"dir": dd, "kind": "dv", "paths": "rel", "seq": version}
-        if chain:
-            delete["supersedes"] = chain
-        new_entry = {
-            "version": version,
-            "data_dir": cur["data_dir"],
-            "manifests": list(cur["manifests"]),
-            "base_seq": cur.get("base_seq", cur["version"]),
-            **({"has_appends": True} if cur.get("has_appends") else {}),
-            **(
-                {"partition_by": list(cur["partition_by"])}
-                if cur.get("partition_by")
-                else {}
-            ),
-            **({"sort_by": list(cur["sort_by"])} if cur.get("sort_by") else {}),
-            "deletes": [delete],
-            "delete_rewrite": True,
-            "ts": time.time() if ts is None else ts,
-            "note": note
+        new_entry = self._successor(
+            cur,
+            version,
+            note
             or f"rewrite_delete_files: {len(deletes)} delete files -> 1 vector",
-        }
-        self._carry_schema(new_entry, cur)
+            ts,
+            deletes=[{**delete, "seq": version}],
+            delete_rewrite=True,
+        )
         # folds replace the delete stack: never compose — CAS raises if a
         # writer advanced the log since the stack was read
         self._commit(entries + [new_entry], expected_head=cur["version"])
@@ -1667,6 +1662,17 @@ class SnapshotTable:
                     )
                 return
         return
+
+    def _broadcast_if_small(self, side: DataFrame, d: dict) -> DataFrame:
+        """``side`` (a join side read from delete file ``d``) hinted for
+        broadcast when ``d``'s dir is at most ``BROADCAST_DELETE_MAX_BYTES``
+        on disk; past the guard the join strategy is left to AQE."""
+        from pyspark.sql import functions as F
+
+        small = _dir_bytes(os.path.join(self.path, d["dir"])) <= (
+            BROADCAST_DELETE_MAX_BYTES
+        )
+        return F.broadcast(side) if small else side
 
     def _read_with_pos(
         self,
@@ -1747,12 +1753,9 @@ class SnapshotTable:
         table_cols = [c for c in df.columns if c not in _RESERVED_COLS]
         for i, d in enumerate(entry.get("deletes", [])):
             dfile = spark.read.parquet(os.path.join(self.path, d["dir"]))
-            small = _dir_bytes(os.path.join(self.path, d["dir"])) <= (
-                BROADCAST_DELETE_MAX_BYTES
-            )
             if d["kind"] == "pos":
                 self._check_pos_delete_paths(d)
-                right = F.broadcast(dfile) if small else dfile
+                right = self._broadcast_if_small(dfile, d)
                 df = df.join(right, on=["_file", "_pos"], how="anti")
             elif d["kind"] == "dv":
                 # deletion vector: explode the per-file position arrays on
@@ -1763,14 +1766,14 @@ class SnapshotTable:
                 pairs = dfile.select(
                     "_file", F.explode("positions").alias("_pos")
                 )
-                right = F.broadcast(pairs) if small else pairs
+                right = self._broadcast_if_small(pairs, d)
                 df = df.join(right, on=["_file", "_pos"], how="anti")
             elif d["kind"] == "eq":
                 dseq = d.get("seq")
                 if dseq is None or not multi_seq:
                     # legacy log entry, or an append-free lineage where every
                     # data file predates every delete: plain anti-join
-                    right = F.broadcast(dfile) if small else dfile
+                    right = self._broadcast_if_small(dfile, d)
                     df = df.join(right, on=list(d["cols"]), how="anti")
                     continue
                 # sequence-aware: delete a row only if its key matches AND
@@ -1780,7 +1783,7 @@ class SnapshotTable:
                 # can see both sides; the delete side is still distinct keys.
                 hit = f"_del_hit_{i}"
                 marked = dfile.select(*d["cols"]).withColumn(hit, F.lit(True))
-                right = F.broadcast(marked) if small else marked
+                right = self._broadcast_if_small(marked, d)
                 df = df.join(right, on=list(d["cols"]), how="left").filter(
                     ~(
                         F.coalesce(F.col(hit), F.lit(False))
@@ -2031,29 +2034,19 @@ class SnapshotTable:
                 )
                 new_manifests.append(mn)
                 manifest_schemas[mn] = sid
-        new_entry = {
-            "version": version,
-            "data_dir": cur["data_dir"],
-            "manifests": new_manifests,
-            "base_seq": base_seq,
-            "rewrite": True,
-            "ts": time.time() if ts is None else ts,
-            "note": note
+        new_entry = self._successor(
+            cur,
+            version,
+            note
             or f"rewrite_data_files (scoped: {len(affected)} rewritten, "
             f"{len(untouched)} carried)",
-        }
-        if any(_SEQ_RE.search(r) for r in all_rels):
-            new_entry["has_appends"] = True
-        if spec:
-            new_entry["partition_by"] = list(spec)
-        if cur.get("sort_by"):
-            new_entry["sort_by"] = list(cur["sort_by"])
-        if "schema_id" in cur:
-            new_entry["schema_id"] = int(cur["schema_id"])
-            new_entry["schemas"] = dict(cur["schemas"])
-            new_entry["manifest_schemas"] = manifest_schemas or {
-                mn: int(cur["schema_id"]) for mn in new_manifests
-            }
+            ts,
+            manifests=new_manifests,
+            has_appends=any(_SEQ_RE.search(r) for r in all_rels),
+            deletes=None,
+            manifest_schemas=manifest_schemas,
+            rewrite=True,
+        )
         # compaction rewrites the manifest set: never composes — CAS raises
         # if a writer advanced the log since the rewrite was planned
         self._commit(entries + [new_entry], expected_head=cur["version"])
@@ -2481,28 +2474,23 @@ class SnapshotTable:
                                 "merge_into, or compact main first"
                             )
                 nv = head["version"] + 1
-                entry = {
-                    "version": nv,
-                    "data_dir": head["data_dir"],
-                    "manifests": head["manifests"] + own_m,
-                    "base_seq": head.get("base_seq", head["version"]),
-                    "ts": time.time() if ts is None else ts,
-                    "note": f"cherry-pick {name}@v{e['version']}: "
-                    f"{e.get('note') or ''}".rstrip(": "),
-                }
-                if head.get("has_appends") or e.get("has_appends"):
-                    entry["has_appends"] = True
-                deletes = list(head.get("deletes", [])) + [
-                    {**d, "seq": nv} for d in own_d
-                ]
-                if deletes:
-                    entry["deletes"] = deletes
-                for prop in ("partition_by", "sort_by"):
-                    if head.get(prop):
-                        entry[prop] = list(head[prop])
                 # both sides evolve-free since the fork (validated above),
                 # so the head's current generation stamps the picked files
-                return self._carry_schema(entry, head)
+                return self._successor(
+                    head,
+                    nv,
+                    f"cherry-pick {name}@v{e['version']}: "
+                    f"{e.get('note') or ''}".rstrip(": "),
+                    ts,
+                    manifests=head["manifests"] + own_m,
+                    has_appends=bool(
+                        head.get("has_appends") or e.get("has_appends")
+                    ),
+                    deletes=[
+                        *head.get("deletes", []),
+                        *({**d, "seq": nv} for d in own_d),
+                    ],
+                )
 
             out = self._commit_build(_build)
             prev = e
@@ -2685,40 +2673,22 @@ class SnapshotTable:
             return self._commit_delta(
                 cur, staged, None, note or f"publish {stage_id} (append)", ts
             )
-        version = (entries[-1]["version"] + 1) if entries else 1
         cur = entries[-1] if entries else None
         if cur is not None and "schema_id" in cur:
             # a tracked table must not silently lose its schema tracking
             # through an overwrite publish (table_schema() would go None and
             # the append drift-gate with it — ADVICE r12): gate the staged
             # files against the tracked schema exactly like the append path,
-            # then carry the tracking onto the fresh lineage below.
+            # then carry the tracking onto the fresh lineage.
             self._check_staged_schema(staged, cur, partition_by)
-        # claim the lineage name collision-safely, like write(): never
-        # rmtree — an existing dir at the preferred name routes this
-        # publish to a uuid-suffixed lineage name instead
-        data_dir = f"v{version:05d}"
-        if os.path.isdir(os.path.join(self.path, data_dir)):
-            data_dir = f"v{version:05d}-{uuid.uuid4().hex[:8]}"
-        data_dir, final = self._claim_lineage_dir(staged, data_dir)
-        mname = self._write_manifest_file(version, _walk_rel_parquet(final))
-        new_entry = {
-            "version": version,
-            "data_dir": data_dir,
-            "manifests": [mname],
-            "base_seq": version,
-            "ts": time.time() if ts is None else ts,
-            "note": note or f"publish {stage_id}",
-        }
-        if partition_by:
-            new_entry["partition_by"] = list(partition_by)
-        if cur is not None:
-            self._carry_schema(new_entry, cur)
-        self._commit(
-            entries + [new_entry],
-            expected_head=entries[-1]["version"] if entries else 0,
+        return self._new_lineage(
+            entries,
+            staged,
+            note or f"publish {stage_id}",
+            ts,
+            partition_by=partition_by,
+            tracking=cur,
         )
-        return version
 
     def discard_staged(self, stage_id: str) -> None:
         staged = os.path.join(self.path, f"stage_{stage_id}")
@@ -3669,10 +3639,7 @@ class SnapshotTable:
         hit = None
         for d in new_deletes:
             dfile = spark.read.parquet(os.path.join(self.path, d["dir"]))
-            small = _dir_bytes(os.path.join(self.path, d["dir"])) <= (
-                BROADCAST_DELETE_MAX_BYTES
-            )
-            right = F.broadcast(dfile) if small else dfile
+            right = self._broadcast_if_small(dfile, d)
             on = ["_file", "_pos"] if d["kind"] == "pos" else list(d["cols"])
             h = live_from.join(right.select(*on).distinct(), on=on, how="semi")
             hit = h if hit is None else hit.unionByName(h)
@@ -3689,10 +3656,7 @@ class SnapshotTable:
                     on=["_file", "_pos"],
                     how="anti",
                 )
-            small = _dir_bytes(os.path.join(self.path, dv_to["dir"])) <= (
-                BROADCAST_DELETE_MAX_BYTES
-            )
-            right = F.broadcast(pairs) if small else pairs
+            right = self._broadcast_if_small(pairs, dv_to)
             h = live_from.join(right, on=["_file", "_pos"], how="semi")
             hit = h if hit is None else hit.unionByName(h)
         deletes = (

@@ -3,6 +3,7 @@ protocol, version resolution, logical rollback, and orphan tolerance."""
 
 import json
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -77,7 +78,17 @@ def _assert_log_sound(t: SnapshotTable) -> None:
         ), f"torn tmp remnant {name}"
 
 
+def _norm_entry(entry: dict) -> dict:
+    """``entry`` with generated uuid name suffixes (taken on a name
+    collision) replaced by ``-UUID``, so pinned entries compare exactly."""
+    return json.loads(re.sub(r"-[0-9a-f]{8}\b", "-UUID", json.dumps(entry)))
+
+
 def test_log_is_valid_json_after_every_commit(spark, table):
+    """One of each committing operation on a sorted, partitioned,
+    schema-tracked lineage: the log is re-checked after each, and each
+    commit's new head entry is pinned whole — what it inherits from the
+    entry before it and what it changes."""
     import copy
 
     from iceberg_evolve_spark.schema import Schema
@@ -88,51 +99,142 @@ def test_log_is_valid_json_after_every_commit(spark, table):
     def rows(lo, hi):
         return spark.range(lo, hi).withColumn("k", F.col("id") % 5)
 
-    # one of each committing operation, the log re-checked after each
-    t.write(rows(0, 30), ts=300.0, track_schema=True)
-    _assert_log_sound(t)
-    t.append(rows(30, 40))
-    _assert_log_sound(t)
-    t.delete_where(spark, F.col("id") == 1)
-    _assert_log_sound(t)
-    t.delete_where(spark, F.col("id") == 2, vector=True)
-    _assert_log_sound(t)
-    t.delete_by_key(spark.createDataFrame([(3,)], "id long"), ["id"])
-    _assert_log_sound(t)
-    folded = t.rewrite_delete_files(spark)
-    _assert_log_sound(t)
-    t.rewrite_data_files(spark)
-    _assert_log_sound(t)
-    t.rollback(folded)
-    _assert_log_sound(t)
-    t.create_branch("audit").append(rows(40, 45))
-    _assert_log_sound(t)
+    def pin(expected: dict, handle: SnapshotTable = t) -> None:
+        _assert_log_sound(t)
+        assert _norm_entry(handle.versions()[-1]) == expected
+
+    def gen0(*manifests: str) -> dict:
+        return {
+            "manifests": list(manifests),
+            "manifest_schemas": dict.fromkeys(manifests, 0),
+        }
+
+    s0 = {
+        "type": "struct",
+        "schema-id": 0,
+        "fields": [
+            {"id": 1, "name": "id", "required": True, "type": "long"},
+            {"id": 2, "name": "k", "required": False, "type": "long"},
+        ],
+    }
+    s1 = copy.deepcopy(s0)
+    s1["schema-id"] = 1
+    s1["fields"].append(
+        {"id": 99, "name": "note", "required": False, "type": "string"}
+    )
+    lineage = {
+        "data_dir": "v00003",
+        "base_seq": 3,
+        "partition_by": ["k"],
+        "sort_by": ["id"],
+        "schema_id": 0,
+        "schemas": {"0": s0},
+    }
+    appended = {**lineage, "has_appends": True}
+    pos = {"dir": "d00001", "kind": "pos", "paths": "rel", "seq": 5}
+    dv = {"dir": "d00002", "kind": "dv", "paths": "rel", "seq": 6}
+    eq = {"cols": ["id"], "dir": "d00003", "kind": "eq", "seq": 7}
+    folded_dv = {
+        "dir": "d00004", "kind": "dv", "paths": "rel", "seq": 8,
+        "supersedes": ["d00002"],
+    }
+
+    t.write(
+        rows(0, 30), ts=300.0, track_schema=True, partition_by=["k"],
+        sort_by=["id"], sort_files=2,
+    )
+    # sort_files shapes the write only: the entry does not record it
+    pin({**lineage, "version": 3, "ts": 300.0, "note": None,
+         **gen0("m00003.json")})
+    t.append(rows(30, 40), ts=301.0)
+    base_files = gen0("m00003.json", "m00004.json")
+    pin({**appended, "version": 4, "ts": 301.0, "note": "append",
+         **base_files})
+    t.delete_where(spark, F.col("id") == 1, ts=302.0)
+    pin({**appended, "version": 5, "ts": 302.0, "note": "delete_where",
+         **base_files, "deletes": [pos]})
+    t.delete_where(spark, F.col("id") == 2, vector=True, ts=303.0)
+    pin({**appended, "version": 6, "ts": 303.0,
+         "note": "delete_where (vector)", **base_files,
+         "deletes": [pos, dv]})
+    t.delete_by_key(
+        spark.createDataFrame([(3,)], "id long"), ["id"], ts=304.0
+    )
+    pin({**appended, "version": 7, "ts": 304.0,
+         "note": "delete_by_key ['id']", **base_files,
+         "deletes": [pos, dv, eq]})
+    folded = t.rewrite_delete_files(spark, ts=305.0)
+    pin({**appended, "version": 8, "ts": 305.0,
+         "note": "rewrite_delete_files: 3 delete files -> 1 vector",
+         **base_files, "deletes": [folded_dv], "delete_rewrite": True})
+    t.rewrite_data_files(spark, ts=306.0)
+    pin({**appended, "version": 9, "ts": 306.0,
+         "note": "rewrite_data_files (scoped: 3 rewritten, 12 carried)",
+         **gen0("m00009.json"), "rewrite": True})
+    t.rollback(folded, ts=307.0)
+    pin({**appended, "version": 10, "ts": 307.0, "note": "rollback to v8",
+         **base_files, "deletes": [folded_dv], "rollback_of": 8})
+    audit = t.create_branch("audit")
+    audit.append(rows(40, 45), ts=308.0)
+    audited = {**appended, "version": 11, "ts": 308.0, "note": "append",
+               **gen0("m00003.json", "m00004.json", "m00011-audit.json"),
+               "deletes": [folded_dv]}
+    pin(audited, audit)
     t.fast_forward("audit")
-    _assert_log_sound(t)
-    t.create_branch("pick").append(rows(45, 50))
-    t.append(rows(50, 55))  # main diverges from the branch
-    _assert_log_sound(t)
-    t.cherry_pick("pick")
-    _assert_log_sound(t)
-    t.stage(rows(55, 60), "wap")
-    t.publish("wap", mode="append")
-    _assert_log_sound(t)
+    pin(audited)
+    t.create_branch("pick").append(rows(45, 50), ts=309.0)
+    t.append(rows(50, 55), ts=310.0)  # main diverges from the branch
+    main_m = ["m00003.json", "m00004.json", "m00011-audit.json",
+              "m00012.json"]
+    pin({**appended, "version": 12, "ts": 310.0, "note": "append",
+         **gen0(*main_m), "deletes": [folded_dv]})
+    t.cherry_pick("pick", ts=311.0)
+    main_m.append("m00012-pick.json")
+    pin({**appended, "version": 13, "ts": 311.0,
+         "note": "cherry-pick pick@v12: append", **gen0(*main_m),
+         "deletes": [folded_dv]})
+    t.stage(rows(55, 60), "wap", partition_by=["k"])
+    t.publish("wap", mode="append", ts=312.0)
+    main_m.append("m00014.json")
+    pin({**appended, "version": 14, "ts": 312.0,
+         "note": "publish wap (append)", **gen0(*main_m),
+         "deletes": [folded_dv]})
     t.row_delta(
         add=rows(60, 62),
         delete_keys=spark.createDataFrame([(4,), (61,)], "id long"),
         cols=["id"],
+        ts=313.0,
     )
-    _assert_log_sound(t)
+    main_m.append("m00015.json")
+    eq2 = {"cols": ["id"], "dir": "d00005", "kind": "eq", "seq": 15}
+    pin({**appended, "version": 15, "ts": 313.0, "note": "row_delta",
+         **gen0(*main_m), "deletes": [folded_dv, eq2]})
     j = copy.deepcopy(t.table_schema().to_json())
     j["fields"].append(
         {"id": 99, "name": "note", "type": "string", "required": False}
     )
-    t.evolve_schema(Schema.from_json(j))
-    _assert_log_sound(t)
+    t.evolve_schema(Schema.from_json(j), ts=314.0)
+    evolved = {**appended, "version": 16, "ts": 314.0,
+               "note": "evolve schema -> id 1", **gen0(*main_m),
+               "deletes": [folded_dv, eq2], "schema_id": 1,
+               "schemas": {"0": s0, "1": s1},
+               "schema_evolution": {"from": 0, "to": 1}}
+    pin(evolved)
     t.expire_snapshots(keep_last=2)
-    _assert_log_sound(t)
+    pin(evolved)  # retention folds the log; the head entry is untouched
     live = set(range(62)) - {1, 2, 3, 4}
     assert {r["id"] for r in t.read(spark).collect()} == live
+    # an overwrite publish starts a fresh lineage that keeps the tracking
+    t.stage(
+        rows(70, 75).withColumn("note", F.lit("x")), "wap2",
+        partition_by=["k"],
+    )
+    t.publish("wap2", ts=315.0)
+    pin({"version": 17, "data_dir": "v00017", "base_seq": 17, "ts": 315.0,
+         "note": "publish wap2", "partition_by": ["k"], "schema_id": 1,
+         "schemas": {"0": s0, "1": s1}, "manifests": ["m00017.json"],
+         "manifest_schemas": {"m00017.json": 1}})
+    assert {r["id"] for r in t.read(spark).collect()} == set(range(70, 75))
 
 
 def test_snapshots_are_immutable_under_append(spark, table):
@@ -559,3 +661,38 @@ def test_log_layout_is_private_to_snapshots_module():
         if layout.search(line)
     ]
     assert not leaks, f"snapshot-log layout named outside snapshots.py: {leaks}"
+
+
+def test_snapshot_entries_are_built_in_two_places():
+    """Every snapshot entry in ``sources/snapshots.py`` is built by
+    ``_successor`` (a commit on the same lineage) or ``_new_lineage``
+    (``write`` and the overwrite publish): no other function spells an
+    entry out as a dict literal with ``version`` and ``manifests`` keys,
+    so what an entry inherits is decided in one place."""
+    import ast
+    import pathlib
+
+    import iceberg_evolve_spark
+
+    owner = (
+        pathlib.Path(iceberg_evolve_spark.__file__).parent
+        / "sources"
+        / "snapshots.py"
+    )
+    builders = {"_successor", "_new_lineage"}
+    stray = []
+
+    def visit(node, funcs):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            funcs = funcs + [node.name]
+        if isinstance(node, ast.Dict):
+            keys = {
+                k.value for k in node.keys if isinstance(k, ast.Constant)
+            }
+            if {"version", "manifests"} <= keys and not builders & set(funcs):
+                stray.append(f"{'.'.join(funcs) or '<module>'}:{node.lineno}")
+        for child in ast.iter_child_nodes(node):
+            visit(child, funcs)
+
+    visit(ast.parse(owner.read_text()), [])
+    assert not stray, f"snapshot entries built outside {builders}: {stray}"
