@@ -1,24 +1,37 @@
-"""Scan elision from parquet footer statistics — answer COUNT/MIN/MAX
-aggregates from file METADATA, never touching a data page.
+"""Parquet footer statistics — the package's ONE reader of row-group
+statistics, and what is built on it: scan pruning and aggregate elision.
 
-Parquet row groups carry per-column statistics (min, max, null_count) in the
-file footer. For aggregates those statistics are closed under merge, so a
-table-level COUNT/MIN/MAX is ``Σ``/``min``/``max`` over row-group stats — a
-footer read per file, KB each, regardless of data volume. This is the same
-trick engines' aggregate-pushdown rules apply (Spark's own
-``spark.sql.parquet.aggregatePushDown`` does it for SELECT MIN(..) queries);
-exposed here as a library call so pipelines can serve table profiles without
-a cluster job at all: 100 TB of data costs #files footer reads, driver-side.
+:func:`read_footer` opens a file's footer once and answers, for each
+requested column, what the footer PROVES about it (a :class:`ColumnFooter`):
+the NULL count (or unknown) and the (min, max) over the row groups, in one
+of three states — bounds known; no non-null value (all-null or empty: no
+range or key can match); unknown (a row group lacks usable statistics: the
+caller keeps the file, falls back to a data read, or raises). Columns are
+found by their full parquet column PATH, so a struct field ``s.k`` never
+answers for a top-level column ``k``. :func:`read_dir_footer` folds it over
+a directory, and :func:`parquet_files` is the one lister of a directory's
+part files.
 
-Correctness boundary (why this is safe ONLY for these aggregates): stats
-may be absent (written without statistics), and for BYTE_ARRAY columns
-(strings/binary) writers may TRUNCATE min/max — a truncated min is a
-prefix and the max an incremented prefix, neither an actual value — and
-pyarrow exposes no exactness flag to detect it. ``table_stats_from_footers``
-therefore raises on missing stats AND refuses BYTE_ARRAY columns outright
-(numeric/temporal stats are always exact), rather than silently answering
-wrong. AVG/SUM are NOT served (null_count gives exact COUNT, but sums are
-not in the footer).
+Callers: :func:`prune_files_multi` (scan planning — ``SnapshotTable``'s
+``plan_scan``/``read(where=)`` and the equality-delete scoping of
+``rewrite_data_files``; :func:`prune_files` is its one-column form),
+:func:`table_stats_from_footers`, and in ``sources/snapshots.py`` the
+NULL-key gate of equality-delete writes, the delete-key bounds of
+``rewrite_data_files`` and ``files_df``'s per-file bounds.
+
+Aggregate elision: for COUNT/MIN/MAX the statistics are closed under merge,
+so a table-level answer is ``Σ``/``min``/``max`` over row-group stats — a
+footer read per file, KB each, regardless of data volume (the trick Spark's
+``spark.sql.parquet.aggregatePushDown`` applies), served without a cluster
+job. Correctness boundary: stats may be absent (written without
+statistics), and for BYTE_ARRAY columns (strings/binary) writers may
+TRUNCATE min/max — a truncated min is a prefix and the max an incremented
+prefix, neither an actual value — and pyarrow exposes no exactness flag.
+:func:`table_stats_from_footers` therefore raises on missing stats AND
+refuses BYTE_ARRAY columns outright (numeric/temporal stats are always
+exact); AVG/SUM are not served (sums are not in the footer). Pruning has
+the opposite discipline: it needs only BOUNDS, so missing stats keep the
+file and truncated string stats are still valid bounds.
 """
 
 from __future__ import annotations
@@ -26,6 +39,7 @@ from __future__ import annotations
 import datetime
 import os
 from dataclasses import dataclass
+from typing import Iterable, NamedTuple
 
 import pyarrow.parquet as pq
 
@@ -38,6 +52,18 @@ class ColumnStats:
     n_values: int  # non-null values (num_rows - null_count)
     min_value: object
     max_value: object
+
+
+class ColumnFooter(NamedTuple):
+    """What a footer proves about one column. ``bounds`` is the raw footer
+    (min, max) over the row groups holding a non-null value; it is None
+    when ``all_null`` (no non-null value: nothing can match) and when some
+    row group lacks usable statistics (unknown)."""
+
+    nulls: int | None  # None when a row group records no NULL count
+    bounds: tuple[object, object] | None
+    all_null: bool
+    physical_type: str
 
 
 def _to_comparable(v: object) -> object:
@@ -57,19 +83,104 @@ def _to_comparable(v: object) -> object:
     return v
 
 
+def parquet_files(path: str) -> list[str]:
+    """Sorted paths, relative to ``path``, of the parquet part files under
+    it: recursive (key=value partition dirs nest their files), skipping
+    ``_``-prefixed names (writer markers and sidecars)."""
+    out = []
+    for root, _dirs, names in os.walk(path):
+        rel = os.path.relpath(root, path)
+        for fn in names:
+            if fn.endswith(".parquet") and not fn.startswith("_"):
+                out.append(fn if rel == "." else os.path.join(rel, fn))
+    return sorted(out)
+
+
 def _files(path: str) -> list[str]:
-    # recursive: partitioned key=value layouts (sources/partitions.py) nest
-    # their part files in subdirs — same walk as SnapshotTable.files_df
     if os.path.isdir(path):
-        out = []
-        for root, _dirs, names in os.walk(path):
-            for fn in names:
-                if fn.endswith(".parquet") and not fn.startswith("_"):
-                    out.append(os.path.join(root, fn))
+        out = [os.path.join(path, rel) for rel in parquet_files(path)]
         if not out:
             raise ValueError(f"no parquet files under {path}")
-        return sorted(out)
+        return out
     return [path]
+
+
+def read_footer(
+    fp: str, columns: Iterable[str]
+) -> tuple[int, dict[str, ColumnFooter | None]]:
+    """(row count, {column: ColumnFooter, or None when the file has no
+    column at that path}) from one read of ``fp``'s footer."""
+    meta = pq.ParquetFile(fp).metadata
+    schema = meta.schema
+    # keyed on the full column path: a nested leaf's path has its parents
+    # in it, so only a top-level leaf can answer for a top-level column
+    idx = {schema.column(i).path: i for i in range(meta.num_columns)}
+    groups = [meta.row_group(g) for g in range(meta.num_row_groups)]
+    out: dict[str, ColumnFooter | None] = {}
+    for c in columns:
+        i = idx.get(c)
+        if i is None:
+            out[c] = None
+            continue
+        nulls: int | None = 0
+        lo = hi = None
+        known, all_null = True, True
+        for g in groups:
+            if not g.num_rows:
+                continue  # empty row group: no stats (pyarrow omits them)
+            st = g.column(i).statistics
+            n = None if st is None else st.null_count
+            nulls = None if nulls is None or n is None else nulls + n
+            if n == g.num_rows:
+                continue  # all-null row group: no value to bound
+            all_null = False
+            if st is None or not st.has_min_max:
+                known = False
+                continue
+            lo = st.min if lo is None else min(lo, st.min, key=_to_comparable)
+            hi = st.max if hi is None else max(hi, st.max, key=_to_comparable)
+        out[c] = ColumnFooter(
+            nulls,
+            (lo, hi) if known and not all_null else None,
+            all_null,
+            schema.column(i).physical_type,
+        )
+    return meta.num_rows, out
+
+
+def _merge(a: ColumnFooter | None, b: ColumnFooter | None) -> ColumnFooter | None:
+    """Two files' footers of one column as one: missing anywhere is
+    missing, unknown anywhere is unknown."""
+    if a is None or b is None:
+        return None
+    nulls = None if a.nulls is None or b.nulls is None else a.nulls + b.nulls
+    all_null = a.all_null and b.all_null
+    if a.all_null or b.all_null:
+        bounds = b.bounds if a.all_null else a.bounds
+    elif a.bounds is None or b.bounds is None:
+        bounds = None
+    else:
+        bounds = (
+            min(a.bounds[0], b.bounds[0], key=_to_comparable),
+            max(a.bounds[1], b.bounds[1], key=_to_comparable),
+        )
+    return ColumnFooter(nulls, bounds, all_null, a.physical_type)
+
+
+def read_dir_footer(
+    path: str, columns: Iterable[str]
+) -> tuple[int, dict[str, ColumnFooter | None]]:
+    """:func:`read_footer` folded over every part file under ``path``: rows
+    and NULLs summed, bounds merged. A column missing from any file (or a
+    dir with no files) maps to None."""
+    columns = list(columns)
+    rows = 0
+    acc: dict[str, ColumnFooter | None] | None = None
+    for rel in parquet_files(path):
+        n, cols = read_footer(os.path.join(path, rel), columns)
+        rows += n
+        acc = cols if acc is None else {c: _merge(acc[c], cols[c]) for c in columns}
+    return rows, acc or dict.fromkeys(columns)
 
 
 def _can_overlap(mn: object, mx: object, clo: object, chi: object) -> bool:
@@ -123,71 +234,31 @@ def _coerce_like(raw: str, bound: object) -> object:
     return raw
 
 
-def prune_files(
-    path: str,
-    column: str,
-    lo: object = None,
-    hi: object = None,
-    files: list[str] | None = None,
-) -> tuple[list[str], int]:
-    """Stats-based FILE SKIPPING (Iceberg/Delta scan planning, done from
-    parquet footers): return the subset of files that CAN contain rows with
-    ``lo <= column <= hi``, plus the total file count. A file is skipped only
-    when EVERY row group's [min, max] provably misses the range.
-
-    The correctness discipline is the opposite of
-    :func:`table_stats_from_footers`: stats here only need to be BOUNDS, not
-    exact values, so missing statistics keep the file (conservative — never
-    skips data it can't prove absent) and BYTE_ARRAY columns are fine
-    (truncated string stats are still valid bounds: the truncated min is <=
-    the true min, the incremented-prefix max >= the true max).
-
-    At 100 TB this is the planning step that makes a sorted/clustered layout
-    pay: #files footer reads on the driver (or a manifest, which is this same
-    information cached) replace scanning every file for a selective range.
-
-    ``files`` restricts the candidate set to an explicit list (a snapshot's
-    manifest-listed files — format-2 ``SnapshotTable`` entries share their
-    lineage dir across snapshots, so the dir walk would see files the
-    snapshot does not own); ``path`` stays the root that key=value partition
-    segments are resolved against."""
-    if lo is None and hi is None:
-        raise ValueError("provide at least one of lo/hi")
-    clo, chi = _to_comparable(lo), _to_comparable(hi)
-    if files is None:
-        files = _files(path)
-    kept = []
-    for fp in files:
-        meta = pq.ParquetFile(fp).metadata
-        name_to_idx = {meta.schema.column(i).name: i for i in range(meta.num_columns)}
-        if column not in name_to_idx:
-            pv = _partition_value(path, fp, column)
+def _may_match(
+    path: str, fp: str, ranges: dict[str, tuple[object, object]]
+) -> bool:
+    """False only when ``fp`` provably holds no row inside every range:
+    a column's bounds miss its range, or it holds no non-null value. A
+    column absent from the footer answers from its key=value path segment;
+    anything unknown keeps the file."""
+    _rows, footer = read_footer(fp, ranges)
+    for c, (lo, hi) in ranges.items():
+        clo, chi = _to_comparable(lo), _to_comparable(hi)
+        fc = footer[c]
+        if fc is None:
+            pv = _partition_value(path, fp, c)
             if pv is None:
-                # not in the footer, not a path segment: keep conservatively
-                # (pruning may only skip what it can PROVE absent)
-                kept.append(fp)
-                continue
-            ref = lo if lo is not None else hi
-            v = _coerce_like(pv, ref)
-            if _can_overlap(v, v, clo, chi):
-                kept.append(fp)
-            continue
-        keep = False
-        for rg in range(meta.num_row_groups):
-            group = meta.row_group(rg)
-            st = group.column(name_to_idx[column]).statistics
-            if st is None or not st.has_min_max:
-                if st is not None and st.null_count == group.num_rows:
-                    continue  # provably all-null: cannot match a range
-                keep = True  # no usable bounds: must assume it matches
-                break
-            mn, mx = _to_comparable(st.min), _to_comparable(st.max)
-            if _can_overlap(mn, mx, clo, chi):
-                keep = True
-                break
-        if keep:
-            kept.append(fp)
-    return kept, len(files)
+                continue  # in neither footer nor path: cannot exclude
+            v = _coerce_like(pv, lo if lo is not None else hi)
+            if not _can_overlap(v, v, clo, chi):
+                return False
+        elif fc.all_null:
+            return False  # a NULL satisfies no range and matches no key
+        elif fc.bounds is not None and not _can_overlap(
+            _to_comparable(fc.bounds[0]), _to_comparable(fc.bounds[1]), clo, chi
+        ):
+            return False
+    return True
 
 
 def prune_files_multi(
@@ -195,19 +266,45 @@ def prune_files_multi(
     ranges: dict[str, tuple[object, object]],
     files: list[str] | None = None,
 ) -> tuple[list[str], int]:
-    """AND-composed file skipping over several columns: a file survives only
-    if EVERY column's range can overlap it (real scan plans filter on more
-    than one column — e.g. a date range AND a region id). Each column keeps
-    :func:`prune_files`'s conservative rule independently, so the
-    intersection can still only over-read, never lose rows."""
+    """Stats-based FILE SKIPPING (Iceberg/Delta scan planning, done from
+    parquet footers): the sorted subset of files that CAN hold a row with
+    ``lo <= column <= hi`` for EVERY ``column: (lo, hi)`` of ``ranges``
+    (either bound None for open-ended), plus the total file count. One
+    footer read per file; a file is skipped only when some column's
+    bounds over its row groups provably miss the range.
+
+    The correctness discipline is the opposite of
+    :func:`table_stats_from_footers`: stats here only need to be BOUNDS, so
+    missing statistics keep the file (never skips data it can't prove
+    absent) and BYTE_ARRAY columns are fine (a truncated min is <= the true
+    min, the incremented-prefix max >= the true max).
+
+    ``files`` restricts the candidates to an explicit list (a snapshot's
+    manifest-listed files — ``SnapshotTable`` lineage dirs are shared
+    across snapshots, so the dir walk would see files the snapshot does not
+    own); ``path`` stays the root that key=value partition segments are
+    resolved against."""
     if not ranges:
         raise ValueError("provide at least one column range")
-    kept: set[str] | None = None
-    total = 0
-    for column, (lo, hi) in ranges.items():
-        col_files, total = prune_files(path, column, lo, hi, files=files)
-        kept = set(col_files) if kept is None else kept & set(col_files)
-    return sorted(kept or ()), total
+    if any(lo is None and hi is None for lo, hi in ranges.values()):
+        raise ValueError("provide at least one of lo/hi")
+    if files is None:
+        files = _files(path)
+    return sorted(fp for fp in files if _may_match(path, fp, ranges)), len(files)
+
+
+def prune_files(
+    path: str,
+    column: str,
+    lo: object = None,
+    hi: object = None,
+    files: list[str] | None = None,
+) -> tuple[list[str], int]:
+    """:func:`prune_files_multi` on one column. At 100 TB this is the
+    planning step that makes a sorted/clustered layout pay: #files footer
+    reads on the driver replace scanning every file for a selective
+    range."""
+    return prune_files_multi(path, {column: (lo, hi)}, files=files)
 
 
 def read_pruned(spark, path: str, column: str, lo: object = None, hi: object = None):
@@ -234,37 +331,26 @@ def table_stats_from_footers(path: str, columns: list[str]) -> dict[str, ColumnS
     exact statistics for a requested column (never guesses)."""
     acc: dict[str, list] = {c: [0, None, None] for c in columns}
     for fp in _files(path):
-        meta = pq.ParquetFile(fp).metadata
-        name_to_idx = {meta.schema.column(i).name: i for i in range(meta.num_columns)}
+        rows, footer = read_footer(fp, columns)
         for c in columns:
-            if c not in name_to_idx:
+            fc = footer[c]
+            if fc is None:
                 raise ValueError(f"column {c!r} not in {fp}")
-            if meta.schema.column(name_to_idx[c]).physical_type == "BYTE_ARRAY":
+            if fc.physical_type == "BYTE_ARRAY":
                 raise ValueError(
                     f"column {c!r} is BYTE_ARRAY: writers may truncate string "
                     "min/max and no exactness flag exists — refusing rather "
                     "than risking a silently wrong answer"
                 )
-        for rg in range(meta.num_row_groups):
-            group = meta.row_group(rg)
-            for c in columns:
-                col = group.column(name_to_idx[c])
-                st = col.statistics
-                if st is None or st.null_count is None:
-                    raise ValueError(
-                        f"row group {rg} of {fp} has no exact stats for {c!r}"
-                    )
-                if st.null_count == group.num_rows:
-                    continue  # all-null chunk: no min/max exists, 0 values
-                if not st.has_min_max:
-                    raise ValueError(
-                        f"row group {rg} of {fp} has no exact stats for {c!r}"
-                    )
-                lo, hi = _to_comparable(st.min), _to_comparable(st.max)
-                slot = acc[c]
-                slot[0] += group.num_rows - st.null_count
-                slot[1] = lo if slot[1] is None else min(slot[1], lo)
-                slot[2] = hi if slot[2] is None else max(slot[2], hi)
+            if fc.nulls is None or (fc.bounds is None and not fc.all_null):
+                raise ValueError(f"{fp} has no exact stats for {c!r}")
+            slot = acc[c]
+            slot[0] += rows - fc.nulls
+            if fc.bounds is None:
+                continue  # all-null: no min/max exists, 0 values
+            lo, hi = _to_comparable(fc.bounds[0]), _to_comparable(fc.bounds[1])
+            slot[1] = lo if slot[1] is None else min(slot[1], lo)
+            slot[2] = hi if slot[2] is None else max(slot[2], hi)
     return {
         c: ColumnStats(c, n, lo, hi) for c, (n, lo, hi) in acc.items()
     }

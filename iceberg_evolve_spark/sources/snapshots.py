@@ -94,6 +94,14 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from iceberg_evolve_spark.sources.footer_stats import (
+    _to_comparable,
+    parquet_files,
+    prune_files_multi,
+    read_dir_footer,
+    read_footer,
+)
+
 MANIFEST = "_snapshots.json"
 
 
@@ -160,58 +168,21 @@ def _dir_bytes(path: str) -> int:
 def _parquet_dir_rows(path: str) -> int:
     """Row count of a written parquet dir from footers only (no Spark job,
     no re-read): one KB-scale footer read per part file, driver-side."""
-    files = []
-    for root, _dirs, names in os.walk(path):
-        for fn in names:
-            if fn.endswith(".parquet") and not fn.startswith("_"):
-                files.append(os.path.join(root, fn))
-    return _parquet_files_rows(files)
+    return read_dir_footer(path, ())[0]
 
 
 def _parquet_files_rows(files: "list[str]") -> int:
     """Row count of an explicit parquet file list from footers only —
     the metadata-sized count for a planned scan (e.g. ``plan_scan()``'s
     kept set on a delete-free snapshot)."""
+    return sum(read_footer(f, ())[0] for f in files)
+
+
+def _staged_schema(staged: str):
+    """Arrow schema of a staged parquet dir, from its first file's footer."""
     import pyarrow.parquet as pq
 
-    return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
-
-
-def _parquet_dir_null_counts(path: str, cols: "list[str]") -> "dict[str, int] | None":
-    """Per-column null counts of a written parquet dir from footer row-group
-    statistics only (no Spark job). Returns None when any row group lacks
-    null-count statistics for a requested column — callers fall back to a
-    data read then."""
-    import pyarrow.parquet as pq
-
-    nulls = {c: 0 for c in cols}
-    for root, _dirs, names in os.walk(path):
-        for fn in names:
-            if not fn.endswith(".parquet") or fn.startswith("_"):
-                continue
-            md = pq.ParquetFile(os.path.join(root, fn)).metadata
-            name_to_idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
-            for c in cols:
-                idx = name_to_idx.get(c)
-                if idx is None:
-                    return None
-                for rg in range(md.num_row_groups):
-                    st = md.row_group(rg).column(idx).statistics
-                    if st is None or st.null_count is None:
-                        return None
-                    nulls[c] += st.null_count
-    return nulls
-
-
-def _walk_rel_parquet(dirpath: str) -> list[str]:
-    """Relative paths of all parquet part files under ``dirpath``."""
-    out = []
-    for root, _dirs, names in os.walk(dirpath):
-        rel = os.path.relpath(root, dirpath)
-        for fn in names:
-            if fn.endswith(".parquet") and not fn.startswith("_"):
-                out.append(fn if rel == "." else os.path.join(rel, fn))
-    return sorted(out)
+    return pq.read_schema(os.path.join(staged, parquet_files(staged)[0]))
 
 
 def _rel_seq(rel: str, base_seq: int) -> int:
@@ -977,7 +948,7 @@ class SnapshotTable:
             data_dir = f"v{version:05d}-{uuid.uuid4().hex[:8]}"
             os.rename(payload, os.path.join(self.path, data_dir))
         mname = self._write_manifest_file(
-            version, _walk_rel_parquet(os.path.join(self.path, data_dir))
+            version, parquet_files(os.path.join(self.path, data_dir))
         )
         entry = {
             "version": version,
@@ -1013,21 +984,12 @@ class SnapshotTable:
         invisible until the snapshot-log commit because reads are
         manifest-list-based. Returns the files' lineage-relative paths."""
         rels = []
-        for root, _dirs, names in os.walk(stage):
-            rel = os.path.relpath(root, stage)
-            for fn in names:
-                if not fn.endswith(".parquet") or fn.startswith("_"):
-                    continue
-                dst_dir = dest_dir if rel == "." else os.path.join(dest_dir, rel)
-                os.makedirs(dst_dir, exist_ok=True)
-                os.rename(
-                    os.path.join(root, fn),
-                    os.path.join(dst_dir, f"{prefix}{fn}"),
-                )
-                rels.append(
-                    f"{prefix}{fn}" if rel == "."
-                    else os.path.join(rel, f"{prefix}{fn}")
-                )
+        for src in parquet_files(stage):
+            sub, fn = os.path.split(src)
+            rel = os.path.join(sub, f"{prefix}{fn}")
+            os.makedirs(os.path.join(dest_dir, sub), exist_ok=True)
+            os.rename(os.path.join(stage, src), os.path.join(dest_dir, rel))
+            rels.append(rel)
         shutil.rmtree(stage, ignore_errors=True)
         return sorted(rels)
 
@@ -1418,26 +1380,29 @@ class SnapshotTable:
         no keys. NULL keys raise."""
 
         def _accept(tmp: str) -> bool:
-            # NULL-key gate from the written footers' per-row-group null
-            # counts — KB-scale driver reads instead of a second Spark pass
+            # row count and NULL-key gate from one pass over the written
+            # footers — KB-scale driver reads instead of a second Spark pass
             # over the distinct (the pre-write filter+count ran the whole
             # distinct twice); a footer without null statistics (non-Spark
             # writer) falls back to the data read. The refusal drops the
             # scratch dir, so the raise leaves no orphan behind.
-            nulls = _parquet_dir_null_counts(tmp, list(cols))
-            if nulls is None:
-                bad = (
+            rows, footer = read_dir_footer(tmp, cols)
+            if not rows:
+                return False
+            if any(fc is None or fc.nulls is None for fc in footer.values()):
+                nulls = (
                     keys.sparkSession.read.parquet(tmp)
                     .filter(" OR ".join(f"({c} IS NULL)" for c in cols))
                     .limit(1)
                     .count()
                 )
-                nulls = {"_fallback": bad}
-            if any(v > 0 for v in nulls.values()):
+            else:
+                nulls = sum(fc.nulls for fc in footer.values())
+            if nulls:
                 raise ValueError(
                     f"equality-delete keys contain NULLs in {cols}"
                 )
-            return _parquet_dir_rows(tmp) > 0
+            return True
 
         # distinct() already shuffled, so the write parallelism is the
         # post-shuffle partitioning — AQE-coalesced to few files when the key
@@ -1503,13 +1468,9 @@ class SnapshotTable:
         import pyarrow.parquet as pq
 
         total = 0
-        for root, _dirs, names in os.walk(dirpath):
-            for fn in names:
-                if fn.endswith(".parquet") and not fn.startswith("_"):
-                    col = pq.read_table(
-                        os.path.join(root, fn), columns=["card"]
-                    ).column(0)
-                    total += sum(col.to_pylist())
+        for rel in parquet_files(dirpath):
+            col = pq.read_table(os.path.join(dirpath, rel), columns=["card"])
+            total += sum(col.column(0).to_pylist())
         return total
 
     def _commit_delete_vector(
@@ -1645,23 +1606,19 @@ class SnapshotTable:
         import pyarrow.parquet as pq
 
         ddir = os.path.join(self.path, d["dir"])
-        for root, _dirs, names in os.walk(ddir):
-            for fn in sorted(names):
-                if not fn.endswith(".parquet") or fn.startswith("_"):
-                    continue
-                pf = pq.ParquetFile(os.path.join(root, fn))
-                if pf.metadata.num_rows == 0:
-                    continue
-                first = pf.read_row_group(0, columns=["_file"]).column(0)[0].as_py()
-                if first.startswith("/") or "://" in first:
-                    raise ValueError(
-                        f"positional delete file {d['dir']} records ABSOLUTE "
-                        "data-file paths (pre-relative-path format); rewrite "
-                        "it against the current layout or re-issue the "
-                        "delete — refusing to silently un-delete rows"
-                    )
-                return
-        return
+        for rel in parquet_files(ddir):
+            pf = pq.ParquetFile(os.path.join(ddir, rel))
+            if pf.metadata.num_rows == 0:
+                continue
+            first = pf.read_row_group(0, columns=["_file"]).column(0)[0].as_py()
+            if first.startswith("/") or "://" in first:
+                raise ValueError(
+                    f"positional delete file {d['dir']} records ABSOLUTE "
+                    "data-file paths (pre-relative-path format); rewrite "
+                    "it against the current layout or re-issue the "
+                    "delete — refusing to silently un-delete rows"
+                )
+            return
 
     def _broadcast_if_small(self, side: DataFrame, d: dict) -> DataFrame:
         """``side`` (a join side read from delete file ``d``) hinted for
@@ -1804,117 +1761,10 @@ class SnapshotTable:
 
         out: set[str] = set()
         ddir = os.path.join(self.path, d["dir"])
-        for root, _dirs, names in os.walk(ddir):
-            for fn in names:
-                if fn.endswith(".parquet") and not fn.startswith("_"):
-                    col = pq.read_table(
-                        os.path.join(root, fn), columns=["_file"]
-                    ).column(0)
-                    out.update(col.to_pylist())
+        for rel in parquet_files(ddir):
+            col = pq.read_table(os.path.join(ddir, rel), columns=["_file"])
+            out.update(col.column(0).to_pylist())
         return out
-
-    def _dir_col_bounds(
-        self, dirpath: str, cols: list[str]
-    ) -> dict[str, tuple[object, object] | None]:
-        """Per-column (min, max) over a parquet dir's footers; None where any
-        row group lacks usable stats (callers must treat None as
-        match-anything — pruning may only skip what it can prove absent)."""
-        import pyarrow.parquet as pq
-
-        from iceberg_evolve_spark.sources.footer_stats import _to_comparable
-
-        acc: dict[str, tuple[object, object] | None] = {c: None for c in cols}
-        known = {c: True for c in cols}
-        for root, _dirs, names in os.walk(dirpath):
-            for fn in names:
-                if not fn.endswith(".parquet") or fn.startswith("_"):
-                    continue
-                meta = pq.ParquetFile(os.path.join(root, fn)).metadata
-                idx = {
-                    meta.schema.column(i).name: i
-                    for i in range(meta.num_columns)
-                }
-                for c in cols:
-                    if not known[c]:
-                        continue
-                    if c not in idx:
-                        known[c] = False
-                        continue
-                    for rg in range(meta.num_row_groups):
-                        group = meta.row_group(rg)
-                        st = group.column(idx[c]).statistics
-                        if st is None or not st.has_min_max:
-                            if (
-                                st is not None
-                                and st.null_count == group.num_rows
-                            ):
-                                continue  # all-null chunk adds no bounds
-                            known[c] = False
-                            break
-                        lo = _to_comparable(st.min)
-                        hi = _to_comparable(st.max)
-                        cur = acc[c]
-                        acc[c] = (
-                            (lo, hi)
-                            if cur is None
-                            else (min(cur[0], lo), max(cur[1], hi))
-                        )
-        return {c: (acc[c] if known[c] else None) for c in cols}
-
-    def _file_may_hold_keys(
-        self,
-        data_dir: str,
-        rel: str,
-        key_bounds: dict[str, tuple[object, object] | None],
-    ) -> bool:
-        """Conservative overlap test: can data file ``rel`` contain a row
-        matching SOME key of an equality delete whose per-column key bounds
-        are ``key_bounds``? Column bounds come from the file footer, or from
-        the key=value partition path segment for partition columns; any
-        unknown (missing stats, incomparable types, unbounded keys) keeps
-        the file — over-rewriting is safe, under-rewriting loses deletes."""
-        import pyarrow.parquet as pq
-
-        from iceberg_evolve_spark.sources.footer_stats import (
-            _can_overlap,
-            _coerce_like,
-            _partition_value,
-            _to_comparable,
-        )
-
-        fp = os.path.join(data_dir, rel)
-        meta = pq.ParquetFile(fp).metadata
-        idx = {meta.schema.column(i).name: i for i in range(meta.num_columns)}
-        for c, kb in key_bounds.items():
-            if kb is None:
-                continue  # unknown key range: cannot exclude on this column
-            klo, khi = kb
-            if c not in idx:
-                pv = _partition_value(data_dir, fp, c)
-                if pv is None:
-                    continue  # no info: keep
-                v = _coerce_like(pv, klo)
-                if not _can_overlap(v, v, klo, khi):
-                    return False
-                continue
-            overlap = False
-            usable = True
-            for rg in range(meta.num_row_groups):
-                group = meta.row_group(rg)
-                st = group.column(idx[c]).statistics
-                if st is None or not st.has_min_max:
-                    if st is not None and st.null_count == group.num_rows:
-                        continue  # all-null: eq-deletes never match NULL
-                    usable = False
-                    break
-                if _can_overlap(
-                    _to_comparable(st.min), _to_comparable(st.max), klo, khi
-                ):
-                    overlap = True
-                    break
-            if usable and not overlap:
-                return False  # every row group provably misses the key range
-        return True
 
     def rewrite_data_files(
         self,
@@ -1972,15 +1822,33 @@ class SnapshotTable:
                     self._check_pos_delete_paths(d)
                 affected |= self._pos_delete_files(d) & set(rel_files)
                 continue
+            # an equality delete reaches the strictly older files whose
+            # footers can hold one of its keys: the delete dir's key bounds
+            # prune them like a scan range (unknown bounds prune nothing —
+            # over-rewriting is safe, under-rewriting loses deletes). The
+            # bounds go in comparable form, so a timestamp key is never
+            # coerced from a partition path written in the session zone.
             dseq = int(d.get("seq") or 10**9)
-            key_bounds = self._dir_col_bounds(
-                os.path.join(self.path, d["dir"]), list(d["cols"])
+            older = [
+                rel for rel in rel_files
+                if rel not in affected and _rel_seq(rel, base_seq) < dseq
+            ]
+            _rows, key_footer = read_dir_footer(
+                os.path.join(self.path, d["dir"]), d["cols"]
             )
-            for rel in rel_files:
-                if rel in affected or _rel_seq(rel, base_seq) >= dseq:
-                    continue
-                if self._file_may_hold_keys(data_dir, rel, key_bounds):
-                    affected.add(rel)
+            ranges = {
+                c: (_to_comparable(fc.bounds[0]), _to_comparable(fc.bounds[1]))
+                for c, fc in key_footer.items()
+                if fc is not None and fc.bounds is not None
+            }
+            if ranges and older:
+                kept, _ = prune_files_multi(
+                    data_dir,
+                    ranges,
+                    files=[os.path.join(data_dir, rel) for rel in older],
+                )
+                older = [os.path.relpath(f, data_dir) for f in kept]
+            affected.update(older)
         if small_file_bytes:
             for rel in rel_files:
                 if rel in affected:
@@ -2571,10 +2439,7 @@ class SnapshotTable:
         types (int files on a widened-to-long table) must not be stamped
         with the current schema generation and read without projection
         (ADVICE r12). Driver-side footer read only; no Spark session."""
-        import pyarrow.parquet as pq
-
-        first = _walk_rel_parquet(staged)[0]
-        arrow = pq.ParquetFile(os.path.join(staged, first)).schema_arrow
+        arrow = _staged_schema(staged)
         fields = cur["schemas"][str(cur["schema_id"])]["fields"]
         phys = set(arrow.names)
         expect = {f["name"] for f in fields}
@@ -2632,7 +2497,8 @@ class SnapshotTable:
 
         ``mode="overwrite"`` (default): the staged data becomes the ENTIRE
         new snapshot — an O(1) directory rename + manifest + log commit
-        (a fresh lineage, like :meth:`write`).
+        (a fresh lineage, like :meth:`write`, keeping the table's sort
+        order when the staged data has its columns).
 
         ``mode="append"``: the audited rows are ADDED to the current
         snapshot through :meth:`append`'s commit — staged files move into
@@ -2681,12 +2547,21 @@ class SnapshotTable:
             # files against the tracked schema exactly like the append path,
             # then carry the tracking onto the fresh lineage.
             self._check_staged_schema(staged, cur, partition_by)
+        # the replaced table's sort order carries onto the fresh lineage (so
+        # later appends keep clustering) while the staged data has every
+        # sort column — always so on a tracked table, gated just above
+        sort_by = cur.get("sort_by") if cur is not None else None
+        if sort_by and not set(sort_by) <= (
+            set(partition_by or []) | set(_staged_schema(staged).names)
+        ):
+            sort_by = None
         return self._new_lineage(
             entries,
             staged,
             note or f"publish {stage_id}",
             ts,
             partition_by=partition_by,
+            sort_by=sort_by,
             tracking=cur,
         )
 
@@ -3009,8 +2884,6 @@ class SnapshotTable:
         manifest-listed files (so crash orphans in the shared lineage dir
         never appear). This is the relation a scan planner joins against
         (file skipping = a filter on these bounds)."""
-        import pyarrow.parquet as pq
-
         entry = self._resolve(version, as_of)
         stats_cols = stats_cols or []
         base_seq = int(entry.get("base_seq", entry["version"]))
@@ -3029,32 +2902,19 @@ class SnapshotTable:
                 # s{seq}- name prefix, base files inherit the lineage base;
                 # delete files report their commit sequence
                 seq = dir_seq if dir_seq is not None else _rel_seq(rel, base_seq)
-                meta = pq.ParquetFile(fp).metadata
-                idx = {
-                    meta.schema.column(i).name: i
-                    for i in range(meta.num_columns)
-                }
+                n_rows, footer = read_footer(fp, stats_cols)
                 bounds = []
                 for c in stats_cols:
-                    lo = hi = None
-                    if c in idx:
-                        for rg in range(meta.num_row_groups):
-                            st = meta.row_group(rg).column(idx[c]).statistics
-                            if st is None or not st.has_min_max:
-                                continue
-                            lo = st.min if lo is None else min(lo, st.min)
-                            hi = st.max if hi is None else max(hi, st.max)
-                    bounds.extend(
-                        [
-                            None if lo is None else str(lo),
-                            None if hi is None else str(hi),
-                        ]
-                    )
+                    fc = footer[c]
+                    if fc is None or fc.bounds is None:
+                        bounds.extend([None, None])
+                    else:
+                        bounds.extend(str(b) for b in fc.bounds)
                 out.append(
                     (
                         content,
                         os.path.join(dirname, rel),
-                        int(meta.num_rows),
+                        int(n_rows),
                         int(os.path.getsize(fp)),
                         int(seq),
                         *bounds,
@@ -3064,7 +2924,7 @@ class SnapshotTable:
 
         rows = _rows_for(self._entry_files(entry), entry["data_dir"], "data")
         for d in entry.get("deletes", []):
-            drels = _walk_rel_parquet(os.path.join(self.path, d["dir"]))
+            drels = parquet_files(os.path.join(self.path, d["dir"]))
             rows.extend(
                 _rows_for(drels, d["dir"], f"{d['kind']}-delete", d.get("seq"))
             )
@@ -3441,19 +3301,17 @@ class SnapshotTable:
                 continue
             if d["kind"] == "pos":
                 self._check_pos_delete_paths(d)
-            for root, _dirs, names in os.walk(os.path.join(self.path, d["dir"])):
-                for fn in names:
-                    if not fn.endswith(".parquet") or fn.startswith("_"):
-                        continue
-                    cols = ["_file", "card"] if d["kind"] == "dv" else ["_file"]
-                    tbl = pq.read_table(os.path.join(root, fn), columns=cols)
-                    fl = tbl.column(0).to_pylist()
-                    if d["kind"] == "dv":
-                        for f, c in zip(fl, tbl.column(1).to_pylist()):
-                            del_rows[os.path.dirname(f)] += int(c)
-                    else:
-                        for f in fl:
-                            del_rows[os.path.dirname(f)] += 1
+            ddir = os.path.join(self.path, d["dir"])
+            cols = ["_file", "card"] if d["kind"] == "dv" else ["_file"]
+            for rel in parquet_files(ddir):
+                tbl = pq.read_table(os.path.join(ddir, rel), columns=cols)
+                fl = tbl.column(0).to_pylist()
+                if d["kind"] == "dv":
+                    for f, c in zip(fl, tbl.column(1).to_pylist()):
+                        del_rows[os.path.dirname(f)] += int(c)
+                else:
+                    for f in fl:
+                        del_rows[os.path.dirname(f)] += 1
         rows = [
             (
                 part,
@@ -3788,7 +3646,7 @@ class SnapshotTable:
                 elif name == stem and live_rel.get(name):
                     # live lineage dir: per-file sweep
                     live = live_rel[name]
-                    for rel in _walk_rel_parquet(full):
+                    for rel in parquet_files(full):
                         fp = os.path.join(full, rel)
                         if rel not in live and not _graced(fp):
                             os.remove(fp)

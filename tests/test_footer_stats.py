@@ -6,6 +6,7 @@ import datetime
 import os
 
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 import pytest
 
@@ -293,3 +294,170 @@ class TestPruneFiles:
         pq.write_table(pa.table({"k": [1]}), d / "a.parquet")
         kept, total = prune_files(str(d), "missing", 0, 10)
         assert total == 1 and len(kept) == 1
+
+
+class TestColumnPath:
+    """A struct field ``s.k`` has parquet leaf name ``k``; only the
+    top-level leaf may answer for the top-level column ``k``."""
+
+    @pytest.fixture()
+    def shadowed(self, tmp_path):
+        d = tmp_path / "shadow"
+        d.mkdir()
+        k = pa.array([100, 101, 102], pa.int64())
+        s = pa.StructArray.from_arrays([pa.array([1, 2, 3], pa.int64())], ["k"])
+        pq.write_table(pa.table({"k": k, "s": s}), d / "a.parquet")
+        return str(d)
+
+    def test_table_stats_read_the_top_level_column(self, shadowed):
+        st = table_stats_from_footers(shadowed, ["k"])["k"]
+        assert (st.n_values, st.min_value, st.max_value) == (3, 100, 102)
+
+    def test_pruning_reads_the_top_level_column(self, shadowed):
+        from iceberg_evolve_spark.sources.footer_stats import prune_files
+
+        kept, total = prune_files(shadowed, "k", 100, 102)
+        assert (len(kept), total) == (1, 1)
+        kept, _ = prune_files(shadowed, "k", 1, 3)
+        assert kept == []
+
+
+# -- property test of the footer reader (pyarrow only) -----------------------
+
+_DAY0 = datetime.date(2020, 1, 1)
+_TS0 = datetime.datetime(2020, 1, 1)
+_TYPES = {
+    "i": pa.int64(),
+    "d": pa.date32(),
+    "t": pa.timestamp("us"),
+    "s": pa.string(),
+}
+
+
+def _value(col):
+    from hypothesis import strategies as hs
+
+    return {
+        "i": hs.integers(-4, 4),
+        "d": hs.integers(0, 8).map(lambda n: _DAY0 + datetime.timedelta(days=n)),
+        "t": hs.integers(0, 8).map(
+            lambda n: _TS0 + datetime.timedelta(hours=n, microseconds=n)
+        ),
+        "s": hs.text("abc", max_size=2),
+        "g": hs.integers(6, 8),
+    }[col]
+
+
+def _files_strategy():
+    """1-4 files, each 0-7 rows (any value may be NULL) written with a
+    1-3 row ``row_group_size``; some land in the partition dir ``g=7``."""
+    from hypothesis import strategies as hs
+
+    row = hs.fixed_dictionaries(
+        {c: hs.none() | _value(c) for c in _TYPES}
+        # a struct whose leaf is named like the top-level ``i``, with
+        # values outside ``i``'s domain
+        | {"st": hs.none() | hs.integers(50, 60)}
+    )
+    one = hs.tuples(hs.lists(row, max_size=7), hs.integers(1, 3), hs.booleans())
+    return hs.lists(one, min_size=1, max_size=4)
+
+
+def _ranges_strategy():
+    from hypothesis import strategies as hs
+
+    def bounds(col):
+        v = hs.none() | _value(col)
+        return hs.tuples(v, v).filter(lambda b: b != (None, None))
+
+    cols = hs.lists(
+        hs.sampled_from(["i", "d", "t", "s", "g"]), min_size=1, max_size=3,
+        unique=True,
+    )
+    return cols.flatmap(
+        lambda cs: hs.fixed_dictionaries({c: bounds(c) for c in cs})
+    )
+
+
+def _write_files(root, files):
+    """Write ``files``; return [(path, rows-with-g)] for brute force."""
+    out = []
+    for n, (rows, rg_size, partitioned) in enumerate(files):
+        sub = os.path.join(root, "g=7") if partitioned else root
+        os.makedirs(sub, exist_ok=True)
+        cols = {c: pa.array([r[c] for r in rows], t) for c, t in _TYPES.items()}
+        cols["st"] = pa.StructArray.from_arrays(
+            [pa.array([r["st"] for r in rows], pa.int64())], ["i"]
+        )
+        fp = os.path.join(sub, f"f{n}.parquet")
+        pq.write_table(pa.table(cols), fp, row_group_size=rg_size)
+        out.append((fp, [{**r, "g": 7 if partitioned else None} for r in rows]))
+    return out
+
+
+def _matches(row, ranges):
+    return all(
+        row[c] is not None
+        and (lo is None or row[c] >= lo)
+        and (hi is None or row[c] <= hi)
+        for c, (lo, hi) in ranges.items()
+    )
+
+
+class TestFooterReaderProperties:
+    """Brute force over generated files: pruning never drops a file holding
+    a matching row; dir bounds are exactly the non-null min/max; NULL counts
+    are the counted NULLs; footer COUNT/MIN/MAX equal pyarrow's."""
+
+    def test_reader_agrees_with_the_rows(self):
+        import tempfile
+
+        from hypothesis import HealthCheck, given, settings
+
+        from iceberg_evolve_spark.sources.footer_stats import (
+            _to_comparable,
+            prune_files_multi,
+            read_dir_footer,
+        )
+
+        @settings(
+            max_examples=300,
+            deadline=None,
+            suppress_health_check=[HealthCheck.too_slow],
+        )
+        @given(files=_files_strategy(), ranges=_ranges_strategy())
+        def check(files, ranges):
+            with tempfile.TemporaryDirectory() as root:
+                written = _write_files(root, files)
+                kept, total = prune_files_multi(root, ranges)
+                assert total == len(written)
+                for fp, rows in written:
+                    if any(_matches(r, ranges) for r in rows):
+                        assert fp in kept, (fp, ranges)
+
+                all_rows = [r for _fp, rs in written for r in rs]
+                n_rows, footer = read_dir_footer(root, _TYPES)
+                assert n_rows == len(all_rows)
+                for c in _TYPES:
+                    values = [r[c] for r in all_rows if r[c] is not None]
+                    fc = footer[c]
+                    assert fc.nulls == len(all_rows) - len(values)
+                    assert fc.all_null == (not values)
+                    if values:
+                        assert fc.bounds == (min(values), max(values))
+                    else:
+                        assert fc.bounds is None
+
+                for c in ("i", "d", "t"):
+                    got = table_stats_from_footers(root, [c])[c]
+                    col = pa.array([r[c] for r in all_rows], _TYPES[c])
+                    mm = pc.min_max(col).as_py()
+                    assert got.n_values == pc.count(col).as_py()
+                    assert (got.min_value, got.max_value) == (
+                        _to_comparable(mm["min"]),
+                        _to_comparable(mm["max"]),
+                    )
+                with pytest.raises(ValueError, match="BYTE_ARRAY"):
+                    table_stats_from_footers(root, ["s"])
+
+        check()

@@ -231,10 +231,44 @@ def test_log_is_valid_json_after_every_commit(spark, table):
     )
     t.publish("wap2", ts=315.0)
     pin({"version": 17, "data_dir": "v00017", "base_seq": 17, "ts": 315.0,
-         "note": "publish wap2", "partition_by": ["k"], "schema_id": 1,
+         "note": "publish wap2", "partition_by": ["k"], "sort_by": ["id"],
+         "schema_id": 1,
          "schemas": {"0": s0, "1": s1}, "manifests": ["m00017.json"],
          "manifest_schemas": {"m00017.json": 1}})
     assert {r["id"] for r in t.read(spark).collect()} == set(range(70, 75))
+
+
+def test_overwrite_publish_keeps_sort_order(spark, tmp_path_factory):
+    """An overwrite publish replaces a sorted table's content, not its sort
+    order: appends after it still range-cluster their files on the sort
+    column, so footer pruning keeps working."""
+    t = SnapshotTable(str(tmp_path_factory.mktemp("pubsort") / "t"))
+    t.write(spark.range(0, 20), ts=1.0, sort_by=["id"], sort_files=2)
+    t.stage(spark.range(100, 120), "w")
+    t.publish("w", ts=2.0)
+    # without AQE coalescing the increment lands in one file per range
+    # partition: clustered files cover disjoint, internally sorted ranges
+    conf = "spark.sql.adaptive.coalescePartitions.enabled"
+    prev = spark.conf.get(conf)
+    spark.conf.set(conf, "false")
+    try:
+        t.append(
+            spark.range(0, 400, numPartitions=4).selectExpr(
+                "(id * 7919) % 400 + 1000 AS id"
+            ),
+            ts=3.0,
+        )
+    finally:
+        spark.conf.set(conf, prev)
+    appended = [
+        (int(r["id_lower"]), int(r["id_upper"]))
+        for r in t.files_df(spark, stats_cols=["id"]).collect()
+        if r["seq"] == t.versions()[-1]["version"] and r["n_rows"]
+    ]
+    assert len(appended) > 1
+    appended.sort()
+    assert all(a[1] < b[0] for a, b in zip(appended, appended[1:]))
+    assert t.versions()[-1]["sort_by"] == ["id"]
 
 
 def test_snapshots_are_immutable_under_append(spark, table):
@@ -597,6 +631,37 @@ class TestMorScaleSafety:
         )
 
 
+class TestStructLeafShadow:
+    """A struct field ``s.k`` has parquet leaf name ``k``: footer statistics
+    must be found by column path, or the struct's bounds answer for the
+    top-level ``k`` and prune, report or scope on the wrong column."""
+
+    @pytest.fixture()
+    def shadowed(self, tmp_path_factory, spark):
+        t = SnapshotTable(str(tmp_path_factory.mktemp("shadow") / "t"))
+        df = spark.range(100, 103).toDF("k").withColumn(
+            "s", F.struct((F.col("k") - 100).alias("k"))
+        )
+        t.write(df.coalesce(1), ts=1.0)
+        return t
+
+    def test_pruned_read_and_file_bounds_use_top_level_column(
+        self, spark, shadowed
+    ):
+        got = shadowed.read(spark, where={"k": (100, 102)})
+        assert sorted(r["k"] for r in got.collect()) == [100, 101, 102]
+        (data,) = shadowed.files_df(spark, stats_cols=["k"]).collect()
+        assert (data["k_lower"], data["k_upper"]) == ("100", "102")
+
+    def test_scoped_rewrite_keeps_equality_delete(self, spark, shadowed):
+        keys = spark.createDataFrame([(101,)], "k long")
+        shadowed.delete_by_key(keys, ["k"], ts=2.0)
+        shadowed.rewrite_data_files(spark, ts=3.0)
+        assert sorted(r["k"] for r in shadowed.read(spark).collect()) == [
+            100, 102,
+        ]
+
+
 class TestPrunedMorRead:
     """Scan planning composed into the snapshot read path: footer-stats file
     pruning BEFORE the delete anti-joins (Iceberg prunes manifests first,
@@ -661,6 +726,34 @@ def test_log_layout_is_private_to_snapshots_module():
         if layout.search(line)
     ]
     assert not leaks, f"snapshot-log layout named outside snapshots.py: {leaks}"
+
+
+def test_row_group_statistics_are_read_in_one_module():
+    """Only ``sources/footer_stats.py`` reads parquet row-group statistics
+    (``.row_group(...)`` calls and column-chunk ``.statistics``); every
+    other module asks its footer reader, so how a column is found and what
+    missing or all-null statistics prove is decided in one place."""
+    import ast
+    import pathlib
+
+    import iceberg_evolve_spark
+
+    root = pathlib.Path(iceberg_evolve_spark.__file__).parent
+    owner = root / "sources" / "footer_stats.py"
+    leaks = set()
+    for path in sorted(root.rglob("*.py")):
+        if path == owner:
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "row_group"
+            ) or (isinstance(node, ast.Attribute) and node.attr == "statistics"):
+                leaks.add(f"{path.relative_to(root)}:{node.lineno}")
+    assert not leaks, (
+        f"row-group statistics read outside footer_stats: {sorted(leaks)}"
+    )
 
 
 def test_snapshot_entries_are_built_in_two_places():
