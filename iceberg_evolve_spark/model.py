@@ -22,6 +22,7 @@ a schema holds far fewer of them, and primitives are shared instances.
 
 from __future__ import annotations
 
+import functools
 import re
 from dataclasses import dataclass
 from typing import NamedTuple, Union
@@ -239,6 +240,7 @@ def primitive(name: str) -> PrimitiveType:
     return PRIMITIVE_TYPES.get(name) or PrimitiveType(name)
 
 
+@functools.lru_cache(maxsize=1024)  # few distinct strings; result is frozen
 def parse_decimal(s: str) -> DecimalType | None:
     """Parse ``"decimal(p, s)"`` strings (reference regex at ``utils.py:66-68``)."""
     m = _DECIMAL_RE.match(s.strip())

@@ -59,11 +59,14 @@ Disciplines (the same ones real table formats automate):
   deleted row positions (parquet's delta encoding + compression is the
   bitmap; Iceberg v3 serializes roaring bitmaps into Puffin files for the
   same reason). Each vector delete UNIONS with the previous vector and
-  supersedes it, so K delete commits cost the reader exactly ONE anti-join —
-  versus K anti-joins for K v2 positional delete files. The read-side
-  application is ``explode`` + anti-join: pure JVM, the scan side never
-  leaves whole-stage codegen. Superseded vectors stay on disk for time
-  travel until retention reclaims them.
+  supersedes it, so K vector deletes leave ONE small file to read.
+  Superseded vectors stay on disk for time travel until retention
+  reclaims them.
+* **Deletes are applied once per KIND, not once per file.**
+  ``SnapshotTable._apply_deletes`` turns a delete stack into joins for
+  reads (anti), the delete fold and the changelog (semi): positional files
+  and the vector form ONE ``(_file, _pos)`` side, equality files one side
+  per key-column tuple. Delete dirs are read under their footer's schema.
 * **Two entry builders.** Every commit on the current lineage builds its
   entry with ``SnapshotTable._successor`` (which decides what it inherits
   from the head); ``write`` and the overwrite ``publish`` build a fresh
@@ -126,14 +129,14 @@ def delete_stack_keys(entry: dict) -> "set[str]":
     unchanged), which a length compare misclassifies as a plain append."""
     return {json.dumps(d, sort_keys=True) for d in entry.get("deletes", [])}
 
-#: Delete files at/below this on-disk size are force-broadcast in the
-#: merge-on-read anti-joins (KB-scale CDC deletes: keeps the scan a single
-#: pass with no shuffle). Bigger delete files — the mass-delete/retention
-#: shape — leave the join strategy to AQE, which picks sort-merge or its own
-#: runtime broadcast from MEASURED sizes. An unconditional broadcast here is
-#: the same class of scale bug as the r7 bigram-surprisal score table
-#: (measured 13.4× at 10× data before that fix); Iceberg's own reader guards
-#: its delete-file broadcasts the same way.
+#: A delete join side (the delete files of one kind) at/below this on-disk
+#: size is force-broadcast in the merge-on-read joins (KB-scale CDC deletes:
+#: keeps the scan a single pass with no shuffle). Bigger sides — the
+#: mass-delete/retention shape — leave the join strategy to AQE, which
+#: picks sort-merge or its own runtime broadcast from MEASURED sizes. An
+#: unconditional broadcast here is the same class of scale bug as the r7
+#: bigram-surprisal score table (measured 13.4× at 10× data before that
+#: fix); Iceberg's own reader guards its delete-file broadcasts the same way.
 BROADCAST_DELETE_MAX_BYTES = 32 << 20
 
 #: Files below this size are binpacked when ``rewrite_data_files`` runs with
@@ -146,6 +149,10 @@ SMALL_FILE_COMPACT_BYTES = 32 << 20
 #: positions. User tables may not use them (the positional anti-join keys on
 #: them; a collision would silently join on the wrong column).
 _RESERVED_COLS = ("_file", "_pos", "_seq")
+
+#: Columns a positional / vector delete file must hold (an equality delete
+#: must hold its ``cols``), checked by the footer peek before any read.
+_DELETE_COLS = {"pos": ("_file", "_pos"), "dv": ("_file", "positions", "card")}
 
 #: Appended data files carry their commit's data sequence number in the file
 #: name (``s00042-part-...parquet``); base files have no prefix and inherit
@@ -1099,11 +1106,12 @@ class SnapshotTable:
     #   sorted array of its deleted positions; at most one per snapshot, each
     #   new vector superseding the last (see the deletion-vector section).
     #
-    # Read-side application is one anti-join per delete file: positional
-    # deletes and vectors join on (file, position), equality deletes on the
-    # key columns. A delete side at most ``BROADCAST_DELETE_MAX_BYTES`` on
-    # disk is broadcast, so the scan stays a single pass with no extra
-    # shuffle; a bigger one leaves the join strategy to AQE.
+    # Read-side application is one join per delete kind (see
+    # ``_apply_deletes``): positional files and the vector share one
+    # (file, position) side, equality files one side per key-column tuple.
+    # A side at most ``BROADCAST_DELETE_MAX_BYTES`` on disk is broadcast, so
+    # the scan stays a single pass with no extra shuffle; a bigger one
+    # leaves the join strategy to AQE.
 
     @staticmethod
     def _restamp_seq(
@@ -1243,9 +1251,9 @@ class SnapshotTable:
                     # which stays on disk for older versions until retention
                     deletes = [x for x in deletes if x["kind"] != "dv"]
                 deletes.append({**delete, "seq": new_version})
-            # has_appends marks the lineage as multi-sequence: readers must
+            # has_appends marks the lineage as multi-sequence: readers
             # compare per-file sequence numbers against delete sequences
-            # (append-free lineages keep the cheaper plain anti-join)
+            # (on an append-free lineage every file predates every delete)
             return self._successor(
                 head,
                 new_version,
@@ -1313,8 +1321,8 @@ class SnapshotTable:
         ``vector=True`` writes a DELETION VECTOR instead (Iceberg v3): the
         matched positions are UNIONED with the table's current vector and
         committed as ONE merged per-file structure superseding it, so the
-        read side pays a single anti-join however many vector deletes have
-        accumulated — the v3 fix for v2's one-join-per-delete-file read
+        read side scans a single small file however many vector deletes
+        have accumulated — the v3 fix for v2's one-file-per-delete read
         amplification. Cost: the same filtered scan + a shuffle of
         O(all vectored positions) to re-group by file (Iceberg's
         maintenance trade: merge on write, constant on read)."""
@@ -1390,8 +1398,9 @@ class SnapshotTable:
             if not rows:
                 return False
             if any(fc is None or fc.nulls is None for fc in footer.values()):
+                scratch = {"dir": tmp, "kind": "eq", "cols": cols}
                 nulls = (
-                    keys.sparkSession.read.parquet(tmp)
+                    self._read_delete(keys.sparkSession, scratch)
                     .filter(" OR ".join(f"({c} IS NULL)" for c in cols))
                     .limit(1)
                     .count()
@@ -1450,28 +1459,10 @@ class SnapshotTable:
                 return d
         return None
 
-    def _dv_pairs(self, spark: SparkSession, d: dict) -> DataFrame:
-        """A deletion vector unpacked to (_file, _pos) rows — ``explode`` of
-        the per-file sorted position arrays, pure JVM. The expansion is
-        O(deleted rows) on the (small) vector side only; the data scan it
-        anti-joins against is untouched."""
-        from pyspark.sql import functions as F
-
-        dfile = spark.read.parquet(os.path.join(self.path, d["dir"]))
-        return dfile.select(
-            "_file", F.explode("positions").alias("_pos")
-        )
-
-    def _dv_total_card(self, dirpath: str) -> int:
-        """Total deleted-position count of a vector dir, from its (one row
-        per data file) ``card`` column — KB-scale driver reads."""
-        import pyarrow.parquet as pq
-
-        total = 0
-        for rel in parquet_files(dirpath):
-            col = pq.read_table(os.path.join(dirpath, rel), columns=["card"])
-            total += sum(col.column(0).to_pylist())
-        return total
+    def _dv_total_card(self, d: dict) -> int:
+        """Total deleted-position count of vector dir ``d``, from its (one
+        row per data file) ``card`` column — KB-scale driver reads."""
+        return sum(self._delete_columns(d, ["card"])[0])
 
     def _commit_delete_vector(
         self,
@@ -1498,10 +1489,8 @@ class SnapshotTable:
         pairs = matched
         prev_card = 0
         if prev is not None:
-            prev_card = self._dv_total_card(
-                os.path.join(self.path, prev["dir"])
-            )
-            pairs = pairs.unionByName(self._dv_pairs(spark, prev))
+            prev_card = self._dv_total_card(prev)
+            pairs = pairs.unionByName(self._delete_rows(spark, prev)[1])
         # matched rows come from the CURRENT read (existing vector already
         # applied), so merged ⊇ old with equality iff nothing new matched:
         # equal cardinality ⇒ no commit (footer-scale check, no extra job)
@@ -1509,7 +1498,8 @@ class SnapshotTable:
             entries,
             pairs,
             prev,
-            lambda tmp: self._dv_total_card(tmp) != prev_card,
+            lambda tmp: self._dv_total_card({"dir": tmp, "kind": "dv"})
+            != prev_card,
         )
         if delete is None:
             return cur["version"]
@@ -1527,23 +1517,21 @@ class SnapshotTable:
         absorb equality deletes the way v2→v3 table migration does. No
         data file is read beyond one scan, none is written: the commit
         reuses the snapshot's manifests verbatim and replaces K delete
-        entries with a single ``dv`` entry, so read amplification returns
-        to one anti-join while write amplification is O(deleted rows) —
-        the cheap maintenance step between plain reads and a full
-        :meth:`rewrite_data_files` binpack.
+        entries with a single ``dv`` entry, so a read applies one small
+        vector instead of the stack's files while write amplification is
+        O(deleted rows) — the cheap maintenance step between plain reads
+        and a full :meth:`rewrite_data_files` binpack.
 
         The positions are computed by ONE pass: the snapshot's raw file
-        set scanned with row positions, each delete's own semantics
-        applied (pos/dv pairs directly; equality keys semi-joined under
-        the data-sequence rule), matching rows' (file, position) pairs
-        unioned. The new entry is stamped ``delete_rewrite`` so changelog
-        scans know delete files vanished WITHOUT a rollback: net changes
-        across this commit are zero by construction, and the changelog's
-        semi-join against the ``from``-side live rows keeps attribution
-        exact across it. Returns the new version, or None when the stack
-        is already a single vector (or empty) — no empty commits."""
-        from pyspark.sql import functions as F
-
+        set scanned with row positions and semi-joined against the stack
+        by :meth:`_apply_deletes` (the reader's own joins, so the fold
+        deletes exactly what a read hides). The new entry is stamped
+        ``delete_rewrite`` so changelog scans know delete files vanished
+        WITHOUT a rollback: net changes across this commit are zero by
+        construction, and the changelog's semi-join against the
+        ``from``-side live rows keeps attribution exact across it. Returns
+        the new version, or None when the stack is already a single vector
+        (or empty) — no empty commits."""
         entries = self.versions()
         if not entries:
             raise FileNotFoundError(f"no snapshots at {self.path}")
@@ -1554,32 +1542,11 @@ class SnapshotTable:
         ):
             return None
         raw = self._read_with_pos(spark, {**cur, "deletes": []})
-        multi_seq = bool(cur.get("has_appends"))
-        pairs = None
-        for d in deletes:
-            dfile = spark.read.parquet(os.path.join(self.path, d["dir"]))
-            if d["kind"] == "pos":
-                self._check_pos_delete_paths(d)
-                p = dfile.select("_file", "_pos")
-            elif d["kind"] == "dv":
-                p = self._dv_pairs(spark, d)
-            else:  # eq: keys hit rows with a strictly older data sequence
-                hit = raw.join(
-                    self._broadcast_if_small(
-                        dfile.select(*d["cols"]).distinct(), d
-                    ),
-                    on=list(d["cols"]),
-                    how="semi",
-                )
-                dseq = d.get("seq")
-                if dseq is not None and multi_seq:
-                    hit = hit.filter(F.col("_seq") < F.lit(int(dseq)))
-                p = hit.select("_file", "_pos")
-            pairs = p if pairs is None else pairs.unionByName(p)
+        hit = self._apply_deletes(
+            spark, raw, deletes, bool(cur.get("has_appends")), "semi"
+        )
         delete = self._write_vector(
-            entries,
-            pairs.dropDuplicates(["_file", "_pos"]),
-            self._dv_entry(cur),
+            entries, hit.select("_file", "_pos"), self._dv_entry(cur)
         )
         version = cur["version"] + 1
         new_entry = self._successor(
@@ -1596,40 +1563,148 @@ class SnapshotTable:
         self._commit(entries + [new_entry], expected_head=cur["version"])
         return version
 
-    def _check_pos_delete_paths(self, d: dict) -> None:
-        """Refuse positional delete files recorded under the pre-r9
-        ABSOLUTE-path scheme (ADVICE r9): an unstamped delete whose first
-        ``_file`` value looks absolute would anti-join against nothing and
-        silently resurrect deleted rows. One KB-scale footer+page peek."""
-        if d.get("paths") == "rel":
-            return
+    # -- delete files: one footer peek, one reader, one applier ---------------
+    def _peek_delete(self, d: dict) -> "tuple[str, object]":
+        """THE footer peek of delete dir ``d`` (``d["dir"]`` relative to the
+        table, or an absolute scratch dir): its path and Spark schema, from
+        the first file's footer (no schema-inference job). ``ValueError``
+        names the dir when it lacks its kind's columns, or when an unstamped
+        positional delete records ABSOLUTE paths (the pre-r9 scheme), which
+        would silently resurrect deleted rows."""
         import pyarrow.parquet as pq
+        from pyspark.sql.types import StructType
 
         ddir = os.path.join(self.path, d["dir"])
-        for rel in parquet_files(ddir):
-            pf = pq.ParquetFile(os.path.join(ddir, rel))
-            if pf.metadata.num_rows == 0:
-                continue
-            first = pf.read_row_group(0, columns=["_file"]).column(0)[0].as_py()
-            if first.startswith("/") or "://" in first:
+        rels = parquet_files(ddir)
+        if not rels:
+            raise ValueError(f"delete dir {d['dir']} holds no parquet file")
+        pf = pq.ParquetFile(os.path.join(ddir, rels[0]))
+        # a Spark writer records its schema in the footer's key-value data
+        recorded = (pf.metadata.metadata or {}).get(
+            b"org.apache.spark.sql.parquet.row.metadata"
+        )
+        if recorded is not None:
+            schema = StructType.fromJson(json.loads(recorded))
+        else:
+            from pyspark.sql.pandas.types import from_arrow_schema
+
+            schema = from_arrow_schema(pf.schema_arrow)
+        need = d["cols"] if d["kind"] == "eq" else _DELETE_COLS[d["kind"]]
+        missing = [c for c in need if c not in schema.names]
+        if missing:
+            raise ValueError(
+                f"{d['kind']} delete file {d['dir']} lacks its columns "
+                f"{missing} (holds {schema.names})"
+            )
+        if d["kind"] == "pos" and d.get("paths") != "rel":
+            files = (pq.ParquetFile(os.path.join(ddir, r)) for r in rels)
+            pf = next((f for f in files if f.metadata.num_rows), None)
+            first = pf and pf.read_row_group(0, ["_file"])[0][0].as_py()
+            if first and (first.startswith("/") or "://" in first):
                 raise ValueError(
                     f"positional delete file {d['dir']} records ABSOLUTE "
                     "data-file paths (pre-relative-path format); rewrite "
                     "it against the current layout or re-issue the "
                     "delete — refusing to silently un-delete rows"
                 )
-            return
+        return ddir, schema
 
-    def _broadcast_if_small(self, side: DataFrame, d: dict) -> DataFrame:
-        """``side`` (a join side read from delete file ``d``) hinted for
-        broadcast when ``d``'s dir is at most ``BROADCAST_DELETE_MAX_BYTES``
-        on disk; past the guard the join strategy is left to AQE."""
+    def _read_delete(self, spark: SparkSession, d: dict) -> DataFrame:
+        """Delete dir ``d`` as a DataFrame under its peeked schema (see
+        :meth:`_peek_delete`) — the one Spark reader of delete files."""
+        ddir, schema = self._peek_delete(d)
+        return spark.read.schema(schema).parquet(ddir)
+
+    def _delete_columns(self, d: dict, cols: list[str]) -> list[list]:
+        """``cols`` of delete dir ``d`` as Python lists, after the peek's
+        checks — a KB-scale driver-side read, never a Spark job."""
+        import pyarrow.parquet as pq
+
+        ddir, _schema = self._peek_delete(d)
+        out: list[list] = [[] for _ in cols]
+        for rel in parquet_files(ddir):
+            tbl = pq.read_table(os.path.join(ddir, rel), columns=list(cols))
+            for acc, col in zip(out, tbl.columns):
+                acc.extend(col.to_pylist())
+        return out
+
+    def _delete_rows(
+        self, spark: SparkSession, d: dict, multi_seq: bool = False
+    ) -> "tuple[object, DataFrame]":
+        """Delete ``d``'s join-side rows and the key of their side.
+        Positional files and vectors give ``(_file, _pos)`` pairs on the
+        ``"pos"`` side (a vector ``explode``d on the small side, so the
+        scan stays in whole-stage codegen). An equality file gives its keys
+        renamed ``_dk{i}`` plus ``_dseq``, its data sequence, on the side of
+        its ``cols`` tuple; ``_dseq`` is Long.MAX (hits every matching row)
+        for a legacy entry without ``seq`` and unless ``multi_seq``: on an
+        append-free lineage every data file predates every delete."""
         from pyspark.sql import functions as F
 
-        small = _dir_bytes(os.path.join(self.path, d["dir"])) <= (
-            BROADCAST_DELETE_MAX_BYTES
+        rows = self._read_delete(spark, d)
+        if d["kind"] == "pos":
+            return "pos", rows.select("_file", "_pos")
+        if d["kind"] == "dv":
+            return "pos", rows.select(
+                "_file", F.explode("positions").alias("_pos")
+            )
+        dseq = d.get("seq")
+        tag = int(dseq) if dseq is not None and multi_seq else (1 << 63) - 1
+        return tuple(d["cols"]), rows.select(
+            *[F.col(c).alias(f"_dk{i}") for i, c in enumerate(d["cols"])],
+            F.lit(tag).cast("long").alias("_dseq"),
         )
-        return F.broadcast(side) if small else side
+
+    def _apply_deletes(
+        self,
+        spark: SparkSession,
+        df: DataFrame,
+        deletes: list[dict],
+        multi_seq: bool,
+        how: str,
+    ) -> DataFrame:
+        """THE delete applier: ``df`` (a scan carrying ``_file``/``_pos``/
+        ``_seq``) minus the rows ``deletes`` hit (``how="anti"``: reads), or
+        only those rows, each once (``how="semi"``: the fold, the
+        changelog). One join per delete KIND, not per file: positional files
+        and the vector form one ``(_file, _pos)`` side; equality files on
+        the same ``cols`` form one side, joined on the keys plus
+        ``_seq < _dseq`` — a row dies only if its data file predates the
+        delete (Iceberg's data-sequence rule). Semi and anti joins ignore
+        duplicate right keys, so no side needs a ``distinct``. A side whose
+        dirs sum to at most ``BROADCAST_DELETE_MAX_BYTES`` is broadcast (the
+        scan stays one pass, no shuffle); past the guard AQE picks the
+        strategy, so a mass delete cannot force an oversized broadcast."""
+        from functools import reduce
+
+        from pyspark.sql import functions as F
+
+        sides: dict = {}
+        for d in deletes:
+            key, rows = self._delete_rows(spark, d, multi_seq)
+            nbytes = _dir_bytes(os.path.join(self.path, d["dir"]))
+            sides.setdefault(key, []).append((rows, nbytes))
+        out, hits = df, []
+        for key, parts in sides.items():
+            side = reduce(DataFrame.unionByName, [rows for rows, _ in parts])
+            if sum(n for _, n in parts) <= BROADCAST_DELETE_MAX_BYTES:
+                side = F.broadcast(side)
+            if key == "pos":
+                on = ["_file", "_pos"]
+            else:
+                on = F.col("_seq") < F.col("_dseq")
+                for i, c in enumerate(key):
+                    on = on & (F.col(c) == F.col(f"_dk{i}"))
+            if how == "anti":
+                out = out.join(side, on=on, how="anti")
+            else:
+                hits.append(df.join(side, on=on, how="semi"))
+        if how == "semi":
+            out = reduce(DataFrame.unionByName, hits)
+            if len(hits) > 1:  # a row hit by two kinds is one change
+                out = out.dropDuplicates(["_file", "_pos"])
+        # joins put their keys first — restore the input column order
+        return out.select(*df.columns)
 
     def _read_with_pos(
         self,
@@ -1637,14 +1712,12 @@ class SnapshotTable:
         entry: dict,
         files: list[str] | None = None,
     ) -> DataFrame:
-        """Current rows of ``entry`` with ``_file``/``_pos`` helper columns,
-        all registered delete files subtracted by anti-joins. Small delete
-        files are broadcast (size-guarded by ``BROADCAST_DELETE_MAX_BYTES``);
-        past the guard the strategy is left to AQE so a mass delete cannot
-        force an oversized broadcast. ``files`` narrows the scan to a pruned
-        file subset (scan planning); without it the scan reads exactly the
-        manifest-listed files (crash orphans in the shared lineage dir are
-        invisible)."""
+        """Current rows of ``entry`` with ``_file``/``_pos``/``_seq`` helper
+        columns, its delete files subtracted by :meth:`_apply_deletes` (one
+        anti-join per delete kind, size-guarded broadcast). ``files``
+        narrows the scan to a pruned file subset (scan planning); without
+        it the scan reads exactly the manifest-listed files (crash orphans
+        in the shared lineage dir are invisible)."""
         from pyspark.sql import functions as F
 
         data_dir = os.path.join(self.path, entry["data_dir"])
@@ -1692,7 +1765,7 @@ class SnapshotTable:
         # data sequence number per file: appended files carry it in their
         # s{seq}- name prefix; base files inherit the lineage base sequence.
         # Append-free lineages (the common case) skip the per-row regexp —
-        # every file is base — and keep the plain anti-join below.
+        # every file is base.
         base_seq = int(entry.get("base_seq", 0))
         multi_seq = bool(entry.get("has_appends"))
         if multi_seq:
@@ -1707,64 +1780,11 @@ class SnapshotTable:
             )
         else:
             df = df.withColumn("_seq", F.lit(base_seq))
-        table_cols = [c for c in df.columns if c not in _RESERVED_COLS]
-        for i, d in enumerate(entry.get("deletes", [])):
-            dfile = spark.read.parquet(os.path.join(self.path, d["dir"]))
-            if d["kind"] == "pos":
-                self._check_pos_delete_paths(d)
-                right = self._broadcast_if_small(dfile, d)
-                df = df.join(right, on=["_file", "_pos"], how="anti")
-            elif d["kind"] == "dv":
-                # deletion vector: explode the per-file position arrays on
-                # the (small) vector side, ONE anti-join total — the scan
-                # side stays in whole-stage codegen. Positions are file-
-                # scoped, so no sequence filter is needed (appends are new
-                # files a vector cannot reference).
-                pairs = dfile.select(
-                    "_file", F.explode("positions").alias("_pos")
-                )
-                right = self._broadcast_if_small(pairs, d)
-                df = df.join(right, on=["_file", "_pos"], how="anti")
-            elif d["kind"] == "eq":
-                dseq = d.get("seq")
-                if dseq is None or not multi_seq:
-                    # legacy log entry, or an append-free lineage where every
-                    # data file predates every delete: plain anti-join
-                    right = self._broadcast_if_small(dfile, d)
-                    df = df.join(right, on=list(d["cols"]), how="anti")
-                    continue
-                # sequence-aware: delete a row only if its key matches AND
-                # its data file predates the delete commit — rows appended
-                # after the delete survive (Iceberg data-sequence rule).
-                # Left join + filter instead of anti so the _seq comparison
-                # can see both sides; the delete side is still distinct keys.
-                hit = f"_del_hit_{i}"
-                marked = dfile.select(*d["cols"]).withColumn(hit, F.lit(True))
-                right = self._broadcast_if_small(marked, d)
-                df = df.join(right, on=list(d["cols"]), how="left").filter(
-                    ~(
-                        F.coalesce(F.col(hit), F.lit(False))
-                        & (F.col("_seq") < F.lit(int(dseq)))
-                    )
-                ).drop(hit)
-            else:  # pragma: no cover - manifest corruption
-                raise ValueError(f"unknown delete kind {d['kind']!r}")
-        # joins put their keys first — restore the table's column order
-        return df.select(*table_cols, "_file", "_pos", "_seq")
+        return self._apply_deletes(
+            spark, df, entry.get("deletes", []), multi_seq, "anti"
+        )
 
     # -- compaction -----------------------------------------------------------
-    def _pos_delete_files(self, d: dict) -> set[str]:
-        """Distinct data-file paths a positional delete references —
-        driver-side column read of the (small) delete file, the same
-        metadata-plane cost Iceberg's planner pays to scope a rewrite."""
-        import pyarrow.parquet as pq
-
-        out: set[str] = set()
-        ddir = os.path.join(self.path, d["dir"])
-        for rel in parquet_files(ddir):
-            col = pq.read_table(os.path.join(ddir, rel), columns=["_file"])
-            out.update(col.column(0).to_pylist())
-        return out
 
     def rewrite_data_files(
         self,
@@ -1818,9 +1838,8 @@ class SnapshotTable:
             if d["kind"] in ("pos", "dv"):
                 # both name their data files outright (a deletion vector's
                 # _file column is its per-file index)
-                if d["kind"] == "pos":
-                    self._check_pos_delete_paths(d)
-                affected |= self._pos_delete_files(d) & set(rel_files)
+                (named,) = self._delete_columns(d, ["_file"])
+                affected |= set(named) & set(rel_files)
                 continue
             # an equality delete reaches the strictly older files whose
             # footers can hold one of its keys: the delete dir's key bounds
@@ -1932,8 +1951,8 @@ class SnapshotTable:
         """AMORTIZED COMPACTION POLICY: fold the merge-on-read stack when
         read amplification warrants it — the maintenance loop every
         streaming MOR pipeline needs (each micro-batch adds one delete file
-        and one append's worth of small files; unbounded, every read pays
-        one anti-join per delete file). Compacts via
+        and one append's worth of small files; unbounded, every read scans
+        every delete file, and the join sides grow per commit). Compacts via
         :meth:`rewrite_data_files` (scoped: delete-referenced files plus
         sub-``SMALL_FILE_COMPACT_BYTES`` small files; untouched data carried
         by list) when the current snapshot carries at least
@@ -2722,7 +2741,8 @@ class SnapshotTable:
         """Read the latest snapshot, a pinned ``version``, or the snapshot
         current ``as_of`` a timestamp (time travel). Snapshots carrying
         row-level delete files are merge-on-read: the delete files are
-        subtracted by anti-joins in the same scan (size-guarded broadcast).
+        subtracted in the same scan by one anti-join per delete KIND, not
+        per file (size-guarded broadcast; see :meth:`_apply_deletes`).
 
         ``where`` ({column: (lo, hi)}) turns the read into a PLANNED range
         scan: data files are pruned by footer stats FIRST (so the delete
@@ -3299,19 +3319,13 @@ class SnapshotTable:
             if d["kind"] == "eq":
                 n_eq += 1
                 continue
-            if d["kind"] == "pos":
-                self._check_pos_delete_paths(d)
-            ddir = os.path.join(self.path, d["dir"])
-            cols = ["_file", "card"] if d["kind"] == "dv" else ["_file"]
-            for rel in parquet_files(ddir):
-                tbl = pq.read_table(os.path.join(ddir, rel), columns=cols)
-                fl = tbl.column(0).to_pylist()
-                if d["kind"] == "dv":
-                    for f, c in zip(fl, tbl.column(1).to_pylist()):
-                        del_rows[os.path.dirname(f)] += int(c)
-                else:
-                    for f in fl:
-                        del_rows[os.path.dirname(f)] += 1
+            if d["kind"] == "dv":
+                named, cards = self._delete_columns(d, ["_file", "card"])
+            else:
+                (named,) = self._delete_columns(d, ["_file"])
+                cards = [1] * len(named)
+            for f, c in zip(named, cards):
+                del_rows[os.path.dirname(f)] += int(c)
         rows = [
             (
                 part,
@@ -3349,14 +3363,16 @@ class SnapshotTable:
           range never appear);
         * **deletes** — rows live at ``from`` hit by a delete file committed
           in ``(from, to]`` (a semi-join of the ``from`` read against ONLY
-          the NEW delete files — every new delete's sequence exceeds every
-          ``from``-live row's, so the sequence rule reduces to membership).
+          the NEW delete files and vector — every new delete's sequence
+          exceeds every ``from``-live row's, so the sequence rule reduces
+          to membership).
           A row hit by several new delete files is emitted once (identity =
           its (file, position)).
 
         Cost: the ``to`` read (which an incremental consumer wants anyway)
-        + one semi-join per NEW delete file over the ``from`` read — O(new
-        changes + one scan), independent of how many older snapshots exist.
+        + one semi-join per KIND of new delete over the ``from`` read (see
+        :meth:`_apply_deletes`) — O(new changes + one scan), independent of
+        how many older snapshots or new delete files exist.
 
         A compaction, full rewrite, or rollback inside ``(from, to]`` makes
         file-level attribution meaningless, detected four ways (entry
@@ -3389,29 +3405,26 @@ class SnapshotTable:
                     break
         if boundary is None and eto.get("base_seq") != efrom.get("base_seq"):
             boundary = "full rewrite (new lineage) in range"
-        old = {
-            json.dumps(d, sort_keys=True)
+        from_stack, to_stack = delete_stack_keys(efrom), delete_stack_keys(eto)
+        lost = [
+            d
             for d in efrom.get("deletes", [])
             if d["kind"] != "dv"
-        }
-        new = {
-            json.dumps(d, sort_keys=True)
-            for d in eto.get("deletes", [])
-            if d["kind"] != "dv"
-        }
+            and json.dumps(d, sort_keys=True) not in to_stack
+        ]
         rewrote_deletes = any(
             e.get("delete_rewrite")
             for e in entries
             if from_version < e["version"] <= to_version
         )
-        if boundary is None and not old <= new and not rewrote_deletes:
+        if boundary is None and lost and not rewrote_deletes:
             # membership, not len(): a rollback can REPLACE delete files
             # without shrinking the count (ADVICE r9). A delete_rewrite
             # commit legitimately retires pos/eq files into a vector —
             # rollbacks remain caught by their markers and the manifest
-            # membership check, and the vector delta below stays exact
-            # across the rewrite (over-inclusive pairs are filtered by the
-            # semi-join against the from-side LIVE rows).
+            # membership check, and the vector below stays exact across the
+            # rewrite (its over-inclusive pairs are filtered by the semi-join
+            # against the from-side LIVE rows).
             boundary = "delete files removed in range (rollback)"
         # deletion vectors legitimately REPLACE each other — but only along
         # the supersede chain (each new vector is a committed superset of
@@ -3477,48 +3490,34 @@ class SnapshotTable:
             )
             return inserts.unionByName(deletes)
 
+        # every delete ``from``'s stack lacks, a grown vector WHOLE: the
+        # positions it inherited are already gone from the from-side live
+        # rows, and rows appended and deleted inside the range live in files
+        # the from read does not hold (the net contract)
         new_deletes = [
             d
             for d in eto.get("deletes", [])
-            if d["kind"] != "dv" and json.dumps(d, sort_keys=True) not in old
+            if json.dumps(d, sort_keys=True) not in from_stack
         ]
-        dv_grew = dv_to is not None and (
-            dv_from is None or dv_to["dir"] != dv_from["dir"]
-        )
         live_to = self._read_with_pos(spark, eto)
         inserts = (
             live_to.filter(F.col("_seq") > int(from_version))
             .drop(*_RESERVED_COLS)
             .withColumn("_change_type", F.lit("insert"))
         )
-        if not new_deletes and not dv_grew:
+        if not new_deletes:
             return inserts
-        live_from = self._read_with_pos(spark, efrom)
-        hit = None
-        for d in new_deletes:
-            dfile = spark.read.parquet(os.path.join(self.path, d["dir"]))
-            right = self._broadcast_if_small(dfile, d)
-            on = ["_file", "_pos"] if d["kind"] == "pos" else list(d["cols"])
-            h = live_from.join(right.select(*on).distinct(), on=on, how="semi")
-            hit = h if hit is None else hit.unionByName(h)
-        if dv_grew:
-            # the in-range vector delta: positions in the new vector but not
-            # the superseded one (a guaranteed superset along the chain, so
-            # anti-join IS set difference); rows both appended and vector-
-            # deleted inside the range reference files the `from` read does
-            # not hold, so the semi-join drops them — the net contract.
-            pairs = self._dv_pairs(spark, dv_to)
-            if dv_from is not None:
-                pairs = pairs.join(
-                    self._dv_pairs(spark, dv_from),
-                    on=["_file", "_pos"],
-                    how="anti",
-                )
-            right = self._broadcast_if_small(pairs, dv_to)
-            h = live_from.join(right, on=["_file", "_pos"], how="semi")
-            hit = h if hit is None else hit.unionByName(h)
+        # every new delete's sequence exceeds every from-live row's, so the
+        # sequence rule holds for all of them; joining under ``to``'s rule
+        # keeps the sides equal to the ``to`` read's, which Spark reuses
         deletes = (
-            hit.dropDuplicates(["_file", "_pos"])
+            self._apply_deletes(
+                spark,
+                self._read_with_pos(spark, efrom),
+                new_deletes,
+                bool(eto.get("has_appends")),
+                "semi",
+            )
             .drop(*_RESERVED_COLS)
             .withColumn("_change_type", F.lit("delete"))
         )

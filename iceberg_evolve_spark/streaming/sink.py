@@ -49,15 +49,15 @@ def mor_cdc_batch_writer(
 
     ``max_delete_files`` bounds read amplification: after each batch,
     ``SnapshotTable.maintain`` folds the merge-on-read stack once the
-    delete-file count reaches the threshold (one anti-join per delete file
-    on every read otherwise) — the amortized compaction loop a long-running
-    MOR stream needs. A crash after the commit but before the compaction
-    just defers the fold to the next batch. ``delete_mode="vector"`` makes
-    that fold the CHEAP one — equality-delete files collapse into one
-    deletion vector, O(deleted rows) written and zero data files touched —
-    reserving the data-file binpack for the manifest-count trigger; at
-    streaming cadence on a large table this is the difference between a
-    recurring metadata-sized job and a recurring file-rewrite job."""
+    delete-file count reaches the threshold (every read scans them all
+    otherwise) — the amortized compaction loop a long-running MOR stream
+    needs. A crash after the commit but before the compaction just defers
+    the fold to the next batch. ``delete_mode="vector"`` makes that fold the
+    CHEAP one — equality-delete files collapse into one deletion vector,
+    O(deleted rows) written and zero data files touched — reserving the
+    data-file binpack for the manifest-count trigger; at streaming cadence
+    on a large table this is the difference between a recurring
+    metadata-sized job and a recurring file-rewrite job."""
     from iceberg_evolve_spark.sources.snapshots import SnapshotTable
 
     def write(batch_df: DataFrame, batch_id: int) -> None:

@@ -1,7 +1,8 @@
 """Model-based property test of the manifest-list storage layer.
 
-A random sequence of table operations (write / append / delete_by_key /
-delete_where / rollback / scoped compaction / expire / tag) runs against BOTH
+A random sequence of table operations (write / append / delete_by_key on
+``id`` or on ``g`` / delete_where / an upsert row delta / rollback / scoped
+compaction / expire / tag / a changelog check) runs against BOTH
 the real ``SnapshotTable`` and a trivial in-memory model (dict of version →
 multiset of rows). After every step the real table's reads must equal the
 model — current AND time-traveled — and retention must never break a
@@ -28,8 +29,9 @@ from iceberg_evolve_spark.sources.snapshots import SnapshotTable
 _OPS = st.lists(
     st.tuples(
         st.sampled_from(
-            ["append", "delete_key", "delete_pred", "delete_vec",
-             "fold_deletes", "rollback", "compact", "expire", "tag"]
+            ["append", "delete_key", "delete_g", "upsert", "delete_pred",
+             "delete_vec", "fold_deletes", "rollback", "compact", "expire",
+             "tag", "changes"]
         ),
         st.integers(min_value=0, max_value=9),
     ),
@@ -85,6 +87,33 @@ def test_random_op_sequences_match_model(spark, ops):
                 for k in keys:
                     cur.pop(k, None)
                 v = nv
+            elif kind == "delete_g":
+                # an equality delete on a second key-column set
+                g = p % 5
+                nv = t.delete_by_key(
+                    spark.createDataFrame([(g,)], "g long"), ["g"]
+                )
+                cur = {i: gg for i, gg in cur.items() if gg != g}
+                v = nv
+            elif kind == "upsert":
+                # delete live keys and re-add them with a new g in ONE row
+                # delta: the re-added rows share the delete's sequence
+                # number and must survive it
+                if not cur:
+                    continue
+                ids = sorted(cur)[p % len(cur):][:2]
+                upd = {i: (cur[i] + 1) % 5 for i in ids}
+                nv = t.row_delta(
+                    add=spark.createDataFrame(
+                        list(upd.items()), "id long, g long"
+                    ),
+                    delete_keys=spark.createDataFrame(
+                        [(i,) for i in upd], "id long"
+                    ),
+                    cols=["id"],
+                )
+                cur.update(upd)
+                v = nv
             elif kind == "delete_pred":
                 cut = sorted(cur)[len(cur) // 2] if cur else 0
                 nv = t.delete_where(spark, F.col("id") < cut)
@@ -126,6 +155,26 @@ def test_random_op_sequences_match_model(spark, ops):
                 if name not in {f"tag{q}" for q in tagged}:
                     t.tag(name, v)
                     tagged.add(p)
+            elif kind == "changes":
+                # changelog of every pair of consecutive retained versions:
+                # the model's row diff where the later commit is
+                # file-attributable, a refusal at a rollback or compaction
+                entries = [e for e in t.versions() if e["version"] in model]
+                for a, b in zip(entries, entries[1:]):
+                    va, vb = a["version"], b["version"]
+                    if b.get("rollback_of") is not None or b.get("rewrite"):
+                        with pytest.raises(ValueError, match="boundary"):
+                            t.changes_between(spark, va, vb)
+                        continue
+                    got = [
+                        (r["_change_type"], r["id"], r["g"])
+                        for r in t.changes_between(spark, va, vb).collect()
+                    ]
+                    old, new = set(model[va].items()), set(model[vb].items())
+                    expect = [("insert", *r) for r in new - old] + [
+                        ("delete", *r) for r in old - new
+                    ]
+                    assert sorted(got) == sorted(expect), (kind, va, vb)
             model[v] = cur
 
             # invariant: every surviving modeled version reads exactly

@@ -4,6 +4,7 @@ protocol, version resolution, logical rollback, and orphan tolerance."""
 import json
 import os
 import re
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -789,3 +790,125 @@ def test_snapshot_entries_are_built_in_two_places():
 
     visit(ast.parse(owner.read_text()), [])
     assert not stray, f"snapshot entries built outside {builders}: {stray}"
+
+
+def test_delete_dirs_are_read_with_a_peeked_schema():
+    """In ``sources/snapshots.py`` only the data-scan functions read parquet
+    with schema inference (``.read...parquet(`` without ``.schema(``):
+    every delete-dir read goes through ``_read_delete``, which takes the
+    schema from a footer peek, so reading a delete file costs no Spark
+    job."""
+    import ast
+    import pathlib
+
+    import iceberg_evolve_spark
+
+    owner = (
+        pathlib.Path(iceberg_evolve_spark.__file__).parent
+        / "sources"
+        / "snapshots.py"
+    )
+
+    def receiver_names(node):
+        while isinstance(node, (ast.Call, ast.Attribute)):
+            if isinstance(node, ast.Call):
+                node = node.func
+            else:
+                yield node.attr
+                node = node.value
+
+    inferring = set()
+
+    def visit(node, funcs):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            funcs = funcs + [node.name]
+        if (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "parquet"
+        ):
+            names = set(receiver_names(node.func.value))
+            if "read" in names and "schema" not in names:
+                inferring.add(funcs[-1])
+        for child in ast.iter_child_nodes(node):
+            visit(child, funcs)
+
+    visit(ast.parse(owner.read_text()), [])
+    assert inferring == {
+        "_union_generations", "_base_scan", "_read_with_pos", "read_staged",
+    }
+
+
+class TestDeleteJoinsPerKind:
+    """Deletes are applied once per KIND: the Spark jobs of a read, a
+    changelog scan and a delete fold do not grow with the number of delete
+    files, and a delete file without its key columns fails loudly."""
+
+    @staticmethod
+    def _stack(spark, root, n_eq: int) -> SnapshotTable:
+        t = SnapshotTable(str(root / "t"))
+        t.write(spark.range(0, 200).withColumn("g", F.col("id") % 10), ts=1.0)
+        t.append(
+            spark.range(200, 260).withColumn("g", F.col("id") % 10), ts=2.0
+        )
+        for i in range(n_eq):
+            keys = spark.createDataFrame([(i * 50,)], "id long")
+            t.delete_by_key(keys, ["id"], ts=3.0 + i)
+        t.delete_where(spark, F.col("id") >= 250, vector=True, ts=9.0)
+        return t
+
+    @staticmethod
+    def _jobs(spark, fn) -> int:
+        import uuid
+
+        sc = spark.sparkContext
+        group = f"delete-budget-{uuid.uuid4().hex}"
+        sc.setLocalProperty("spark.jobGroup.id", group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    def test_job_count_does_not_grow_with_delete_files(
+        self, spark, tmp_path_factory
+    ):
+        counts, rows = [], []
+        for n_eq in (1, 5):
+            root = tmp_path_factory.mktemp(f"budget{n_eq}")
+            t = self._stack(spark, root, n_eq)
+            head = t.versions()[-1]["version"]
+            rows.append(t.read(spark).count())
+            counts.append(
+                (
+                    self._jobs(spark, lambda: t.read(spark).count()),
+                    self._jobs(
+                        spark,
+                        lambda: t.changes_between(spark, 2, head).count(),
+                    ),
+                    self._jobs(spark, lambda: t.rewrite_delete_files(spark)),
+                )
+            )
+            # the fold hides nothing the stack did not
+            assert t.read(spark).count() == rows[-1]
+        assert rows == [260 - 1 - 10, 260 - 5 - 10]
+        assert counts[0] == counts[1], counts
+
+    def test_eq_delete_missing_its_key_column_raises(
+        self, spark, tmp_path_factory
+    ):
+        t = SnapshotTable(str(tmp_path_factory.mktemp("eqcols") / "t"))
+        t.write(spark.range(0, 10), ts=1.0)
+        keys = spark.createDataFrame([(3,)], "id long")
+        t.delete_by_key(keys, ["id"], ts=2.0)
+        d = t.versions()[-1]["deletes"][0]
+        ddir = os.path.join(t.path, d["dir"])
+        shutil.rmtree(ddir)
+        spark.createDataFrame([(3,)], "other long").write.parquet(ddir)
+        with pytest.raises(ValueError, match=d["dir"]):
+            t.read(spark)
+        with pytest.raises(ValueError, match=d["dir"]):
+            t.rewrite_delete_files(spark)
+        with pytest.raises(ValueError, match=d["dir"]):
+            t.changes_between(spark, 1, 2)
